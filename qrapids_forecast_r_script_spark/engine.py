@@ -34,11 +34,15 @@ class Engine:
         """``metrics`` is a qr_metrics-shaped DataFrame (schemas.QR_METRICS).
 
         ``artifact_dir`` holds the model store + forecast cache (SURVEY
-        §1.5); None disables caching (every call fits fresh).
+        §1.5); None disables caching (every call fits fresh).  The store
+        is built once here, not per request.
         """
+        from .forecast.cache import ForecastStore
+
         self.spark = spark
         self.metrics = metrics
         self.artifact_dir = artifact_dir
+        self.store = ForecastStore(artifact_dir) if artifact_dir else None
         self.ping()
 
     def ping(self) -> bool:

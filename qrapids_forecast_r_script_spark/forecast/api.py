@@ -161,13 +161,12 @@ def forecast_one(engine, name: str, index: str, method: str,
                  frequency: int = 7, horizon: int = 14,
                  force_seasonality: bool = False) -> DataFrame:
     """Single-series path with the reference's wrapper orchestration
-    (§2A.6) when the engine has an artifact_dir, else a direct fit."""
+    (§2A.6) through the engine's store when it has an artifact_dir, else a
+    direct fit."""
     method_u = method.upper()
     if method_u == "ARIMA" and force_seasonality:
         # ifelse(forceSeasonality, 'ARIMA_FORCE_SEASONALITY', 'ARIMA') (R:105)
         method_u = "ARIMA_FORCE_SEASONALITY"
-    from .cache import ForecastStore
-    store = ForecastStore(engine.artifact_dir) if engine.artifact_dir else None
     from ..sources import search_element
     spark = engine.spark
 
@@ -178,10 +177,10 @@ def forecast_one(engine, name: str, index: str, method: str,
             raise ValueError(f"no data for series ({name!r}, {index!r})")
         return pdf
 
-    if store is None:
+    if engine.store is None:
         pdf = compute_series()
         rows = fit_and_forecast_pdf(pdf, method_u, frequency, horizon)
         return spark.createDataFrame(rows, schema=schemas.FORECAST)
-    rows = store.forecast_with_cache(name, index, method_u, frequency,
-                                     horizon, compute_series)
+    rows = engine.store.forecast_with_cache(name, index, method_u, frequency,
+                                            horizon, compute_series)
     return spark.createDataFrame(rows, schema=schemas.FORECAST)

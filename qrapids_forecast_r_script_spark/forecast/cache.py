@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 
 from ..functions.scrub import clean_key
-from .api import fit_and_forecast_pdf, forecast_rows
+from .api import forecast_rows
 from .dispatch import fit_method, forecast_fitted
 
 log = logging.getLogger(__name__)

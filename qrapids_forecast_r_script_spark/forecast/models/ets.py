@@ -62,51 +62,59 @@ def _run_filter(y, m, trend, seasonal, level0, trend0, s0, alpha, beta, gamma, p
     (one-step fitted values, residuals, final state).
 
     The recursion is inherently sequential, so this is the one numpy-free
-    inner loop in the model layer: operating on native Python floats
-    (IEEE doubles, identical arithmetic/order to the numpy-scalar form —
-    bit-equality verified when this was introduced) avoids the
-    numpy-scalar boxing overhead and halves per-fit cost on long series.
-    This loop is called once per Nelder-Mead evaluation per candidate
-    model, i.e. hundreds of times per fitted series.
+    inner loop in the model layer: it runs on native Python floats (IEEE
+    doubles, the same arithmetic in the same order as the numpy form), so
+    ``fit_ets`` passes ``y`` as a list converted once per fit.  It is
+    called once per Nelder-Mead evaluation per candidate model, i.e.
+    hundreds of times per fitted series, so the component tests sit
+    outside the time loop: one loop per seasonal kind (N, A, M), each
+    testing only the precomputed ``has_trend`` flag.  The residual of
+    step t is the innovation ``e`` the loop already computed.
     """
     n = len(y)
-    yl = [float(v) for v in y]
     lev = float(level0)
     b = float(trend0)
     s = [float(v) for v in s0]
     fitted = [0.0] * n
+    resid = [0.0] * n
     has_trend = trend != "N"
-    for t in range(n):
-        sea = s[t % m] if seasonal != "N" else (1.0 if seasonal == "M" else 0.0)
-        base = lev + phi * b if has_trend else lev
-        if seasonal == "M":
-            f = base * sea
-        elif seasonal == "A":
-            f = base + sea
-        else:
-            f = base
-        fitted[t] = f
-        e = yl[t] - f
-        # state update (additive error form)
-        if seasonal == "M":
-            denom = sea if abs(sea) > 1e-9 else 1e-9
-            newlev = base + alpha * e / denom
-        else:
-            newlev = base + alpha * e
-        if has_trend:
-            if seasonal == "M":
-                b = phi * b + beta * e / (sea if abs(sea) > 1e-9 else 1e-9)
-            else:
+    if seasonal == "N":
+        for t in range(n):
+            f = lev + phi * b if has_trend else lev
+            fitted[t] = f
+            e = y[t] - f
+            if has_trend:
                 b = phi * b + beta * e
-        if seasonal == "M":
-            base_nz = base if abs(base) > 1e-9 else 1e-9
-            s[t % m] = sea + gamma * e / base_nz
-        elif seasonal == "A":
-            s[t % m] = sea + gamma * e
-        lev = newlev
-    fitted = np.array(fitted)
-    resid = np.asarray(y, float) - fitted
-    return fitted, resid, (lev, b, np.array(s))
+            lev = f + alpha * e
+            resid[t] = e
+    elif seasonal == "A":
+        for t in range(n):
+            i = t % m
+            sea = s[i]
+            base = lev + phi * b if has_trend else lev
+            f = base + sea
+            fitted[t] = f
+            e = y[t] - f
+            if has_trend:
+                b = phi * b + beta * e
+            s[i] = sea + gamma * e
+            lev = base + alpha * e
+            resid[t] = e
+    else:  # "M"
+        for t in range(n):
+            i = t % m
+            sea = s[i]
+            base = lev + phi * b if has_trend else lev
+            f = base * sea
+            fitted[t] = f
+            e = y[t] - f
+            denom = sea if abs(sea) > 1e-9 else 1e-9
+            if has_trend:
+                b = phi * b + beta * e / denom
+            s[i] = sea + gamma * e / (base if abs(base) > 1e-9 else 1e-9)
+            lev = base + alpha * e / denom
+            resid[t] = e
+    return np.array(fitted), np.array(resid), (lev, b, np.array(s))
 
 
 def _forecast_from_state(state, m, trend, seasonal, phi, horizon, offset=0):
@@ -274,6 +282,7 @@ def fit_ets(y: np.ndarray, frequency: int, damped: bool | None = False) -> ETSMo
         if np.all(y > 0):
             seasonals.append("M")
 
+    yl = y.tolist()  # _run_filter's native-float input, built once per fit
     best = None
     for trend, seasonal in itertools.product(trends, seasonals):
         mm = m if seasonal != "N" else 1
@@ -292,7 +301,7 @@ def fit_ets(y: np.ndarray, frequency: int, damped: bool | None = False) -> ETSMo
                 return 1e12
             if trend == "Ad" and not (0.8 <= phi <= 0.98):
                 return 1e12
-            _, resid, _ = _run_filter(y, mm, trend, seasonal, level0,
+            _, resid, _ = _run_filter(yl, mm, trend, seasonal, level0,
                                       trend0 if trend != "N" else 0.0, s0,
                                       alpha, beta, gamma, phi)
             sse = float(np.sum(resid ** 2))
@@ -305,7 +314,7 @@ def fit_ets(y: np.ndarray, frequency: int, damped: bool | None = False) -> ETSMo
         alpha, beta, gamma, phi = _unpack(xbest, trend, seasonal)
         alpha = float(np.clip(alpha, 1e-4, 0.9999))
         fitted, resid, state = _run_filter(
-            y, mm, trend, seasonal, level0,
+            yl, mm, trend, seasonal, level0,
             trend0 if trend != "N" else 0.0, s0, alpha, beta, gamma, phi)
         sse = float(np.sum(resid ** 2))
         if sse <= 0 or not np.isfinite(sse):

@@ -78,23 +78,31 @@ def stl_decompose(y: np.ndarray, m: int, inner: int = 3):
     return trend, seasonal, remainder
 
 
-class STLModel:
-    """The decomposition IS the model (R:246) — picklable state."""
+def _fit_seasadj_ets(y: np.ndarray, seasonal: np.ndarray):
+    """stlf: non-seasonal ETS on the seasonally adjusted series."""
+    return fit_ets(y - seasonal, 1, damped=False)
 
-    def __init__(self, y, m, trend, seasonal, remainder):
+
+class STLModel:
+    """The decomposition IS the model (R:246) — picklable state, plus the
+    ETS fitted once on the seasonally adjusted series."""
+
+    def __init__(self, y, m, trend, seasonal, remainder, ets):
         self.y = np.asarray(y, float)
         self.m = m
         self.trend = trend
         self.seasonal = seasonal
         self.remainder = remainder
+        self.ets = ets
 
     @property
     def method(self) -> str:
         return "STL+ETS(A,N,N)" if self.m <= 1 else "STL+ETS"
 
     def forecast(self, horizon: int) -> dict:
-        seasadj = self.y - self.seasonal
-        ets = fit_ets(seasadj, 1, damped=False)  # stlf: non-seasonal ETS on adjusted
+        # a model pickled before the ETS fit moved into fit_stl has no
+        # ``ets``: refit it, which is deterministic, so bands are identical
+        ets = getattr(self, "ets", None) or _fit_seasadj_ets(self.y, self.seasonal)
         out = ets.forecast(horizon, seed_key=("stl",))
         n = len(self.y)
         if self.m > 1 and n >= self.m:
@@ -110,4 +118,5 @@ def fit_stl(y: np.ndarray, frequency: int) -> STLModel:
     y = np.asarray(y, float)
     m = max(1, int(frequency))
     trend, seasonal, remainder = stl_decompose(y, m)
-    return STLModel(y, m, trend, seasonal, remainder)
+    return STLModel(y, m, trend, seasonal, remainder,
+                    _fit_seasadj_ets(y, seasonal))

@@ -2626,10 +2626,9 @@ def forecast_holtwinters_events(spark: SparkSession, sf_dir: str
     # state (yarr), so the body is JOIN-FREE and every level folds to
     # a driver-evaluated LocalRelation — zero scheduled jobs per
     # observation (the old per-level join cost ~5 single-task jobs /
-    # level).  The shared seq chain is checkpointed ONCE; init and the
-    # per-series arrays both derive from it inside the single anchor
-    # job.  Per-step arithmetic is unchanged — bit-identical state.
-    seq = seq.localCheckpoint()
+    # level).  init and the per-series arrays both derive from the seq
+    # chain inside the single anchor job, with no eager cut before it.
+    # Per-step arithmetic is unchanged — bit-identical state.
     init.createOrReplaceTempView("qr_hw_init")
     obs.createOrReplaceTempView("qr_hw_obs")
     oy = "element_at(w.yarr, CAST(w.t + 1 AS INT))"

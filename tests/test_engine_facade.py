@@ -80,3 +80,32 @@ def test_engine_sql_front_door(engine):
     rows = engine.sql(
         "SELECT name, count(*) AS n FROM metrics GROUP BY 1").collect()
     assert {r["name"] for r in rows} >= {"purchase"}
+
+
+@pytest.mark.parametrize("method", ["NAIVE", "MEAN"])
+def test_null_value_gives_same_rows_with_and_without_cache(
+        spark, tmp_path_factory, method):
+    """qr_metrics.value is nullable and a null reaches the model as NaN.
+    The cached path (artifact_dir) and the direct fit must return the
+    same rows for it, NaN bands arriving as NULL on both."""
+    import datetime
+    import math
+
+    from qrapids_forecast_r_script_spark import schemas
+    from qrapids_forecast_r_script_spark.engine import Engine
+    day = datetime.date(2024, 1, 1)
+    rows = [("nully", "idx", day + datetime.timedelta(days=d),
+             None if d == 29 else float(d % 7)) for d in range(30)]
+    metrics = spark.createDataFrame(rows, schema=schemas.QR_METRICS)
+
+    def collect(engine):
+        out = engine.forecast("nully", "idx", method, frequency=7, horizon=5)
+        return sorted(tuple("nan" if isinstance(v, float) and math.isnan(v)
+                            else v for v in r) for r in out.collect())
+
+    direct = collect(Engine(spark, metrics))
+    cached_engine = Engine(spark, metrics,
+                           artifact_dir=str(tmp_path_factory.mktemp("nully")))
+    assert collect(cached_engine) == direct          # train
+    assert collect(cached_engine) == direct          # cache hit
+    assert [r[-5:] for r in direct] == [(None,) * 5] * 5

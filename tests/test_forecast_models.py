@@ -441,3 +441,23 @@ def test_prophet_calendar_aware_with_gaps():
     rmse = float(np.sqrt(np.mean((b["mean"] - truth) ** 2)))
     assert rmse < 6.0, rmse
     np.testing.assert_array_equal(b["lower1"], b["lower2"])  # quirk 2
+
+
+@pytest.mark.parametrize("frequency", [1, 7])
+def test_stl_model_pickled_without_ets_forecasts_identically(frequency):
+    """``fit_stl`` fits the seasonally adjusted ETS once and stores it on
+    the model.  A model pickled before that (no ``ets`` attribute) refits
+    it at forecast time and must give bit-identical bands, and a loaded
+    model with ``ets`` must too."""
+    import pickle
+
+    from qrapids_forecast_r_script_spark.forecast.models.stl import fit_stl
+    model = fit_stl(Y, frequency)
+    want = model.forecast(20)
+    old = pickle.loads(pickle.dumps(model))
+    del old.ets
+    old = pickle.loads(pickle.dumps(old))
+    assert not hasattr(old, "ets")
+    for got in (old.forecast(20), pickle.loads(pickle.dumps(model)).forecast(20)):
+        for k, v in want.items():
+            assert np.asarray(got[k]).tobytes() == np.asarray(v).tobytes(), k
