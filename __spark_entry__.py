@@ -28,44 +28,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship(spark, "/root/testdata/sf0.001")
 
 
-# Round-9 driver window (the driver checks the first ~50 merged entries).
-#
-# WINDOW POLICY (drain era, r5-r9): while a never-driver-checked oracled
-# backlog remains, the window is first-signal — the next backlog queries
-# in merged-registry order, pre-flighted with tools/strict_audit.py
-# before the round closes — plus RE-verify slots for previously-green
-# high-risk queries so old greens don't go stale as Spark/DuckDB
-# versions move; the displaced backlog names stay pinned at positions
-# 51+ so a wider driver cap still reaches them.  Net-new registration
-# stays FROZEN (delta ≤ +10/round) until the backlog is 0.
-#
-# THE WINDOW IS TOOL-DERIVED (since r8): this list is the verbatim
-# output of `python tools/rotation_window.py` at the r9 artifact state
-# (CORRECTNESS_r01..r08 committed, the 10 r9 registrations in the
-# registry) — the 27-query never-passed oracled backlog leads (the 10
-# r8-new registrations in merged order, ab_welch_ttest …
-# split_leakage_audit, then the 7-query r8 window spill,
-# dow_type_median_polish … events_trailing_distinct_types, then the 10
-# r9 registrations, ab_cliffs_delta … orders_exact_price_quantiles),
-# followed by 3 tier-1 re-verify slots (events_sliding_1h_30m — the
-# registry's single historic tier-1 failure, ever-failed priority —
-# then the two oldest tier-1 greens) and, because the backlog no
-# longer fills the cap, 20 TRANSITION slots backfilled with the
-# rotation-era ordering: standing-failures first (none), then
-# ever-failed drift markers (q12_shipmode_priority,
-# events_zscore_outliers — the two r1 hash-reds), then
-# oldest-green-first over the whole oracled registry (the r1-r2
-# classics).  This is the LAST drain-era round: a green r9 artifact
-# empties the backlog and r10's derivation flips to era="rotation"
-# (tier-1 drift-exposed surfaces ~10 slots + tier-2 oldest-green wrap;
-# the r9-close simulation in test_registry_window.py pins that
-# handoff).  test_registry_window.py replays THIS window against a
-# FROZEN artifact copy (r01-r08) so the driver's own r09 deposit cannot
-# redden the suite (the r7 What's-wrong #1 pattern).
-#
-# Failure semantics (ADVICE r7): only PASSING rows count as checked; a
-# failed-latest query re-enters the backlog at its very front, and
-# ever-failed queries outrank same-age greens in every re-verify pool.
+# The per-round correctness check hashes only the first ~50 entries of
+# queries(), so this list pins them.  It is the output of `python
+# tools/rotation_window.py` (first-signal backlog, then re-verify slots)
+# at the r9 artifact state; regenerate it with that tool, never by hand.
 FRONT_WINDOW = [
     # --- first-signal: the 10 r8-new registrations (strict-audited at
     # registration AND pre-certified by the r8 judge, 17/17)
@@ -223,28 +189,7 @@ def _registries():
         raise KeyError(f"FRONT_WINDOW names not registered: {missing}")
     front = ({n: all_q[n] for n in FRONT_WINDOW},
              {n: all_o[n] for n in FRONT_WINDOW if n in all_o})
-    # Positions 51+ hedge a wider-than-50 driver cap: the REST of the
-    # never-driver-PASSED oracled backlog is pinned immediately behind
-    # the window, in module order, so any extra checked slot lands on a
-    # first-signal query instead of re-verifying an already-green one.
-    # (Derived from the committed CORRECTNESS files, so it is stable
-    # within a round and self-updates when a round lands new rows.)
-    # The checked-set semantics are the rotation tool's, via its OWN
-    # driver_history (one implementation, ADVICE r7 medium #1 + r8
-    # review): a query counts as checked only when it has a PASSING
-    # row AND its latest row is not a failure — a standing regression
-    # re-enters the backlog here exactly as it does in the tool.
-    from tools.rotation_window import driver_history
-    here = os.path.dirname(os.path.abspath(__file__))
-    hist = driver_history(repo=here)
-    checked: set[str] = {n for n, h in hist.items()
-                         if h["last_pass"] > 0 and not h["failed_latest"]}
-    backlog_names = [n for n in all_q
-                     if n not in checked and n in all_o
-                     and n not in FRONT_WINDOW]
-    backlog = ({n: all_q[n] for n in backlog_names},
-               {n: all_o[n] for n in backlog_names})
-    return [front, backlog, *blocks]
+    return [front, *blocks]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -22,11 +22,14 @@ two named exclusion sets, both pinned below:
   pair set as the oracle baseline for LSH recall).  Their scale path
   ``minhash_lsh_pairs`` IS benched.
 
-Everything else runs: the ``HEADLINE`` list keeps the historical
-(r1-r8) ordering for cross-round per-query comparability, and every
-remaining registry query is appended in registry order.  Totals from
-r9 on are therefore not comparable to ≤r8 totals; per-query medians on
-shared queries (the BASELINE.md basis) remain the comparison unit.
+Everything else runs, in registry order (``__spark_entry__.queries()``:
+the pinned correctness window, then the module blocks).  Totals from r9 on
+are not comparable to <=r8 totals; per-query medians on shared queries
+(the BASELINE.md basis) remain the comparison unit.
+
+``python bench.py name [name ...]`` runs the same loop over only the
+named registry queries (an excluded one included) to re-time them; an
+unknown name exits non-zero.
 
 Each query runs to completion (count) with AQE on.
 
@@ -64,419 +67,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "events_daily_rolling",
-    "events_asof_last_error",
-    "user_sessions",
-    "dedup_exact",
-    "minhash_lsh_pairs",
-    "cosine_topk_bruteforce",
-    "text_stats",
-    "forecast_snaive_events",
-    "forecast_ets_events",
-    "forecast_ets_user_series",
-    # round-1 widening: TPC-H sweep + range join + ANN + dedup clustering
-    "q9_product_profit",
-    "q18_large_volume_customers",
-    "events_range_join_binned",
-    "ivf_topk",
-    "dedup_clusters",
-    # scale patterns: skew salting + bucketed co-located join
-    "salted_skew_join",
-    "bucketed_orders_join",
-    # round-2 rotation: true Structured Streaming micro-batches
-    "events_stream_tumbling_1h",
-    "events_session_windows",
-    # round-2 additions: PQ shortlist+rerank ANN, corpus bigram LM
-    "pq_topk",
-    "doc_bigram_logprob",
-    # round-2 additions: Bloom containment pre-filter, OPTIMIZE-style
-    # compaction (first rep pays the one-time /tmp artifact writes;
-    # the median is warm, like bucketed_orders_join)
-    "bloom_ngram_containment",
-    "compact_small_files",
-    # k-means-refined IVF — the production ANN form (2 Lloyd rounds)
-    "ivf_kmeans_topk",
-    # round-3 additions: SCD-2 history upsert, map-only PII redaction,
-    # MaxSim late-interaction retrieval, cluster-dedup keep-best
-    "orders_upsert_scd2",
-    "pii_scrub_docs",
-    "maxsim_multivector_topk",
-    "dedup_keep_best",
-    # round-3 additions (second batch): span-excision decontamination,
-    # streaming trending leaderboard, partition-pruned layout scan
-    "decontaminate_spans",
-    "events_stream_trending_topk",
-    "events_partitioned_pruning",
-    # round-3 additions (third batch): CMS heavy hitters, PageRank over
-    # the dup graph, weighted sampling, update-mode trending upsert
-    "cms_heavy_hitters",
-    "doc_graph_pagerank",
-    "weighted_sample_docs",
-    "events_stream_trending_upsert",
-    # round-3 additions (closing batch): incremental state merge,
-    # per-epoch shuffle, schema evolution, SCD-2 as-of, hashed-chunk
-    # retrieval, leakage-free split, NDCG retrieval eval
-    "incremental_agg_merge",
-    "epoch_shuffle_order",
-    "events_schema_evolution",
-    "orders_scd2_asof",
-    "chunk_hash_embed_topk",
-    "leakage_free_split",
-    "ann_eval_ndcg",
-    # round-3 additions (fourth batch): SQ8 + Matryoshka compressed
-    # retrieval, CCNet perplexity terciles, PSI drift monitor,
-    # cross-snapshot incremental dedup
-    "sq8_topk",
-    "matryoshka_topk",
-    "ccnet_perplexity_buckets",
-    "source_drift_psi",
-    "incremental_dedup_batch",
-    # BPE merge induction (tokenizer-training step, vocab-bounded)
-    "bpe_merge_rules",
-    # data-quality layer: FK audit, snapshot reconciliation diff,
-    # join-key skew profile
-    "fk_integrity_audit",
-    "snapshot_table_diff",
-    "join_key_skew_profile",
-    # conversation assembly + robust curation stats
-    "session_transcripts",
-    "winsorized_doclen_stats",
-    # multi-probe LSH, triplet mining, packing efficiency, diversity
-    "ann_multiprobe_topk",
-    "triplet_mining_embeddings",
-    "shard_packing_efficiency",
-    "corpus_diversity_stats",
-    # forecast eval: closed-form ensemble + rolling-origin CV
-    "ensemble_closed_forms",
-    "rolling_origin_backtest",
-    # lexical + hybrid retrieval (BM25, dense+lexical RRF fusion)
-    "bm25_topk",
-    "hybrid_rrf_topk",
-    # graph triangles + kNN embedding-quality eval
-    "doc_graph_triangles",
-    "knn_label_accuracy",
-    # behavior Markov matrix + seasonal-residual anomaly monitor
-    "event_transition_matrix",
-    "seasonal_residual_outliers",
-    # training-prep layer: NB quality classifier, pack-and-chunk,
-    # noisy-label centroid audit; UDTF chunker (Python-boundary cost
-    # visible next to the relational doc_chunks fast path)
-    "nb_quality_classifier",
-    "sequence_packing_examples",
-    "centroid_label_confusion",
-    "doc_chunks_udtf",
-    # cogrouped-Pandas as-of alignment, outer stream join (eviction
-    # semantics), numeric distribution profiler
-    "events_orders_asof_cogroup",
-    "events_stream_stream_left_join",
-    "events_numeric_profile",
-    # association mining + privacy audits
-    "basket_part_pairs_lift",
-    "k_anonymity_audit",
-    "dp_noisy_counts",
-    # spectral methods: power-iteration PCA, periodogram seasonality
-    "embedding_pca_projection",
-    "series_dominant_period",
-    # record linkage + survival analysis
-    "customer_entity_resolution",
-    "user_survival_curve",
-    # series monitors + data-contract gate
-    "series_changepoint_cusum",
-    "series_rolling_correlation",
-    "events_contract_violations",
-    # experimentation, attribution, positional IR
-    "ab_test_report",
-    "purchase_attribution_decay",
-    "proximity_search",
-    # label-propagation communities over the dup graph
-    "doc_graph_communities",
-    # OLS trend + split-conformal intervals
-    "series_trend_ols",
-    "conformal_snaive_intervals",
-    # round-4: distribution-free KS drift monitor; tokenizer encode
-    "events_ks_drift",
-    "bpe_encode_docs",
-    # round-4 continuation: paragraph dedup rewrite, novelty, Zipf,
-    # Benford, trigram lang classifier, RM3 feedback retrieval,
-    # link prediction, mixture water-filling
-    "paragraph_dedup_rewrite",
-    "doc_novelty_scores",
-    "corpus_zipf_fit",
-    "benford_first_digit_audit",
-    "char_trigram_lang_classifier",
-    "rm3_query_expansion",
-    "doc_graph_link_prediction",
-    "mixture_waterfill_budget",
-    "jl_projection_distortion",
-    "series_acf",
-    "media_dhash_neardup",
-    "curriculum_order",
-    # round-4 continuation: intermittent-demand Croston/SBA and
-    # hierarchical forecast reconciliation (bottom-up / top-down)
-    "forecast_croston_events",
-    "hierarchical_forecast_coherence",
-    # round-4 continuation: k-core peel over the dup graph, MMR
-    # diversified re-ranking over the retrieval shortlist
-    "doc_graph_kcore",
-    "mmr_diversified_topk",
-    # round-4 continuation: categorical-independence audit + group-wise
-    # imputation report
-    "chi_square_independence",
-    "missing_value_imputation",
-    # round-4 continuation: loss-driven mixture reweighting
-    "doremi_domain_weights",
-    # round-4 continuation: time-to-event cohort test, classifier
-    # calibration audit, conformal coverage backtest
-    "logrank_cohort_test",
-    "nb_calibration_curve",
-    "conformal_coverage_backtest",
-    # round-4 continuation: lead-lag transfer read, mutual-kNN filter,
-    # readability gate
-    "series_leadlag_xcorr",
-    "reciprocal_knn_pairs",
-    "readability_scores",
-    # round-4 continuation: IVM delta-join identity, l-diversity gate,
-    # proper interval scoring
-    "incremental_join_view",
-    "l_diversity_audit",
-    "interval_score_backtest",
-    # round-4 continuation: session leakage metric + VAD-style payload
-    # segmentation
-    "cart_abandonment_daily",
-    "media_energy_segments",
-    # round-4 continuation: timescale-resolved variance + robust
-    # outlier audit
-    "series_wavelet_energy",
-    "events_mad_outliers",
-    # round-4 continuation: embedding snapshot drift + per-source
-    # duplication profile
-    "embedding_drift_centroids",
-    "source_dedup_rates",
-    # round-4 continuation: MATCH_RECOGNIZE-style sequence patterns +
-    # tokenizer fairness profile
-    "session_pattern_match",
-    "tokenizer_fertility_by_lang",
-    # round-4 continuation: GDPR erasure cascade audit
-    "user_erasure_audit",
-    # round-4 continuation: QQ drift ladder, conversion latency, YoY
-    "source_length_qq",
-    "funnel_latency_percentiles",
-    "orders_yoy_growth",
-    # round-4 continuation: verbatim-SQL API proof + RFM grid
-    "sql_api_revenue_report",
-    "rfm_quartile_segments",
-    # round-4 continuation: the IVF tuning curve + index-freshness edge
-    "ivf_nprobe_sweep",
-    "doc_embedding_coverage",
-    # round-4 continuation: structure/traffic/vocab audits
-    "dedup_cluster_sizes",
-    "vocab_coverage_curve",
-    "event_interarrival_stats",
-    "embedding_norm_audit",
-    # round-4 continuation: exactly-oracled SES + ABC concentration
-    "forecast_ses_events",
-    "parts_abc_pareto",
-    # round-4 continuation (batch 2): robust trend, decomposition
-    # strength routing features, eigenvector centrality, t-closeness
-    # EMD audit, catalog column stats, revenue Gini
-    "series_theilsen_trend",
-    "series_decomposition_strength",
-    "doc_graph_eigencentrality",
-    "t_closeness_audit",
-    "column_stats_profile",
-    "customer_revenue_gini",
-    # round-4 continuation (batch 3): exactly-oracled Holt, cohort LTV
-    # matrix, per-source unigram KL drift
-    "forecast_holt_events",
-    "cohort_ltv_matrix",
-    "source_unigram_kl",
-    # round-4 continuation (batch 4): sketch set-level eval, FD census,
-    # supply-chain latency percentiles
-    "lsh_precision_recall",
-    "functional_dependency_audit",
-    "order_cycle_time_stats",
-    # round-4 continuation (batch 5): EWMA SPC chart, degree power law
-    "events_ewma_control_chart",
-    "doc_graph_degree_powerlaw",
-    # round-4 continuation (batch 6): CUPED variance reduction + SRM
-    "ab_test_cuped",
-    "ab_srm_check",
-    # round-4 continuation (batch 6): cluster-separation geometry audit
-    "embedding_db_index",
-    # round-4 continuation (batch 7): exact set-similarity scale path
-    "prefix_filter_join",
-    # round-4 continuation (batch 7): CDC op-log apply + GSP patterns
-    "orders_cdc_apply",
-    "session_sequence_pairs",
-    # round-4 continuation (batch 8): payment-dup audit, HHI, RAKE
-    "duplicate_payment_audit",
-    "brand_concentration_hhi",
-    "rake_keywords_top",
-    # round-4 continuation (batch 9): 1-bit quantized ANN, skyline,
-    # rank-sum + DiD experimentation, entropy quality, hashing-trick
-    # features, Hill tail index, recursive-CTE BFS + Holt-Winters
-    "binary_quant_topk",
-    "parts_skyline_frontier",
-    "ab_mannwhitney_test",
-    "ab_diff_in_diff",
-    "doc_entropy_scores",
-    "feature_hash_vectors",
-    "hill_tail_index",
-    "doc_graph_bfs_reachability",
-    "forecast_holtwinters_events",
-    # round-4 continuation (batch 10): deterministic bootstrap CI +
-    # Chao1/Good-Turing vocabulary saturation
-    "revenue_bootstrap_ci",
-    "chao1_vocab_estimate",
-    # round-4 continuation (batch 10): contrastive-space health pair +
-    # behavior-chain fixed point
-    "embedding_alignment_uniformity",
-    "event_markov_stationary",
-    # round-4 continuation (batch 11): offline bandit replay via
-    # engine-native recursion
-    "ucb1_replay_policy",
-    # round-4 continuation (batch 12): partition-quality gate +
-    # multiset-similarity verification stage
-    "doc_graph_modularity",
-    "weighted_jaccard_pairs",
-    # round-4 continuation (batch 13): multi-source recursive BFS
-    # closeness/harmonic centrality sample
-    "doc_graph_closeness_sampled",
-    # round-4 continuation (batch 14): price/volume waterfall +
-    # trailing-window exact distinct
-    "revenue_price_volume_bridge",
-    "events_trailing_distinct_types",
-    # round-4 continuation (batch 15): peeking-corrected sequential
-    # monitoring
-    "ab_sequential_looks",
-    # round-4 continuation (batch 16): classifier eval (exact AUC,
-    # Brier decomposition), feature prep (LOO target encoding,
-    # negative-sampling table), weighted recursive shortest paths
-    "roc_auc_eval",
-    "brier_decomposition",
-    "target_encoding_loo",
-    "negative_sampling_table",
-    "doc_graph_shortest_paths",
-    # round-4 continuation (batch 17): declarative PAV recalibration,
-    # gains/lift table, IPS/SNIPS off-policy eval, quantile
-    # normalization
-    "isotonic_calibration_map",
-    "cumulative_gain_curve",
-    "ips_policy_value",
-    "quantile_normalization_map",
-    # round-4 continuation (batch 18): online drift detection, survey
-    # sampling, aggregation-bias audit, clamped-ledger recursion
-    "series_page_hinkley",
-    "neyman_allocation_sample",
-    "simpson_slope_audit",
-    "parts_running_balance",
-    # round-4 continuation (batch 19): rank correlation, FDR-corrected
-    # sliced experiment readout, robust two-way decomposition
-    "series_kendall_tau",
-    "ab_bh_fdr_nations",
-    "dow_type_median_polish",
-    "dedup_capture_recapture",
-    "markov_next_event_accuracy",
-    "item_item_cf_topk",
-    "ql_dirichlet_topk",
-    "woe_information_value",
-    "shapley_attribution",
-    "kneser_ney_bigram_logprob",
-    "nelson_aalen_hazard",
-    "mh_pooled_odds_ratio",
-    "james_stein_nation_means",
-    "ipf_raking_weights",
-    "greedy_coverage_selection",
-    "als_rank2_factors",
-    "series_analog_search",
-    "source_length_emd",
-    "bradley_terry_strengths",
-    "hmm_forward_filter",
-    "doc_length_gmm",
-    "textrank_keywords",
-    "consistent_hash_rebalance",
-    "meta_analysis_nations",
-    "hmm_smoothed_posterior",
-    "nb_learning_curve",
-    "ab_quantile_treatment_effects",
-    "ab_power_mde_table",
-    "hmm_baum_welch_step",
-    "platt_scaling_fit",
-    "series_dickey_fuller",
-    "mahalanobis_outliers",
-    "weak_label_model",
-    "event_time_circular_stats",
-    "hmm_viterbi_path",
-    "dbscan_density_classes",
-    "hedge_forecast_combination",
-    "newsvendor_stock_levels",
-    "price_elasticity_ols",
-    "series_spearman_matrix",
-    "evt_gpd_tail_fit",
-    "littles_law_audit",
-    "cf_holdout_lift",
-    "blocking_quality_metrics",
-    "anova_nation_values",
-    "doc_graph_assortativity",
-    "term_burstiness_topk",
-    "eb_urgent_share_shrinkage",
-    "interarrival_weibull_fit",
-    "erlang_capacity_table",
-    "label_sliced_wasserstein",
-    "basket_part_triples_apriori",
-    "huber_location_nations",
-    "negbin_dispersion_fit",
-    "evt_gumbel_block_maxima",
-    "series_hurst_rs",
-    "series_cronbach_alpha",
-    "nb_average_precision",
-    "classifier_agreement_kappa",
-    "classifier_mcnemar_test",
-    "friedman_method_ranks",
-    "levene_variance_audit",
-    "competing_risks_cif",
-    "retrieval_rbo_bm25_vs_ql",
-    "decision_stump_doclen",
-    # round-5 capability un-gates: the v2 stateful streaming operator
-    # (transformWithStateInPandas + RocksDB state store, ~4 s readStream
-    # fixed cost) and the header-level image decode round-trip
-    "events_tws_running_totals",
-    "media_image_header_meta",
-    # round 7: forecast-eval completions (MASE / DM / Ljung-Box / PACF /
-    # Granger), phonetic blocking, MRR retrieval eval
-    "forecast_mase_scores",
-    "forecast_dm_test",
-    "series_ljung_box",
-    "series_pacf",
-    "granger_lag1_purchases",
-    "phonetic_token_groups",
-    "retrieval_mrr_eval",
-    "kruskal_wallis_values",
-    # round 7 cont.: KPSS stationarity + the auto.arima differencing
-    # decision (ndiffs/nsdiffs)
-    "series_kpss_test",
-    "series_ndiffs_nsdiffs",
-    # round 8: residual diagnostics (JB normality, runs test), the
-    # nonparametric change/shift pair (Pettitt, WoW Wilcoxon), partial
-    # correlations, Theil's U2, Guerrero's Box-Cox lambda (the
-    # BAGGEDETS R:205 decision replay), Welch's t, Hellinger drift,
-    # and the temporal split-leakage audit
-    "jarque_bera_normality",
-    "residual_runs_test",
-    "wilcoxon_signed_rank_wow",
-    "pettitt_change_test",
-    "partial_corr_controls",
-    "theil_u2_backtest",
-    "boxcox_guerrero_lambda",
-    "ab_welch_ttest",
-    "hellinger_source_drift",
-    "split_leakage_audit",
-]
-
 # the two exclusion sets the coverage rule names (module docstring);
 # every other registry query is benched
 EXCLUDED_ITERATIVE_FITS = {
@@ -491,17 +81,10 @@ EXCLUDED_PAIR_SCANS = {"ngram_jaccard_pairs", "ngram_containment_pairs"}
 
 
 def run_list(qs: dict) -> list[str]:
-    """The benched set: HEADLINE in its historical order (cross-round
-    per-query comparability), then every other registry query in
-    registry order, minus the two pinned exclusion sets."""
+    """The benched set: every registry query in registry order, minus
+    the two pinned exclusion sets."""
     excluded = EXCLUDED_ITERATIVE_FITS | EXCLUDED_PAIR_SCANS
-    # HEADLINE precedes the exclusion filter, so a name in both would
-    # silently defeat its pin — fail loud instead
-    clash = set(HEADLINE) & excluded
-    if clash:
-        raise ValueError(f"HEADLINE and exclusion sets overlap: {clash}")
-    skip = set(HEADLINE) | excluded
-    return list(HEADLINE) + [n for n in qs if n not in skip]
+    return [n for n in qs if n not in excluded]
 
 
 def main() -> None:
@@ -511,16 +94,20 @@ def main() -> None:
     from qrapids_forecast_r_script_spark.lineage import release_stale
     from qrapids_forecast_r_script_spark.session import get_spark
 
+    qs = entrymod.queries()
+    names = sys.argv[1:] or run_list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"bench: unknown queries: {unknown}")
     spark = get_spark("qrapids-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
     # warm the JVM + parquet footers with a trivial action
     qs["part_filter_projection"](spark, sf_dir).count()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings: dict[str, float] = {}
     skipped: dict[str, str] = {}
-    for name in run_list(qs):
+    for name in names:
         fn = qs[name]
         samples = []
         try:

@@ -12,10 +12,10 @@ subsequent query's planning, and — the r9 honesty flag — bench reps
 and measure a cache read instead of computing from parquet.
 
 :func:`release_stale` is called at SEQUENTIAL HARNESS BOUNDARIES ONLY
-— ``bench.py`` between timed reps, ``tools/qtime.py`` /
-``tools/bench_instrumented.py`` likewise — points where, by the
-harness's own construct -> action -> construct -> action structure,
-every materialized intermediate from previous invocations is dead.  It
+— ``bench.py`` between timed reps, ``perfbench`` between queries —
+points where, by the harness's own construct -> action -> construct
+-> action structure, every materialized intermediate from previous
+invocations is dead.  It
 must NOT be wired into the product surface (``__spark_entry__.
 queries()``): query construction/execution is legitimately concurrent
 (guide §2.6 — independent jobs submitted from a thread pool; the

@@ -426,15 +426,18 @@ def _label_prop(edges: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
     the per-component minimum under ANY propagation schedule — and
     "the last hop changed nothing" remains an exact convergence test
     (a no-op hop means the fixpoint is reached, whatever earlier hops
-    in the same round did)."""
+    in the same round did).  The last round is clamped so exactly
+    ``max_iter`` hops run in total."""
     labels = (edges.select(F.col("src").alias("doc_id")).distinct()
               .withColumn("cluster_id", F.col("doc_id"))
               .localCheckpoint(eager=False))
-    changed = 0
-    for _ in range(0, max_iter, _LP_HOPS):
+    done = 0
+    while done < max_iter:
+        hops = min(_LP_HOPS, max_iter - done)
+        done += hops
         cur = labels
         # hops 1..k-1: fully merged label frames, no materialization
-        for _hop in range(_LP_HOPS - 1):
+        for _hop in range(hops - 1):
             nb = (edges.join(cur, edges.dst == cur.doc_id)
                   .groupBy("src").agg(F.min("cluster_id").alias("nb_min")))
             cur = (cur.join(nb, cur.doc_id == nb.src, "left")
@@ -459,7 +462,7 @@ def _label_prop(edges: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
              .alias("cluster_id"))
         if changed == 0:
             return labels, True
-    return labels, changed == 0
+    return labels, False
 
 
 def _cc_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:

@@ -67,32 +67,19 @@ def test_skipped_collapses_to_count_and_full_map_never_leaks():
 
 def test_every_registry_query_is_benched_or_pinned_excluded():
     """Coverage rule (r9, BASELINE.md "Bench coverage rule"): the bench
-    runs the FULL registry minus the two pinned exclusion sets — no
-    silently unbenched query may exist, and the exclusion sets must
-    name real registry queries (a rename can't quietly widen them)."""
+    runs the FULL registry, in registry order, minus the two pinned
+    exclusion sets — no silently unbenched query may exist, and the
+    exclusion sets must name real registry queries (a rename can't
+    quietly widen them)."""
     import __spark_entry__ as E
-    from bench import (
-        EXCLUDED_ITERATIVE_FITS,
-        EXCLUDED_PAIR_SCANS,
-        HEADLINE,
-        run_list,
-    )
+    from bench import EXCLUDED_ITERATIVE_FITS, EXCLUDED_PAIR_SCANS, run_list
 
     qs = E.queries()
+    excluded = EXCLUDED_ITERATIVE_FITS | EXCLUDED_PAIR_SCANS
     benched = run_list(qs)
-    assert len(benched) == len(set(benched))          # no double-timing
-    missing = [n for n in HEADLINE if n not in qs]
-    assert not missing, missing
-    covered = set(benched) | EXCLUDED_ITERATIVE_FITS | EXCLUDED_PAIR_SCANS
-    unbenched = [n for n in qs if n not in covered]
-    assert not unbenched, f"silently unbenched: {unbenched}"
-    stale = (EXCLUDED_ITERATIVE_FITS | EXCLUDED_PAIR_SCANS) - set(qs)
+    assert benched == [n for n in qs if n not in excluded]
+    stale = excluded - set(qs)
     assert not stale, f"exclusion names not in registry: {stale}"
-    # HEADLINE has precedence over the exclusion filter in run_list, so
-    # an overlap would silently defeat a pin — must stay disjoint (and
-    # run_list itself raises on it)
-    clash = set(HEADLINE) & (EXCLUDED_ITERATIVE_FITS | EXCLUDED_PAIR_SCANS)
-    assert not clash, f"HEADLINE defeats an exclusion pin: {clash}"
     # the exclusions keep their benched representatives
     assert "forecast_ets_events" in benched
     assert "forecast_ets_user_series" in benched

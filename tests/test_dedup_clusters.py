@@ -64,3 +64,25 @@ def test_cluster_edges_fast_path_unchanged(spark):
               for r in cluster_edges(docs, pairs, max_iter=20).collect()}
     assert labels == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 6,
                       7: 7, 8: 7, 9: 9}
+
+
+def test_label_prop_runs_exactly_max_iter_hops(spark):
+    """On a 7-node path (min id at one end) label propagation moves the
+    minimum one node per hop, so the labels show how many hops ran: the
+    last fused round is clamped so exactly ``max_iter`` hops run.  Six
+    hops reach the fixpoint; the seventh is the no-op hop that detects
+    it."""
+    from qrapids_forecast_r_script_spark.operators.dedup import _label_prop
+    pairs = _mk_pairs(spark, [(i, i + 1) for i in range(6)])
+    edges = (pairs.selectExpr("doc_a as src", "doc_b as dst")
+             .union(pairs.selectExpr("doc_b as src", "doc_a as dst")))
+
+    def run(max_iter):
+        labels, converged = _label_prop(edges, max_iter)
+        got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
+        return [got[i] for i in range(7)], converged
+
+    assert run(4) == ([0, 0, 0, 0, 0, 1, 2], False)
+    assert run(5) == ([0, 0, 0, 0, 0, 0, 1], False)
+    assert run(6) == ([0] * 7, False)
+    assert run(7) == ([0] * 7, True)

@@ -38,6 +38,8 @@ import json
 import os
 import re
 import shutil
+import subprocess
+import sys
 
 import pytest
 
@@ -105,6 +107,35 @@ def test_front_window_matches_declared_allocation():
     # shift a slot, ADVICE r2)
     qs = list(E.queries())
     assert qs[:len(E.FRONT_WINDOW)] == E.FRONT_WINDOW
+
+
+_KEYS_SCRIPT = """
+import json, sys
+import __spark_entry__ as E
+print(json.dumps({"q": list(E.queries()), "o": list(E.oracle_sql()),
+                  "rotation_loaded": "tools.rotation_window" in sys.modules}))
+"""
+
+
+def _registry_keys(root: str) -> dict:
+    out = subprocess.run([sys.executable, "-c", _KEYS_SCRIPT], cwd=root,
+                         capture_output=True, text=True, check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_queries_are_a_pure_function_of_the_code(tmp_path):
+    """queries() and oracle_sql() read no CORRECTNESS artifact: they never
+    load the rotation tool, and a checkout copy without any
+    CORRECTNESS_r*.json builds the same keys in the same order."""
+    live = _registry_keys(ROOT)
+    assert not live["rotation_loaded"]
+    shutil.copy(os.path.join(ROOT, "__spark_entry__.py"), tmp_path)
+    shutil.copytree(os.path.join(ROOT, "qrapids_forecast_r_script_spark"),
+                    tmp_path / "qrapids_forecast_r_script_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    bare = _registry_keys(str(tmp_path))
+    assert bare["q"] == live["q"] == list(E.queries())
+    assert bare["o"] == live["o"] == list(E.oracle_sql())
 
 
 def test_window_is_exactly_fifty():
@@ -181,7 +212,7 @@ def test_window_follows_registry_order_of_the_backlog():
     registrations; the r9 names were registered BEFORE the window was
     frozen, the r8 precedent, so they take first-signal slots and a
     green r9 empties the backlog completely).  The derivation is
-    recomputed from the module blocks WITHOUT the pin blocks — a
+    recomputed from the module blocks WITHOUT the pin block — a
     registry insertion that would silently skip a backlog query changes
     the recomputed head and fails this test."""
     # round-9 additions (the full <= +10 budget, each strict-audited on
@@ -200,10 +231,10 @@ def test_window_follows_registry_order_of_the_backlog():
     assert len(r9_additions) <= 10, "freeze budget exceeded"
     checked = _checked(max_round=CURRENT_ROUND)
     oracles = E.oracle_sql()
-    # module order = the merged blocks, BOTH pin blocks excluded (the
-    # front window at index 0 and the backlog hedge at index 1).
+    # module order = the merged blocks, the front-window pin block (index
+    # 0) excluded.
     module_order: dict[str, object] = {}
-    for qs_block, _ in E._registries()[2:]:
+    for qs_block, _ in E._registries()[1:]:
         module_order.update(qs_block)
     backlog = [n for n in module_order
                if n not in checked and n in oracles]
@@ -219,30 +250,6 @@ def test_window_follows_registry_order_of_the_backlog():
         "first-signal slots must be exactly the never-passed oracled "
         "backlog, cohort-ordered (carried r8 backlog then r9 "
         "additions, module order within each cohort)")
-
-
-def test_backlog_hedge_block_is_first_signal_in_order():
-    """Positions 51+ (the backlog hedge pinned behind the window) must
-    be exactly the not-currently-green oracled queries NOT in the
-    window, in module order — so a wider-than-50 driver cap only ever
-    lands on first-signal (or standing-regression) queries.  Uses the
-    SAME live derivation as the registry (driver_history: passed at
-    least once AND latest row not a failure) so the two can never
-    diverge when the current round's file lands — including a file
-    recording a regression."""
-    hist = driver_history(repo=ROOT)
-    checked = {n for n, h in hist.items()
-               if h["last_pass"] > 0 and not h["failed_latest"]}
-    oracles = E.oracle_sql()
-    qs = list(E.queries())
-    module_order: dict[str, object] = {}
-    for qs_block, _ in E._registries()[2:]:
-        module_order.update(qs_block)
-    expected = [n for n in module_order
-                if n not in checked and n in oracles
-                and n not in E.FRONT_WINDOW]
-    got = qs[WINDOW:WINDOW + len(expected)]
-    assert got == expected
 
 
 # ---------------------------------------------------------------------------
@@ -307,25 +314,15 @@ def test_rotation_tool_green_then_failed_reenters_backlog_front(tmp_path):
     assert res["window"][0] == regressed
 
 
-def test_registry_hedge_includes_standing_regressions(tmp_path,
-                                                      monkeypatch):
-    """The _registries() hedge shares the tool's checked-set: a
-    malformed artifact is skipped, and (by the shared driver_history)
-    a pass-then-fail query is NOT checked.  Smoke the malformed-shape
-    guard directly: a bare-list artifact must not break queries()."""
-    import importlib
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def test_registry_hedge_includes_standing_regressions(tmp_path):
+    """``rotation_window.driver_history`` skips a malformed artifact: a
+    bare-list CORRECTNESS file must not break the derivation."""
     for p in _artifact_paths(max_round=None):
         shutil.copy(p, tmp_path)
     (tmp_path / "CORRECTNESS_r97.json").write_text(
         json.dumps(["a", "bare", "list"]))
-    from tools.rotation_window import driver_history as dh
-    hist = dh(repo=str(tmp_path))
+    hist = driver_history(repo=str(tmp_path))
     assert "a" not in hist  # list artifact skipped, no crash
-    # and the registry's own glob tolerates it too (same guard)
-    monkeypatch.chdir(root)
-    assert len(E.queries()) >= 400  # registry still builds
 
 
 def test_rotation_tool_failed_then_green_gets_reverify_priority(tmp_path):

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: measured physical-plan shape for every bench
-headline query at a given scale dir (default sf0.01).
+"""Generate PLANS.md: measured physical-plan shape for every benched
+query (``bench.run_list``) plus three plan-only extras, at a given
+scale dir (default sf0.01).
 
 Each row is produced by ``plans.plan_report`` AFTER executing the query
 (collect), so AQE's final plan is what gets recorded — shuffle count,
@@ -22,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
-    from bench import HEADLINE
+    from bench import run_list
     from qrapids_forecast_r_script_spark.plans import plan_report
     from qrapids_forecast_r_script_spark.session import get_spark
 
@@ -30,11 +31,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    # plan-only extras: correctness-window queries deliberately NOT in
-    # the timed headline set (the all-method backtest re-fits all 10
-    # models — 3 bench reps of that is pure fit time, and the fit cost
-    # is series-count-bound, not SF-bound), but whose plan shape still
-    # belongs in this artifact.
+    # plan-only extras, all in bench's EXCLUDED_ITERATIVE_FITS (the
+    # all-method backtest re-fits all 10 models — 3 bench reps of that
+    # is pure fit time, and the fit cost is series-count-bound, not
+    # SF-bound), but whose plan shape still belongs in this artifact.
     extra = ["forecast_method_backtest",
              # r6: the hybrid fan-out's plan shape (unit explosion →
              # one mapInPandas → JVM argmin/weights) is the point of
@@ -44,14 +44,14 @@ def main() -> None:
              "forecast_baggedets_fanout_events"]
 
     rows = []
-    for name in HEADLINE + extra:
+    for name in run_list(qs) + extra:
         df = qs[name](spark, sf_dir)
         df.collect()          # finalize AQE so the recorded plan is the real one
         rep = plan_report(df)
         rows.append((name, rep))
 
     out = [
-        "# PLANS — measured physical-plan shapes (bench headline queries)",
+        "# PLANS — measured physical-plan shapes (benched queries)",
         "",
         f"Generated by `tools/gen_plans_report.py` at `{sf_dir}`, after",
         "execution (AQE-final plans).  Columns: shuffle exchanges, broadcast",

@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Derive the next driver FRONT_WINDOW from the committed artifacts.
 
-This is the self-advancing cursor the window policy in
-``__spark_entry__.py`` promises for the rotation era (r9+), usable from
-r8 onward:
+Its output is the committed ``__spark_entry__.FRONT_WINDOW``; the
+registry itself never reads the artifacts.  Usable from r8 onward:
 
 * **Drain era** (never-driver-checked oracled backlog non-empty): the
   window is first-signal — the next ``cap - n_reverify`` backlog names
