@@ -18,15 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Same 10 strings, same order as stringMethods (R:6-7).
-STRING_METHODS = [
-    "ARIMA", "ARIMA_FORCE_SEASONALITY", "THETA", "ETS", "ETSDAMPED",
-    "BAGGEDETS", "STL", "NN", "HYBRID", "PROPHET",
-]
-
-# forecastsCacheLength <- 14 (R:10): horizon the cache is primed at.
-FORECASTS_CACHE_LENGTH = 14
-
 
 class Engine:
     def __init__(self, spark: SparkSession, metrics: DataFrame,
@@ -52,7 +43,8 @@ class Engine:
 
     @staticmethod
     def available_methods() -> list[str]:
-        return list(STRING_METHODS)
+        from .forecast.dispatch import METHODS
+        return list(METHODS)
 
     def search_element(self, name: str, index: str) -> DataFrame:
         from .sources import search_element
@@ -74,10 +66,10 @@ class Engine:
                             force_seasonality)
 
     def forecast_all(self, method: str, frequency: int = 7,
-                     horizon: int = 14, fanout: str = "auto") -> DataFrame:
+                     horizon: int = 14) -> DataFrame:
         """Batch mode: every (name, index) series in one grouped-UDF job.
         HYBRID/BAGGEDETS auto-dispatch to their straggler fan-outs above
         ``forecast.api.FANOUT_POINT_THRESHOLD`` points (SCALE.md)."""
         from .forecast.api import forecast_batch
         return forecast_batch(self.spark, self.metrics, method, frequency,
-                              horizon, fanout=fanout)
+                              horizon)

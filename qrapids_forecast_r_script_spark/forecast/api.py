@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import schemas
+from ..sources.registry import MAX_SERIES_LENGTH
 from .dispatch import fit_method, forecast_fitted
 
 _FORECAST_KEYS = ["lower1", "lower2", "mean", "upper1", "upper2"]
@@ -45,7 +46,7 @@ def prepare_series(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     default unstable sort would make the y ordering (and the 10k-cap
     survivor set, R:28) differ run to run, breaking output hash
     stability — then the cap.  Returns (y, ds_days)."""
-    if len(pdf) > 10_000:
+    if len(pdf) > MAX_SERIES_LENGTH:
         # reference quirk 7 (R:28): the cap is kept for parity, but never
         # silently — the engine's no-silent-caps rule
         import logging
@@ -54,7 +55,7 @@ def prepare_series(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             "10k cap (R:28)", pdf["name"].iloc[0], pdf["index"].iloc[0],
             len(pdf))
     pdf = (pdf.sort_values(["evaluationDate", "value"], kind="mergesort")
-           .head(10_000))
+           .head(MAX_SERIES_LENGTH))
     y = pdf["value"].to_numpy(dtype=float)
     ds_days = (pd.to_datetime(pdf["evaluationDate"]).values
                .astype("datetime64[D]").astype(int))
@@ -95,8 +96,7 @@ FANOUT_POINT_THRESHOLD = 5_000
 
 
 def forecast_batch(spark: SparkSession, metrics: DataFrame, method: str,
-                   frequency: int = 7, horizon: int = 14,
-                   fanout: str = "auto") -> DataFrame:
+                   frequency: int = 7, horizon: int = 14) -> DataFrame:
     """Every (name, index) series in one job.
 
     Scale notes: one shuffle (hash partition by series key); each task
@@ -104,32 +104,21 @@ def forecast_batch(spark: SparkSession, metrics: DataFrame, method: str,
     reference's own cap, R:28); skewed numbers of series per executor are
     handled by AQE partition coalescing.
 
-    ``fanout`` controls the HYBRID/BAGGEDETS straggler dispatch
-    (r6 verdict item 4 — the 100×-scale path is the DEFAULT path):
-
-    - ``"auto"``: one cheap JVM count-per-series aggregation decides —
-      if the longest series (post the reference's 10k cap, R:28) has
-      ≥ ``FANOUT_POINT_THRESHOLD`` points, route through
-      ``hybrid_fanout_batch`` / ``bagged_fanout_batch`` (exact-parity
-      drop-ins, tests/test_*_fanout.py); else the single-task-per-
-      series fit below, whose whole fit at small n is cheaper than the
-      fan-out's extra shuffles.
-    - ``"always"`` / ``"never"``: force one path (tests, debugging).
-
-    Methods without a fan-out (everything but HYBRID/BAGGEDETS) ignore
-    the flag: their single-series fits are not stage stragglers.
+    HYBRID/BAGGEDETS straggler dispatch (the 100×-scale path is the
+    default path): one cheap JVM count-per-series aggregation decides —
+    if the longest series has ≥ ``FANOUT_POINT_THRESHOLD`` points, route
+    through ``hybrid_fanout_batch`` / ``bagged_fanout_batch`` (exact-
+    parity drop-ins, tests/test_*_fanout.py); else the single-task-per-
+    series fit below, whose whole fit at small n is cheaper than the
+    fan-out's extra shuffles.  Other methods have no fan-out: their
+    single-series fits are not stage stragglers.
     """
     method_u = method.upper()
     freq, hor = int(frequency), int(horizon)
-    if fanout not in ("auto", "always", "never"):
-        raise ValueError(f"fanout must be auto|always|never, got {fanout!r}")
-    if method_u in ("HYBRID", "BAGGEDETS") and fanout != "never":
-        use_fanout = fanout == "always"
-        if fanout == "auto":
-            longest = (metrics.groupBy("name", "index").count()
-                       .agg(F.max("count")).first()[0])
-            use_fanout = (longest or 0) >= FANOUT_POINT_THRESHOLD
-        if use_fanout:
+    if method_u in ("HYBRID", "BAGGEDETS"):
+        longest = (metrics.groupBy("name", "index").count()
+                   .agg(F.max("count")).first()[0])
+        if (longest or 0) >= FANOUT_POINT_THRESHOLD:
             if method_u == "HYBRID":
                 from .hybrid_fanout import hybrid_fanout_batch
                 return hybrid_fanout_batch(spark, metrics, freq, hor)

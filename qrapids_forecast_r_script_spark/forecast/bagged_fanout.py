@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from .hybrid_fanout import _assemble_series
+from .models.bagged import NUM_REPLICATES
 from .models.common import DEGENERATE_ERRORS
 
 _REP_RESULT = T.StructType([
@@ -48,7 +49,7 @@ _REP_RESULT = T.StructType([
 ])
 
 
-def _run_members(frequency: int, horizon: int, num: int):
+def _run_members(frequency: int, horizon: int):
     """One row in = one bootstrap member: regenerate the seeded
     replicate list (cheap: one STL + block resampling), fit ETS on
     member ``rep`` only, emit its point forecast."""
@@ -62,7 +63,7 @@ def _run_members(frequency: int, horizon: int, num: int):
         from .models.common import seeded_rng
         from .models.ets import fit_ets
         # Bounded LRU, NOT an unbounded per-partition dict (ADVICE r6):
-        # a full replicate list is ~num×n×8 bytes (~8 MB at 10k points),
+        # a full replicate list is ~100×n×8 bytes (~8 MB at 10k points),
         # and the cache lives for the whole partition — unbounded it
         # retains one list per distinct series the partition ever sees,
         # an executor OOM with many series.  repartitionByRange keeps
@@ -77,7 +78,7 @@ def _run_members(frequency: int, horizon: int, num: int):
                 # passes seed_key=(name, index, method) into
                 # fit_bagged_ets, which seeds (*seed_key, "mbb")
                 rng = seeded_rng(key[0], key[1], "BAGGEDETS", "mbb")
-                reps_cache[key] = mbb_bootstrap(y, m, num, rng)
+                reps_cache[key] = mbb_bootstrap(y, m, NUM_REPLICATES, rng)
                 while len(reps_cache) > 2:
                     reps_cache.popitem(last=False)
             reps_cache.move_to_end(key)
@@ -104,8 +105,7 @@ def _run_members(frequency: int, horizon: int, num: int):
 
 
 def bagged_fanout_batch(spark: SparkSession, metrics: DataFrame,
-                        frequency: int = 7, horizon: int = 14,
-                        num: int = 100) -> DataFrame:
+                        frequency: int = 7, horizon: int = 14) -> DataFrame:
     """Drop-in for ``forecast_batch(..., "BAGGEDETS")`` output: the
     same (name, index, method, step, 5 bands) rows — ensemble mean +
     min/max envelope, single band duplicated (R:216-217)."""
@@ -113,18 +113,18 @@ def bagged_fanout_batch(spark: SparkSession, metrics: DataFrame,
     h = int(horizon)
     series = _assemble_series(metrics, h).localCheckpoint()
     units = (series
-             .withColumn("rep", F.explode(F.sequence(F.lit(0),
-                                                     F.lit(num - 1))))
+             .withColumn("rep", F.explode(F.sequence(
+                 F.lit(0), F.lit(NUM_REPLICATES - 1))))
              .select("name", "index", "rep", "y"))
     # Range spread, not round-robin (ADVICE r6): every series has
-    # exactly `num` reps, so ranges of (name, index, rep) are balanced
-    # AND each partition sees a contiguous rep-chunk of few distinct
+    # exactly NUM_REPLICATES reps, so ranges of (name, index, rep) are
+    # balanced AND each partition sees a contiguous rep-chunk of few distinct
     # series — the bounded replicate cache in _run_members then hits on
     # almost every row instead of regenerating per interleaved row.
     members = (units
                .repartitionByRange(shuffle_width(spark),
                                    "name", "index", "rep")
-               .mapInPandas(_run_members(frequency, h, num),
+               .mapInPandas(_run_members(frequency, h),
                             schema=_REP_RESULT)
                .localCheckpoint())  # two consumers (fail scan + combine)
     poisoned = (members.where(F.col("kind") == "fail")
@@ -161,5 +161,5 @@ def bagged_fanout_batch(spark: SparkSession, metrics: DataFrame,
                     F.coalesce("upper", nan).alias("upper1"),
                     F.coalesce("upper", nan).alias("upper2"))
             # .to() aligns type AND nullability with the grouped-UDF
-            # path so the fanout="auto" dispatch is schema-invisible
+            # path so the forecast_batch dispatch is schema-invisible
             .to(schemas.FORECAST))

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .. import schemas
+from ..sources.registry import MAX_SERIES_LENGTH
 from .models.arima import arima_candidate_grid
 from .models.common import DEGENERATE_ERRORS
 from .models.hybrid import (_COMPONENTS, _component_forecast,
@@ -89,7 +90,7 @@ def _assemble_series(metrics: DataFrame, cv_horizon: int) -> DataFrame:
             .agg(F.slice(  # stable (date, value) sort + the 10k cap
                  F.sort_array(F.collect_list(
                      F.struct("evaluationDate", "value"))),
-                 1, 10_000).alias("pts"))
+                 1, MAX_SERIES_LENGTH).alias("pts"))
             .withColumn("y", F.col("pts.value"))
             .drop("pts")
             .withColumn("n", F.size("y"))
@@ -436,5 +437,5 @@ def hybrid_fanout_batch(spark: SparkSession, metrics: DataFrame,
                     (F.col("step") + 1).cast("int").alias("step"),
                     *[F.coalesce(b, nan).alias(b) for b in _BANDS])
             # .to() aligns type AND nullability with the grouped-UDF
-            # path so the fanout="auto" dispatch is schema-invisible
+            # path so the forecast_batch dispatch is schema-invisible
             .to(schemas.FORECAST))

@@ -9,9 +9,10 @@ ensemble — which the reference then duplicates into both band pairs
 (``lower1 = lower2``, R:216-217; preserved, reference quirk 2).
 
 Deviations (documented): Box-Cox lambda by Guerrero-style grid instead
-of closed-form optimization.  (Replicate count matches baggedETS's
-default num=100 since round 2 — the round-2 ETS filter/search speedups
-made the full ensemble affordable in a Python worker.)
+of closed-form optimization.  The replicate count is baggedETS's default
+``num=100`` (``NUM_REPLICATES``), fixed because the reference never sets
+it; ``bagged_fanout`` reads the same constant, which its exact parity
+with the single-task fit depends on.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import numpy as np
 from .common import seeded_rng
 from .ets import fit_ets
 from .stl import stl_decompose
+
+NUM_REPLICATES = 100  # baggedETS(num = 100), the forecast package default
 
 
 def _boxcox_lambda(y: np.ndarray, m: int = 2,
@@ -134,11 +137,11 @@ class BaggedETSModel:
                 "upper1": upper, "upper2": upper}
 
 
-def fit_bagged_ets(y: np.ndarray, frequency: int, num: int = 100,
+def fit_bagged_ets(y: np.ndarray, frequency: int,
                    seed_key=("bagged",)) -> BaggedETSModel:
     y = np.asarray(y, float)
     m = max(1, int(frequency))
     rng = seeded_rng(*seed_key, "mbb")
-    series = mbb_bootstrap(y, m, num, rng)
+    series = mbb_bootstrap(y, m, NUM_REPLICATES, rng)
     members = [fit_ets(s, m, damped=None) for s in series]
     return BaggedETSModel(y, m, members)

@@ -13,51 +13,37 @@ The container has no Stan — but Stan is only a SOLVER here: Prophet's
 MAP with default settings is the unique optimum of a convex posterior
 (Gaussian likelihood on the max-abs-scaled series, Laplace(0, 0.05)
 changepoint deltas, Normal(0, 10) Fourier coefficients, Normal(0, 5)
-k/m, half-Normal(0, 0.5) sigma_obs).  Since r8 the default fit solves
-that EXACT objective (`_exact_map_fit`: FISTA proximal gradient on the
-coefficient block — soft-threshold prox keeps the Laplace prior a true
-L1 penalty — alternated with a golden-section profile over sigma_obs;
-warm-started, 0.02 s at the reference's series lengths, 2.2 s worst
-case at n=5000).  Model structure: piecewise-linear trend with 25
-changepoints over the first 80% of history (Prophet defaults), weekly
-Fourier order 3 + yearly order 10 (when the span supports them), and
-uncertainty from residual sigma + simulated future trend changepoints
-(Prophet's interval mechanism, deterministic seeded generator).
+k/m, half-Normal(0, 0.5) sigma_obs).  The fit solves that EXACT
+objective (`_exact_map_fit`: FISTA proximal gradient on the coefficient
+block — soft-threshold prox keeps the Laplace prior a true L1 penalty —
+alternated with a golden-section profile over sigma_obs; warm-started,
+0.02 s at the reference's series lengths, 2.2 s worst case at n=5000).
+Model structure: piecewise-linear trend with 25 changepoints over the
+first 80% of history (Prophet defaults), weekly Fourier order 3 +
+yearly order 10 (when the span supports them), and uncertainty from
+residual sigma + simulated future trend changepoints (Prophet's
+interval mechanism, deterministic seeded generator).
 
-Parity status (r9): the default fit equals an independently-coded
-solver's optimum to ~1e-5 on the noisy golden fixture
+Parity status: the fit equals an independently-coded solver's optimum
+to ~1e-5 on the noisy golden fixture
 (tests/test_forecast_external_goldens.py::
 test_prophet_default_fit_is_the_exact_l1_map — convexity makes the
 agreement a proof of optimality), with the L1 sparsity real Prophet
-exhibits (5 of 25 deltas non-zero).  With
-``changepoint_placement="quantile"`` (r9) the grid is Prophet's EXACT
-``set_changepoints`` rule — ``linspace(0, hist_size−1,
-n_changepoints+1).round()`` over OBSERVATION indices, first point
-dropped, placed on the observed ds values (= ds quantiles on a gappy
-calendar; parity pinned on an irregular fixture in
-test_prophet_quantile_changepoints_match_prophets_rule) — leaving
-Stan's L-BFGS convergence tolerance as the ONLY remaining deviation
-class from a real `prophet::prophet` run.  The default placement
-stays the r3-r8 even grid (evenly spaced over the first 80%;
-matches Prophet up to index rounding on evenly-spaced daily data) so
-the existing changepoint goldens keep pinning it.  The r3-r7
-empirical-Bayes RIDGE skeleton is kept as ``optimizer="ridge"``; its
-measured divergence from the exact MAP (the historical deviation
-class) stays pinned:
+exhibits (5 of 25 deltas non-zero).  Prophet's defaults are fixed, not
+settable: linear growth, ``changepoint_prior_scale=0.05`` and
+``seasonality_prior_scale=10`` (``_TAU_CP`` / ``_TAU_S``), because the
+reference calls ``prophet()`` with nothing else set (R:371).
 
-    quantity (data scale)         measured    pinned bound
-    intercept                     0.045       < 0.08
-    base slope (/day)             0.034       < 0.06
-    total slope change (/day)     0.055       < 0.10
-    Fourier coefficients (max)    0.013       < 0.03
-    7-step forecast mean (max)    0.41 (~2%)  < 0.6
+Documented deviations from a real ``prophet::prophet`` run:
 
-Round 3 additions (verdict item 7): ``growth='logistic'`` with a
-carrying capacity (fit on the logit scale, forecasts mapped back
-through cap/(1+exp(−z)) — the linearized stand-in for Prophet's
-saturating trend), and exposed ``changepoint_prior_scale`` /
-``seasonality_prior_scale`` knobs wired into the empirical-Bayes ridge
-penalties exactly as Prophet's τ priors scale its MAP objective.
+- changepoint placement: ≤25 changepoints evenly spaced over the first
+  80% of observation indices (the grid the changepoint goldens pin).
+  Prophet's ``set_changepoints`` rounds ``linspace(0, hist_size−1,
+  n_cp+1)`` over observation indices instead; the two agree up to index
+  rounding on evenly-spaced daily data but differ on a gappy calendar.
+  Switching to Prophet's rule would change fitted results;
+- Stan's L-BFGS reaches the MAP optimum only up to its convergence
+  tolerance.
 """
 
 from __future__ import annotations
@@ -66,12 +52,10 @@ import numpy as np
 
 from .common import seeded_rng
 
-_INTERVAL_Z = 1.2815515655446004  # 80% interval (Prophet default width)
-
 
 class ProphetLikeModel:
     def __init__(self, ds, y, coef, changepoints, deltas, sigma, k, b0,
-                 t_scale, y_scale, season_spec, growth="linear", cap=None):
+                 t_scale, y_scale, season_spec):
         self.ds = ds                    # int days since epoch, ascending
         self.y = np.asarray(y, float)
         self.coef = coef                # seasonal+trend ridge coefficients
@@ -83,19 +67,6 @@ class ProphetLikeModel:
         self.t_scale = t_scale
         self.y_scale = y_scale
         self.season_spec = season_spec  # [(period_days, order), ...]
-        self.growth = growth            # "linear" | "logistic"
-        self.cap = cap                  # carrying capacity (logistic only)
-
-    def _inv_link(self, working: np.ndarray) -> np.ndarray:
-        """Map the working-scale prediction back to the data scale.
-        Linear growth is fit on y directly (identity); logistic growth is
-        fit on the logit-transformed series, so the inverse is the
-        saturating curve cap/(1+exp(-z)) — Prophet's logistic trend
-        linearized (the MAP skeleton's closed-form stand-in for Stan's
-        joint (k, m, δ) optimization)."""
-        if self.growth == "logistic":
-            return self.cap / (1.0 + np.exp(-working))
-        return working
 
     @property
     def method(self) -> str:
@@ -124,8 +95,7 @@ class ProphetLikeModel:
         t_norm = (fut_days - self.ds[0]) / self.t_scale
         X = self._design(fut_days)
         seasonal = X @ self.coef if X.shape[1] else np.zeros(horizon)
-        mean = self._inv_link((self._trend(t_norm) + seasonal)
-                              * self.y_scale)
+        mean = (self._trend(t_norm) + seasonal) * self.y_scale
         # uncertainty: residual noise + future changepoint simulation
         rng = seeded_rng(*seed_key, "prophet-sim")
         n_sims = 1000
@@ -144,8 +114,7 @@ class ProphetLikeModel:
                 extra = np.cumsum(np.cumsum(deltas)) / self.t_scale
                 trend = trend + extra
             noise = rng.normal(0, self.sigma, size=horizon)
-            sims[s] = self._inv_link((trend + seasonal + noise)
-                                     * self.y_scale)
+            sims[s] = (trend + seasonal + noise) * self.y_scale
         lower = np.quantile(sims, 0.10, axis=0)
         upper = np.quantile(sims, 0.90, axis=0)
         # single 80% band duplicated into both pairs (R:381-382)
@@ -153,17 +122,18 @@ class ProphetLikeModel:
                 "upper1": upper, "upper2": upper}
 
 
+_TAU_CP = 0.05       # Prophet: changepoint deltas ~ Laplace(0, 0.05)
+_TAU_S = 10.0        # Prophet: Fourier coefficients ~ Normal(0, 10)
 _TAU_KM = 5.0        # Prophet: k, m ~ Normal(0, 5)
 _SIGMA_PRIOR = 0.5   # Prophet: sigma_obs ~ half-Normal(0, 0.5)
 
 
-def _exact_map_fit(A: np.ndarray, ys: np.ndarray, n_cp: int,
-                   tau_cp: float, tau_s: float) -> tuple:
+def _exact_map_fit(A: np.ndarray, ys: np.ndarray, n_cp: int) -> tuple:
     """EXACT MAP of the Prophet posterior on the scaled working series:
     minimize over b  ||ys - A b||^2 / (2 sigma^2)
-                     + sum|b_delta| / tau_cp          (Laplace deltas)
-                     + ||b_beta||^2 / (2 tau_s^2)     (Normal Fourier)
-                     + (b_0^2 + b_1^2) / (2 tau_km^2) (Normal k, m)
+                     + sum|b_delta| / _TAU_CP         (Laplace deltas)
+                     + ||b_beta||^2 / (2 _TAU_S^2)    (Normal Fourier)
+                     + (b_0^2 + b_1^2) / (2 _TAU_KM^2) (Normal k, m)
     jointly with sigma via its profile:  n log sigma + SSR/(2 sigma^2)
                      + sigma^2 / (2 * 0.5^2)          (half-Normal).
 
@@ -186,17 +156,17 @@ def _exact_map_fit(A: np.ndarray, ys: np.ndarray, n_cp: int,
     sigma = 0.1
 
     def _fista(sigma2, b_start):
-        L = (lam_max / sigma2 + 1.0 / tau_s ** 2 + 1.0 / _TAU_KM ** 2)
+        L = (lam_max / sigma2 + 1.0 / _TAU_S ** 2 + 1.0 / _TAU_KM ** 2)
         bb = b_start.copy()
         z = bb.copy()
         tk = 1.0
-        thr = 1.0 / (tau_cp * L)
+        thr = 1.0 / (_TAU_CP * L)
         for _ in range(50000):
             grad = (AtA @ z - Aty) / sigma2
             grad[0] += z[0] / _TAU_KM ** 2
             if p > 1:
                 grad[1] += z[1] / _TAU_KM ** 2
-            grad[idx_b] += z[idx_b] / tau_s ** 2
+            grad[idx_b] += z[idx_b] / _TAU_S ** 2
             w = z - grad / L
             w[idx_d] = np.sign(w[idx_d]) * np.maximum(
                 np.abs(w[idx_d]) - thr, 0)
@@ -239,33 +209,10 @@ def _exact_map_fit(A: np.ndarray, ys: np.ndarray, n_cp: int,
     return b, float(sigma)
 
 
-def fit_prophet_like(ds_days: np.ndarray, y: np.ndarray,
-                     growth: str = "linear", cap: float | None = None,
-                     changepoint_prior_scale: float = 0.05,
-                     seasonality_prior_scale: float = 10.0,
-                     optimizer: str = "map",
-                     changepoint_placement: str = "even",
-                     ) -> ProphetLikeModel:
+def fit_prophet_like(ds_days: np.ndarray, y: np.ndarray) -> ProphetLikeModel:
     """``ds_days``: integer days-since-epoch (the reference's ds column,
-    R:35-38); gaps allowed — Prophet is calendar-aware.
-
-    ``growth='logistic'`` (requires ``cap`` > max(y) > 0) fits the
-    piecewise model on the logit-transformed series ln(y/(cap−y)) and
-    maps forecasts back through cap/(1+exp(−z)) — the linearized MAP
-    stand-in for Prophet's saturating trend.  ``changepoint_prior_scale``
-    (Prophet default 0.05) and ``seasonality_prior_scale`` (default 10)
-    set the Laplace/normal prior widths τ that scale the empirical-Bayes
-    ridge penalties below; larger = more flexible.
-
-    ``changepoint_placement`` (r9, the last M10 placement deviation):
-    ``"even"`` (default, the r3-r8 grid goldens pin) spaces ≤25 grid
-    points evenly over the first 80% of observations;
-    ``"quantile"`` replays Prophet's ``set_changepoints`` verbatim —
-    ``hist_size = floor(n·0.8)``, ``n_cp`` clipped to ``hist_size−1``,
-    ``linspace(0, hist_size−1, n_cp+1).round()`` over observation
-    INDICES with the first grid point dropped — so on an irregular
-    calendar the changepoints sit at observed-ds quantiles exactly
-    where Prophet puts them."""
+    R:35-38); gaps allowed — Prophet is calendar-aware.  Linear growth,
+    the even changepoint grid and the exact MAP fit (module docstring)."""
     ds = np.asarray(ds_days, float)
     order = np.argsort(ds)
     ds = ds[order]
@@ -273,18 +220,8 @@ def fit_prophet_like(ds_days: np.ndarray, y: np.ndarray,
     n = len(y)
     if n == 0:
         raise ValueError("empty series")
-    if growth == "logistic":
-        if cap is None or not np.all((y > 0) & (y < cap)):
-            raise ValueError("logistic growth needs cap > y > 0")
-        # fit the whole piecewise machinery on the logit scale; the
-        # model's inverse link restores the saturating data scale
-        work = np.log(y / (cap - y))
-    elif growth == "linear":
-        work = y
-    else:
-        raise ValueError(f"unknown growth {growth!r}")
-    y_scale = float(np.max(np.abs(work))) or 1.0
-    ys = work / y_scale
+    y_scale = float(np.max(np.abs(y))) or 1.0
+    ys = y / y_scale
     t_scale = max(1.0, ds[-1] - ds[0])
     t_norm = (ds - ds[0]) / t_scale
     span_days = ds[-1] - ds[0]
@@ -295,42 +232,14 @@ def fit_prophet_like(ds_days: np.ndarray, y: np.ndarray,
         season_spec.append((7.0, 3))
     if span_days >= 730:
         season_spec.append((365.25, 10))
-    # changepoints over the first 80% of observed points
-    if changepoint_placement == "quantile":
-        # Prophet's set_changepoints, verbatim (prophet/forecaster.py):
-        # potential changepoints are the ds values at rounded-linspace
-        # positions over the first floor(n * changepoint_range) rows,
-        # first grid point dropped — ds-quantile placement on gappy
-        # calendars
-        hist_size = int(np.floor(n * 0.8))
-        n_cp = min(25, hist_size - 1)
-        if n_cp > 0:
-            cp_idx = (np.linspace(0, hist_size - 1, n_cp + 1)
-                      .round().astype(int)[1:])
-            # NO np.unique here: Prophet keeps whatever ds values the
-            # rounded linspace lands on — with duplicate ds in the
-            # history that means a duplicated hinge column, and the
-            # verbatim replay must reproduce it (the MAP posterior is
-            # still convex; the fit is unique in fitted values).  The
-            # linspace indices themselves are distinct because
-            # n_cp <= hist_size - 1 keeps the spacing >= 1.
-            changepoints = t_norm[cp_idx]
-        else:
-            changepoints = np.array([])
-    elif changepoint_placement == "even":
-        # the r3-r8 grid (25 evenly spaced indices from 1 to
-        # int(0.8*(n-1))) — kept as the default the changepoint
-        # goldens pin; matches Prophet up to index rounding on
-        # evenly-spaced daily data
-        n_cp = min(25, max(0, n // 3))
-        cp_idx = (np.linspace(1, int(0.8 * (n - 1)), n_cp).astype(int)
-                  if n_cp else [])
-        changepoints = np.unique(t_norm[cp_idx]) if n_cp else np.array([])
-    else:
-        raise ValueError(
-            f"unknown changepoint_placement {changepoint_placement!r}")
+    # changepoints: 25 evenly spaced indices from 1 to int(0.8*(n-1))
+    # — matches Prophet up to index rounding on evenly-spaced daily data
+    n_cp = min(25, max(0, n // 3))
+    cp_idx = (np.linspace(1, int(0.8 * (n - 1)), n_cp).astype(int)
+              if n_cp else [])
+    changepoints = np.unique(t_norm[cp_idx]) if n_cp else np.array([])
 
-    # design: [1, t, hinge(t-cp)..., fourier...] with ridge on hinges+fourier
+    # design: [1, t, hinge(t-cp)..., fourier...]
     cols = [np.ones(n), t_norm]
     for cp in changepoints:
         cols.append(np.clip(t_norm - cp, 0, None))
@@ -341,49 +250,13 @@ def fit_prophet_like(ds_days: np.ndarray, y: np.ndarray,
             X_season_full.append(np.sin(arg))
             X_season_full.append(np.cos(arg))
     A = np.column_stack(cols + X_season_full) if X_season_full else np.column_stack(cols)
-    if optimizer == "map":
-        # EXACT MAP of the Prophet posterior (r8, verdict item 5
-        # follow-through): the Laplace changepoint prior is kept as a
-        # true L1 penalty and solved to the convex optimum — the same
-        # optimum Stan's L-BFGS reaches, no Stan needed.  See
-        # `_exact_map_fit`; the self-consistency golden
-        # (tests/test_forecast_external_goldens.py::
-        # test_prophet_default_fit_is_the_exact_l1_map) pins agreement
-        # with an independent solver run to ~1e-5.
-        coef_all, sigma = _exact_map_fit(
-            A, ys, len(changepoints),
-            changepoint_prior_scale, seasonality_prior_scale)
-    elif optimizer == "ridge":
-        # Empirical-Bayes RIDGE (the r3-r7 skeleton, kept for the
-        # measured-divergence golden and as the documented L2
-        # approximation): iterate λ = σ̂²/τ² → refit until σ̂²
-        # stabilizes; as σ̂²→0 the MAP converges to the interpolating
-        # least-squares fit, the same limit as the L1 posterior.
-        pen = np.zeros(A.shape[1])
-        pen[2:2 + len(changepoints)] = 0.5
-        if X_season_full:
-            pen[2 + len(changepoints):] = 0.1
-        coef_all = np.linalg.solve(A.T @ A + np.diag(pen), A.T @ ys)
-        for _ in range(20):
-            s2 = float(np.var(ys - A @ coef_all, ddof=1)) if n > 2 else 0.0
-            pen2 = np.zeros(A.shape[1])
-            pen2[2:2 + len(changepoints)] = \
-                max(s2, 1e-10) / changepoint_prior_scale ** 2
-            if X_season_full:
-                pen2[2 + len(changepoints):] = \
-                    max(s2, 1e-10) / seasonality_prior_scale ** 2
-            prev = coef_all
-            coef_all = np.linalg.solve(A.T @ A + np.diag(pen2), A.T @ ys)
-            if float(np.max(np.abs(coef_all - prev))) < 1e-10:
-                break
-        resid = ys - A @ coef_all
-        sigma = float(np.std(resid, ddof=1)) if n > 2 else 0.0
-    else:
-        raise ValueError(f"unknown optimizer {optimizer!r}")
+    # EXACT MAP of the Prophet posterior: the Laplace changepoint prior
+    # is kept as a true L1 penalty and solved to the convex optimum —
+    # the same optimum Stan's L-BFGS reaches, no Stan needed.
+    coef_all, sigma = _exact_map_fit(A, ys, len(changepoints))
     b0, k = float(coef_all[0]), float(coef_all[1])
     deltas = coef_all[2:2 + len(changepoints)]
     coef_season = coef_all[2 + len(changepoints):]
-    model = ProphetLikeModel(ds.astype(int), y, coef_season, changepoints,
-                             np.asarray(deltas), sigma, k, b0, t_scale,
-                             y_scale, season_spec, growth=growth, cap=cap)
-    return model
+    return ProphetLikeModel(ds.astype(int), y, coef_season, changepoints,
+                            np.asarray(deltas), sigma, k, b0, t_scale,
+                            y_scale, season_spec)

@@ -19,7 +19,7 @@ import numpy as np
 from .ets import fit_ets
 
 
-def loess_smooth(y: np.ndarray, span_points: int, degree: int = 1) -> np.ndarray:
+def loess_smooth(y: np.ndarray, span_points: int) -> np.ndarray:
     """Local-linear tricube smoother evaluated at every point, O(n·span)."""
     n = len(y)
     if n == 0:
@@ -37,15 +37,11 @@ def loess_smooth(y: np.ndarray, span_points: int, degree: int = 1) -> np.ndarray
         dmax = d.max() if d.max() > 0 else 1.0
         w = (1 - (d / dmax) ** 3) ** 3
         w = np.clip(w, 0, None)
-        if degree == 0:
-            sw = w.sum()
-            out[i] = float((w * yi).sum() / sw) if sw > 0 else yi.mean()
-        else:
-            W = np.sqrt(w)
-            A = np.column_stack([np.ones_like(xi), xi - i]) * W[:, None]
-            b = yi * W
-            coef, *_ = np.linalg.lstsq(A, b, rcond=None)
-            out[i] = float(coef[0])
+        W = np.sqrt(w)
+        A = np.column_stack([np.ones_like(xi), xi - i]) * W[:, None]
+        b = yi * W
+        coef, *_ = np.linalg.lstsq(A, b, rcond=None)
+        out[i] = float(coef[0])
     return out
 
 

@@ -38,14 +38,12 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
-def release_stale(spark: SparkSession, keep_newest: int = 0) -> int:
-    """Unpersist stale materialized intermediates; return #released.
+def release_stale(spark: SparkSession) -> int:
+    """Unpersist every persistent RDD and clear the SQL cache; return
+    #RDDs released.
 
     Call ONLY from a sequential harness between one query's action and
-    the next query's construction (module docstring).  ``keep_newest``
-    retains the N newest persistent RDDs (ids are monotonically
-    increasing) for callers that hold built-but-unexecuted frames; the
-    harness boundary needs none.
+    the next query's construction (module docstring).
 
     Never raises: a release failure must not take down a bench run.
     """
@@ -53,9 +51,7 @@ def release_stale(spark: SparkSession, keep_newest: int = 0) -> int:
     try:
         jsc = spark.sparkContext._jsc
         jmap = jsc.getPersistentRDDs()
-        ids = sorted(int(k) for k in jmap.keySet().toArray())
-        stale = ids[:-keep_newest] if keep_newest > 0 else ids
-        for rid in stale:
+        for rid in jmap.keySet().toArray():
             rdd = jmap.get(rid)
             if rdd is not None:
                 rdd.unpersist(False)

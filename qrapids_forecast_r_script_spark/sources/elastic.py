@@ -20,6 +20,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .registry import MAX_SERIES_LENGTH
+
 # Lucene query_string metacharacters (reserved set per the ES docs)
 _QS_METACHARS = re.compile(r'([+\-=&|><!(){}\[\]^"~*?:\\/])')
 
@@ -44,7 +46,8 @@ def es_reader(spark: SparkSession, host: str, port: int = 9200,
 
 
 def search_element_es(spark: SparkSession, host: str, name: str, index: str,
-                      limit: int = 10_000, **conn_kwargs) -> DataFrame:
+                      limit: int = MAX_SERIES_LENGTH,
+                      **conn_kwargs) -> DataFrame:
     """searchElement (R:23-40) against a live ES cluster.
 
     The connector pushes the query-string filter, the 2-field source

@@ -139,24 +139,18 @@ def search_element(metrics: DataFrame, name: str, index: str,
         args={"name": name, "index": index, "limit": limit}, m=metrics)
 
 
-def load_series(metrics: DataFrame, name: str | None = None,
-                index: str | None = None) -> DataFrame:
+def load_series(metrics: DataFrame) -> DataFrame:
     """Positional series (SURVEY §1.2): Spark form of ``ts(v, f, start=0)``
     (R:32).  Dates are discarded into a 0-based positional index ``t`` in
     date order; calendar gaps are NOT filled (reference quirk 6).
 
-    With no name/index this is the batch form: every series at once, one
-    window partition per (name, index) — embarrassingly parallel at scale.
-    The per-series 10k cap (R:28) becomes a windowed row_number filter.
+    Every series at once, one window partition per (name, index) —
+    embarrassingly parallel at scale.  The per-series 10k cap (R:28)
+    becomes a windowed row_number filter.
     """
-    df = metrics
-    if name is not None:
-        df = df.where(F.col("name") == name)
-    if index is not None:
-        df = df.where(F.col("index") == index)
     w = Window.partitionBy("name", "index").orderBy(
         F.col("evaluationDate").asc(), F.col("value").asc())
-    return (df
+    return (metrics
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= MAX_SERIES_LENGTH)
             .select("name", "index",

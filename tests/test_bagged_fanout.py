@@ -87,7 +87,7 @@ def test_run_members_bounded_cache_interleaved_series():
     from qrapids_forecast_r_script_spark.forecast.bagged_fanout import (
         _run_members)
     from qrapids_forecast_r_script_spark.forecast.models.bagged import (
-        mbb_bootstrap)
+        NUM_REPLICATES, mbb_bootstrap)
     from qrapids_forecast_r_script_spark.forecast.models.common import (
         seeded_rng)
     from qrapids_forecast_r_script_spark.forecast.models.ets import fit_ets
@@ -100,12 +100,13 @@ def test_run_members_bounded_cache_interleaved_series():
              "y": series[n].tolist()}
             for r in range(3) for n in series]  # interleaved on purpose
     pdf = pd.DataFrame(rows)
-    fn = _run_members(frequency=7, horizon=5, num=3)
+    fn = _run_members(frequency=7, horizon=5)
     out = pd.concat(list(fn(iter([pdf]))), ignore_index=True)
     assert (out["kind"] == "member").all()
     assert len(out) == len(rows)
     for row in out.itertuples(index=False):
-        reps = mbb_bootstrap(np.asarray(series[row.name], float), 7, 3,
+        reps = mbb_bootstrap(np.asarray(series[row.name], float), 7,
+                             NUM_REPLICATES,
                              seeded_rng(row.name, "t", "BAGGEDETS", "mbb"))
         want = fit_ets(reps[row.rep], 7, damped=None).point_forecast(5)
         np.testing.assert_allclose(row.points, want, rtol=0, atol=0)

@@ -85,3 +85,42 @@ def test_cache_miss_with_model_refreshes_and_saves(store):
     assert len(out) == 16
     # and the cache was overwritten unconditionally (R:114)
     assert len(store.load_forecast("m", "i", "ETS")["mean"]) == 16
+
+
+def test_prophet_model_pickled_with_growth_and_cap_still_serves(store):
+    """A PROPHET model pickled while the model still carried ``growth``
+    and ``cap`` (always "linear" / None on the product path) must load
+    through ``ForecastStore.load_model`` and forecast bit-identically to
+    a fresh fit, so model stores written before those fields were
+    dropped keep serving — directly and on the model-hit/cache-miss
+    path, which must not rescan the source.  The old model holds
+    exactly the fields such a pickle has, no more."""
+    from qrapids_forecast_r_script_spark.forecast.api import prepare_series
+    from qrapids_forecast_r_script_spark.forecast.dispatch import (
+        fit_method, forecast_fitted)
+    from qrapids_forecast_r_script_spark.forecast.models.prophet_like import (
+        ProphetLikeModel)
+
+    y, ds_days = prepare_series(_series_pdf())
+    key = ("m", "i", "PROPHET")
+    fresh = fit_method("PROPHET", y, 7, ds_days=ds_days, seed_key=key)
+    old_fields = ("ds", "y", "coef", "changepoints", "deltas", "sigma", "k",
+                  "b0", "t_scale", "y_scale", "season_spec")
+    old = ProphetLikeModel.__new__(ProphetLikeModel)
+    old.__dict__.update({f: fresh.__dict__[f] for f in old_fields},
+                        growth="linear", cap=None)
+    store.save_model(*key, old)
+
+    loaded = store.load_model(*key)
+    assert (loaded.growth, loaded.cap) == ("linear", None)
+    want = forecast_fitted(fresh, 14, seed_key=key)
+    got = forecast_fitted(loaded, 14, seed_key=key)
+    for band in want:
+        assert got[band].tobytes() == want[band].tobytes(), band
+
+    def no_scan():
+        raise AssertionError("model-hit path must not rescan the source")
+
+    rows = store.forecast_with_cache(*key, 7, 14, no_scan)
+    for band in want:
+        assert rows[band].to_numpy().tobytes() == want[band].tobytes(), band

@@ -625,17 +625,6 @@ def test_prophet_default_fit_is_the_exact_l1_map():
     lands on the same point to ~1e-5 — convexity makes the agreement
     a proof of optimality, not a tautology.
 
-    It ALSO keeps the measured bound for the r3-r7 RIDGE skeleton
-    (still available as optimizer="ridge"), the historical deviation
-    class the r7 round documented:
-
-        quantity (data scale)        ridge-vs-exact-MAP   bound pinned
-        intercept                    0.045                < 0.08
-        base slope (/day)            0.0341               < 0.06
-        total slope change (/day)    0.0548               < 0.10
-        Fourier coefs (max abs)      0.0129               < 0.03
-        7-step forecast mean (max)   0.409  (~2% of level) < 0.6
-
     Remaining documented deviation from real Prophet: the changepoint
     grid (evenly spaced over the first 80% — Prophet's own placement
     on evenly-spaced daily data matches up to index rounding), and
@@ -649,8 +638,7 @@ def test_prophet_default_fit_is_the_exact_l1_map():
     s = 2 * np.sin(2 * np.pi * t / 7) + 1 * np.cos(4 * np.pi * t / 7)
     rng = np.random.default_rng(20260815)
     y = g + s + rng.standard_normal(140)
-    m = fit_prophet_like(t, y)                       # default: exact MAP
-    m_ridge = fit_prophet_like(t, y, optimizer="ridge")
+    m = fit_prophet_like(t, y)
 
     # same scaled design the fit used
     n = len(y)
@@ -724,7 +712,7 @@ def test_prophet_default_fit_is_the_exact_l1_map():
                                -0.750309, atol=1e-4)
     assert int(np.sum(np.abs(b[idx_delta]) > 1e-9)) == 5  # L1 sparsity
 
-    # --- 1. the DEFAULT fit lands on the independent solver's optimum
+    # the shipped fit lands on the independent solver's optimum
     # (convex => agreement proves optimality; per-delta vectors compare
     # too because both are the same L1 optimum, sparsity included)
     np.testing.assert_allclose(m.b0, b[0], atol=1e-5)
@@ -734,14 +722,6 @@ def test_prophet_default_fit_is_the_exact_l1_map():
     np.testing.assert_allclose(m.sigma, sigma, atol=1e-5)
     assert int(np.sum(np.abs(m.deltas) > 1e-9)) == 5
 
-    # --- 2. measured divergence of the RIDGE skeleton (the r3-r7
-    # default, kept as optimizer="ridge") from the exact MAP — the
-    # historical deviation class, still pinned
-    d_intercept = abs(m_ridge.b0 * ysc - b[0] * ysc)
-    d_slope = abs(m_ridge.k * ysc / tsc - b[1] * ysc / tsc)
-    d_dsum = abs(float(np.sum(m_ridge.deltas)) * ysc / tsc
-                 - float(np.sum(b[idx_delta])) * ysc / tsc)
-    d_coef = float(np.max(np.abs((m_ridge.coef - b[idx_beta]) * ysc)))
     h = np.arange(140.0, 147.0)
     t_h = (h - t[0]) / tsc
     trend_l1 = b[0] + b[1] * t_h
@@ -754,85 +734,6 @@ def test_prophet_default_fit_is_the_exact_l1_map():
             Xh.append(np.sin(arg))
             Xh.append(np.cos(arg))
     mean_l1 = (trend_l1 + np.column_stack(Xh) @ b[idx_beta]) * ysc
-    d_fc = float(np.max(np.abs(m_ridge.forecast(7)["mean"] - mean_l1)))
-    # the default fit's forecast must also sit on the exact optimum's
-    # (same trend + seasonal point forecasts)
+    # the fit's forecast must also sit on the exact optimum's (same
+    # trend + seasonal point forecasts)
     np.testing.assert_allclose(m.forecast(7)["mean"], mean_l1, atol=1e-3)
-
-    # pinned measured ridge divergences (r8) + the documented bounds
-    np.testing.assert_allclose(d_slope, 0.034107, atol=5e-4)
-    np.testing.assert_allclose(d_dsum, 0.054816, atol=5e-4)
-    np.testing.assert_allclose(d_fc, 0.409168, atol=5e-3)
-    assert d_intercept < 0.08
-    assert d_slope < 0.06
-    assert d_dsum < 0.10
-    assert d_coef < 0.03
-    assert d_fc < 0.6
-
-
-def test_prophet_quantile_changepoints_match_prophets_rule():
-    """r8 verdict item 5 (the last M10 placement deviation):
-    ``changepoint_placement="quantile"`` must replay Prophet's
-    published ``set_changepoints`` rule VERBATIM on an irregular
-    calendar — ``hist_size = floor(n·changepoint_range)``,
-    ``n_changepoints`` clipped to ``hist_size−1``,
-    ``np.linspace(0, hist_size−1, n_changepoints+1).round()`` over
-    observation INDICES, first grid point dropped, changepoints = the
-    observed ds values at those indices (ds-quantiles, NOT evenly
-    spaced times, when the calendar has gaps).
-
-    The fixture is a gappy calendar (120 observations over ~240 days,
-    seeded irregular gaps).  The expected index grid is pinned as
-    literals computed from Prophet's formula by hand — including the
-    numpy round-half-to-even behavior Prophet inherits — so a drifted
-    reimplementation can't silently agree with itself.  With the
-    placement matched, the docstring's remaining deviation class from
-    a real `prophet::prophet` run is Stan's L-BFGS tolerance only."""
-    from qrapids_forecast_r_script_spark.forecast.models.prophet_like import (
-        fit_prophet_like)
-
-    rng = np.random.default_rng(42)
-    gaps = rng.integers(1, 4, size=120)         # 1-3 day gaps: irregular
-    ds = np.cumsum(gaps).astype(float)
-    y = 5 + 0.1 * ds + rng.standard_normal(120)
-
-    n = 120
-    # Prophet's rule, by hand: hist_size = floor(120*0.8) = 96,
-    # n_cp = min(25, 95) = 25, linspace(0, 95, 26).round()[1:]
-    expected_idx = np.linspace(0, 95, 26).round().astype(int)[1:]
-    assert expected_idx[0] == 4 and expected_idx[-1] == 95  # literals
-    assert list(expected_idx[:5]) == [4, 8, 11, 15, 19]
-    t_scale = max(1.0, ds[-1] - ds[0])
-    expected_t = np.unique((ds[expected_idx] - ds[0]) / t_scale)
-
-    m = fit_prophet_like(ds, y, changepoint_placement="quantile")
-    np.testing.assert_allclose(m.changepoints, expected_t, atol=1e-12)
-    assert len(m.changepoints) == 25
-
-    # the placements genuinely differ from the r3-r8 even grid on this
-    # gappy calendar (the deviation the option closes)
-    m_even = fit_prophet_like(ds, y)            # default placement
-    assert len(m_even.changepoints) == len(m.changepoints)
-    assert not np.allclose(m_even.changepoints, m.changepoints)
-
-    # and the quantile-placed fit still forecasts sanely (slope ~0.1)
-    fc = m.forecast(7)["mean"]
-    assert np.all(np.isfinite(fc))
-    step = np.diff(fc).mean()
-    assert 0.0 < step < 0.4
-
-
-def test_prophet_quantile_placement_small_series_clip():
-    """Prophet clips n_changepoints to hist_size − 1 when the history
-    is short (set_changepoints' first branch): 10 points → hist_size 8
-    → 7 changepoints at indices linspace(0, 7, 8).round()[1:] =
-    [1..7]."""
-    from qrapids_forecast_r_script_spark.forecast.models.prophet_like import (
-        fit_prophet_like)
-
-    ds = np.array([0, 1, 3, 6, 7, 10, 14, 15, 19, 20], dtype=float)
-    y = np.arange(10.0)
-    m = fit_prophet_like(ds, y, changepoint_placement="quantile")
-    t_scale = max(1.0, ds[-1] - ds[0])
-    expected = np.unique((ds[np.arange(1, 8)] - ds[0]) / t_scale)
-    np.testing.assert_allclose(m.changepoints, expected, atol=1e-12)

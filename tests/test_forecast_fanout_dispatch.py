@@ -1,18 +1,21 @@
-"""forecast_batch fanout="auto" dispatch (r6 verdict item 4).
+"""forecast_batch's HYBRID/BAGGEDETS fan-out dispatch (r6 verdict item 4).
 
 The HYBRID/BAGGEDETS straggler fan-outs must be the DEFAULT path at
-scale, not a sibling API: ``forecast_batch(..., fanout="auto")`` runs
-one JVM count-per-series aggregation and routes through
-``hybrid_fanout_batch`` / ``bagged_fanout_batch`` when the longest
-series has ≥ FANOUT_POINT_THRESHOLD points.  These tests pin (a) the
-routing decision on both sides of the threshold, (b) exact result
-parity between the dispatched and forced paths, and (c) schema
-equality so the dispatch is invisible to downstream consumers.
+scale, not a sibling API: ``forecast_batch`` runs one JVM
+count-per-series aggregation and routes through ``hybrid_fanout_batch``
+/ ``bagged_fanout_batch`` when the longest series has ≥
+FANOUT_POINT_THRESHOLD points.  These tests move the threshold to reach
+both routes and pin (a) the routing decision on both sides of it, (b)
+exact result parity between the two routes, and (c) schema equality so
+the dispatch is invisible to downstream consumers.
 """
 
 import numpy as np
 import pandas as pd
 import pytest
+
+# above any toy series length: every series takes the single-task path
+_NEVER = 10 ** 9
 
 
 def _toy_metrics(spark, n_points=40, names=("alpha", "beta")):
@@ -34,34 +37,39 @@ def _collect(df):
 
 
 @pytest.mark.parametrize("method", ["HYBRID", "BAGGEDETS"])
-def test_auto_routes_below_threshold_to_single_task(spark, method):
-    """Short series (40 pts << 5000): auto == never, bit-for-bit (same
-    code path), and the plan contains the single applyInPandas stage,
-    not the fan-out's mapInPandas chain."""
-    from qrapids_forecast_r_script_spark.forecast.api import forecast_batch
+def test_auto_routes_below_threshold_to_single_task(spark, method,
+                                                    monkeypatch):
+    """Short series (40 pts << 5000) at the shipped threshold: the plan
+    contains the single applyInPandas stage, not the fan-out's
+    mapInPandas chain, and the rows equal a run with the threshold out
+    of reach, bit-for-bit (same code path)."""
+    from qrapids_forecast_r_script_spark.forecast import api
 
+    assert api.FANOUT_POINT_THRESHOLD == 5_000
     metrics = _toy_metrics(spark)
-    auto = forecast_batch(spark, metrics, method, 7, 7, fanout="auto")
-    never = forecast_batch(spark, metrics, method, 7, 7, fanout="never")
-    # below threshold both are the grouped-applyInPandas plan
+    auto = api.forecast_batch(spark, metrics, method, 7, 7)
     assert "FlatMapGroupsInPandas" in auto._jdf.queryExecution().toString()
-    a, n = _collect(auto), _collect(never)
+    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", _NEVER)
+    a = _collect(auto)
+    n = _collect(api.forecast_batch(spark, metrics, method, 7, 7))
     assert a.shape == n.shape and len(a) == 2 * 7
     pd.testing.assert_frame_equal(a, n)
 
 
 @pytest.mark.parametrize("method", ["HYBRID", "BAGGEDETS"])
 def test_auto_routes_above_threshold_to_fanout(spark, method, monkeypatch):
-    """Drop the threshold to 1 point: auto must take the fan-out path
-    (plan shows mapInPandas, not the grouped single-task stage) and the
-    results must equal fanout="never" to fp-summation noise, with an
-    IDENTICAL schema (the r7 int-step alignment)."""
+    """Drop the threshold to 1 point: forecast_batch must take the
+    fan-out path (plan shows mapInPandas, not the grouped single-task
+    stage) and the results must equal the single-task path's to
+    fp-summation noise, with an IDENTICAL schema (the r7 int-step
+    alignment)."""
     from qrapids_forecast_r_script_spark.forecast import api
 
-    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", 1)
     metrics = _toy_metrics(spark)
-    auto = api.forecast_batch(spark, metrics, method, 7, 7, fanout="auto")
-    never = api.forecast_batch(spark, metrics, method, 7, 7, fanout="never")
+    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", _NEVER)
+    never = api.forecast_batch(spark, metrics, method, 7, 7)
+    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", 1)
+    auto = api.forecast_batch(spark, metrics, method, 7, 7)
     # names + types must be identical; nullability may be TIGHTER on
     # the fan-out path (literal method stamp / sequence-derived step
     # are provably non-null) which is a safe subtype of the grouped-UDF
@@ -71,6 +79,7 @@ def test_auto_routes_above_threshold_to_fanout(spark, method, monkeypatch):
         (auto.schema, never.schema)
     plan = auto._jdf.queryExecution().toString()
     assert "FlatMapGroupsInPandas" not in plan  # not the single-task stage
+    assert "FlatMapGroupsInPandas" in never._jdf.queryExecution().toString()
     a, n = _collect(auto), _collect(never)
     assert len(a) == len(n) == 2 * 7
     assert (a[["name", "index", "step"]].values
@@ -81,23 +90,14 @@ def test_auto_routes_above_threshold_to_fanout(spark, method, monkeypatch):
                                    rtol=0, atol=1e-9)
 
 
-def test_always_and_bad_value(spark):
-    from qrapids_forecast_r_script_spark.forecast.api import forecast_batch
+def test_non_fanout_methods_ignore_flag(spark, monkeypatch):
+    """ETS has no fan-out: even at threshold 1 it takes the grouped
+    path, and the rows equal the shipped threshold's exactly."""
+    from qrapids_forecast_r_script_spark.forecast import api
 
     metrics = _toy_metrics(spark, names=("alpha",))
-    df = forecast_batch(spark, metrics, "BAGGEDETS", 7, 7, fanout="always")
-    assert df.count() == 7
-    with pytest.raises(ValueError, match="fanout"):
-        forecast_batch(spark, metrics, "ETS", 7, 7, fanout="sometimes")
-
-
-def test_non_fanout_methods_ignore_flag(spark):
-    """ETS has no fan-out: always/never/auto all take the grouped path
-    and agree exactly."""
-    from qrapids_forecast_r_script_spark.forecast.api import forecast_batch
-
-    metrics = _toy_metrics(spark, names=("alpha",))
-    outs = [_collect(forecast_batch(spark, metrics, "ETS", 7, 7, fanout=f))
-            for f in ("auto", "always", "never")]
-    pd.testing.assert_frame_equal(outs[0], outs[1])
-    pd.testing.assert_frame_equal(outs[0], outs[2])
+    shipped = _collect(api.forecast_batch(spark, metrics, "ETS", 7, 7))
+    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", 1)
+    low = api.forecast_batch(spark, metrics, "ETS", 7, 7)
+    assert "FlatMapGroupsInPandas" in low._jdf.queryExecution().toString()
+    pd.testing.assert_frame_equal(shipped, _collect(low))

@@ -6,22 +6,6 @@ import numpy as np
 import pytest
 
 
-def test_forecast_parquet_sink_roundtrip(spark, sf_dir, tmp_path):
-    from qrapids_forecast_r_script_spark.forecast.sinks import (
-        read_forecasts, write_forecasts)
-    from qrapids_forecast_r_script_spark.forecast.queries import QUERIES
-    df = QUERIES["forecast_snaive_events"](spark, sf_dir)
-    path = str(tmp_path / "fc")
-    write_forecasts(df, path)
-    back = read_forecasts(spark, path, name="purchase")
-    assert back.count() == 14
-    # partition pruning reaches the file listing
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    all_back = read_forecasts(spark, path)
-    assert all_back.count() == df.count()
-
-
 def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     """LSH candidates must be a subset of the corpus with correct cosines:
     every (query, neighbor, cosine) in the ANN result appears with the

@@ -14,7 +14,8 @@ so this tool is the pre-flight gate for the driver: both sides are pulled
 through Arrow (``DataFrame.toArrow()`` / duckdb ``.arrow()``), converted
 to pandas, tz-stripped, then compared by dtype family and EXACT values.
 
-Usage:  python tools/strict_audit.py [N]    # audit first N queries (default 50)
+Usage:  python tools/strict_audit.py [N]    # first N queries (default 50)
+        python tools/strict_audit.py name [name ...]    # only these
 """
 
 from __future__ import annotations
