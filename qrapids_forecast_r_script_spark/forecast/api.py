@@ -119,6 +119,15 @@ def forecast_batch(spark: SparkSession, metrics: DataFrame, method: str,
         longest = (metrics.groupBy("name", "index").count()
                    .agg(F.max("count")).first()[0])
         if (longest or 0) >= FANOUT_POINT_THRESHOLD:
+            if longest > MAX_SERIES_LENGTH:
+                # the fan-outs cap JVM-side (hybrid_fanout._assemble_series),
+                # where no per-series warning can be logged; the cap is
+                # never silent, so say it here once per batch
+                import logging
+                logging.getLogger(__name__).warning(
+                    "%s batch: longest series has %d points; truncating "
+                    "every series over the reference's %d-point cap "
+                    "(R:28)", method_u, longest, MAX_SERIES_LENGTH)
             if method_u == "HYBRID":
                 from .hybrid_fanout import hybrid_fanout_batch
                 return hybrid_fanout_batch(spark, metrics, freq, hor)

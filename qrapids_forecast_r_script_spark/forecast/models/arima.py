@@ -306,15 +306,6 @@ class ArimaModel:
         self.arpoly = arpoly                  # on differenced series
         self.mapoly = mapoly
 
-    @property
-    def method(self) -> str:
-        p, d, q = self.order
-        P, D, Q = self.seasonal_order
-        s = f"ARIMA({p},{d},{q})"
-        if self.m > 1 and (P or D or Q):
-            s += f"({P},{D},{Q})[{self.m}]"
-        return s
-
     def forecast(self, horizon: int) -> dict:
         p, d, q = self.order
         P, D, Q = self.seasonal_order

@@ -119,10 +119,6 @@ class BaggedETSModel:
         self.m = m
         self.members = members      # fitted ETSModel per bootstrap replicate
 
-    @property
-    def method(self) -> str:
-        return "BaggedETS"
-
     def forecast(self, horizon: int) -> dict:
         # members contribute POINT forecasts only (the envelope is the
         # min/max across members) — point_forecast skips the M-seasonal

@@ -108,12 +108,3 @@ def seeded_rng(*key_parts) -> np.random.Generator:
     digest = hashlib.md5("|".join(map(str, key_parts)).encode()).digest()
     seed = int.from_bytes(digest[:4], "little")
     return np.random.default_rng(seed)
-
-
-def linreg_slope(y: np.ndarray) -> tuple[float, float]:
-    """OLS intercept+slope of y on 0..n-1."""
-    n = len(y)
-    t = np.arange(n, dtype=float)
-    A = np.column_stack([np.ones(n), t])
-    coef, *_ = np.linalg.lstsq(A, y, rcond=None)
-    return float(coef[0]), float(coef[1])

@@ -164,11 +164,6 @@ class ETSModel:
         self.aicc = aicc_val
         self.resid = resid
 
-    @property
-    def method(self) -> str:
-        t = {"N": "N", "A": "A", "Ad": "Ad"}[self.trend]
-        return f"ETS(A,{t},{self.seasonal})"
-
     def point_forecast(self, horizon: int) -> np.ndarray:
         """Point forecast only — no interval simulation.  Ensemble callers
         (BaggedETS members, Hybrid CV folds) read just the mean; running

@@ -102,10 +102,6 @@ class HybridModel:
         self.models = models           # {letter: fitted model}
         self.weights = weights         # {letter: weight}, sums to 1
 
-    @property
-    def method(self) -> str:
-        return "Hybrid(" + "".join(sorted(self.models)) + ")"
-
     def forecast(self, horizon: int) -> dict:
         bands = {}
         for letter, model in self.models.items():

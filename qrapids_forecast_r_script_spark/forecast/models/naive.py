@@ -28,10 +28,6 @@ class NaiveFamilyModel:
         self.m = max(1, int(m))
         self.kind = kind
 
-    @property
-    def method(self) -> str:
-        return self.kind.upper()
-
     def forecast(self, horizon: int) -> dict:
         y, m, n = self.y, self.m, len(self.y)
         h = np.arange(1, horizon + 1, dtype=float)

@@ -18,6 +18,9 @@ import numpy as np
 
 from .common import bands_from_paths, seeded_rng
 
+# simulated future paths behind the PI=TRUE bands (R:293)
+_N_PATHS = 1000
+
 
 def _yule_walker_order(y: np.ndarray, max_p: int = 10) -> int:
     """AR order by Yule-Walker + AIC (R's ar() default selection)."""
@@ -99,15 +102,6 @@ class NNModel:
         self.sd = sd
         self.resid = resid
 
-    @property
-    def method(self) -> str:
-        p = sum(1 for l in self.lags if l < self.m or self.m <= 1)
-        P = len(self.lags) - p
-        size = self.nets[0].W1.shape[1] if self.nets else 1
-        if self.m > 1 and P:
-            return f"NNAR({p},{P},{size})[{self.m}]"
-        return f"NNAR({p},{size})"
-
     def _predict_next(self, history: np.ndarray) -> float:
         x = np.array([(history[-lag] - self.mu) / self.sd for lag in self.lags])
         preds = [net.predict(x[None, :])[0] for net in self.nets]
@@ -124,16 +118,15 @@ class NNModel:
             hist.append(nxt)
         return mean
 
-    def forecast(self, horizon: int, n_paths: int = 1000,
-                 seed_key=("nn",)) -> dict:
+    def forecast(self, horizon: int, seed_key=("nn",)) -> dict:
         mean = self.point_forecast(horizon)
         # PI=TRUE (R:293): simulate paths with bootstrapped residuals
         rng = seeded_rng(*seed_key, "nn-sim")
         resid = self.resid[np.isfinite(self.resid)]
         if len(resid) == 0:
             resid = np.array([0.0])
-        paths = np.empty((n_paths, horizon))
-        for i in range(n_paths):
+        paths = np.empty((_N_PATHS, horizon))
+        for i in range(_N_PATHS):
             sim_hist = list(self.y)
             shocks = rng.choice(resid, size=horizon, replace=True)
             for h in range(horizon):

@@ -68,10 +68,6 @@ class ProphetLikeModel:
         self.y_scale = y_scale
         self.season_spec = season_spec  # [(period_days, order), ...]
 
-    @property
-    def method(self) -> str:
-        return "ProphetLike"
-
     def _design(self, t_days: np.ndarray) -> np.ndarray:
         cols = []
         for period, order in self.season_spec:

@@ -91,10 +91,6 @@ class STLModel:
         self.remainder = remainder
         self.ets = ets
 
-    @property
-    def method(self) -> str:
-        return "STL+ETS(A,N,N)" if self.m <= 1 else "STL+ETS"
-
     def forecast(self, horizon: int) -> dict:
         # a model pickled before the ETS fit moved into fit_stl has no
         # ``ets``: refit it, which is deterministic, so bands are identical

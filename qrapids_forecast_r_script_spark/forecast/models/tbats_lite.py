@@ -143,10 +143,6 @@ class TbatsLiteModel:
         p, q, phi, theta, e_hist, a_hist = self.arma
         return _arma_error_forecast(phi, theta, e_hist, a_hist, horizon)
 
-    @property
-    def method(self) -> str:
-        return "TBATSLite"
-
     def _trig(self, t_idx: np.ndarray) -> np.ndarray:
         if not self.k:
             return np.zeros(len(t_idx))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .common import Z80, Z95, bands_from_sigma, nelder_mead
+from .common import bands_from_sigma, nelder_mead
 
 
 def _seasonal_indices(y: np.ndarray, m: int) -> np.ndarray:
@@ -54,10 +54,6 @@ class ThetaModel:
         self.level = level          # final SES level on adjusted series
         self.sigma = sigma
         self.drift = drift          # half the OLS slope (theta combination)
-
-    @property
-    def method(self) -> str:
-        return "Theta"
 
     def forecast(self, horizon: int) -> dict:
         alpha = self.alpha

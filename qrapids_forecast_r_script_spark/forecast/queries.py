@@ -277,9 +277,13 @@ def _indexed_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared per-series time scaffold: every metric row plus its
     0-based position ``t``, series length ``n``, and seasonal lag
     ``lag7`` — the ONE definition of the holdout geometry used by
-    :func:`_holdout_preds`, :func:`rolling_origin_backtest`, and
-    :func:`forecast_mase_scores` (a diverging copy of this frame would
-    silently desync a scorer from the preds it scores)."""
+    :func:`_holdout_preds`, :func:`rolling_origin_backtest`,
+    :func:`forecast_mase_scores`, :func:`conformal_snaive_intervals`,
+    :func:`conformal_coverage_backtest`,
+    :func:`interval_score_backtest`, :func:`theil_u2_backtest` (which
+    adds ``y_prev``) and :func:`boxcox_guerrero_lambda` (a diverging
+    copy of this frame would silently desync a scorer from the preds it
+    scores)."""
     from pyspark.sql.window import Window
 
     metrics = _metrics(spark, sf_dir)
@@ -629,14 +633,7 @@ def conformal_snaive_intervals(spark: SparkSession, sf_dir: str
     == DuckDB `quantile_cont`, both type-7 interpolation), and a
     horizon explode whose point forecasts repeat the final observed
     week — the closed-form SNAIVE the oracle already models."""
-    from pyspark.sql.window import Window
-    metrics = _metrics(spark, sf_dir)
-    w = Window.partitionBy("name", "index").orderBy("evaluationDate")
-    seq = (metrics
-           .withColumn("t", F.row_number().over(w) - 1)
-           .withColumn("n", F.count(F.lit(1)).over(
-               Window.partitionBy("name", "index")))
-           .withColumn("lag7", F.lag("value", 7).over(w)))
+    seq = _indexed_series(spark, sf_dir)
     calib = (seq.where((F.col("t") >= F.col("n") - (_CONF_CAL + _CONF_H))
                        & (F.col("t") < F.col("n") - _CONF_H)
                        & F.col("lag7").isNotNull())
@@ -1505,14 +1502,7 @@ def conformal_coverage_backtest(spark: SparkSession, sf_dir: str
     per-series 7-point percentile, one per-series aggregate.  The
     SNAIVE point for an eval row is its own lag-7 value (the base-week
     observation), so no explicit forecast join is needed."""
-    from pyspark.sql.window import Window
-    metrics = _metrics(spark, sf_dir)
-    w = Window.partitionBy("name", "index").orderBy("evaluationDate")
-    seq = (metrics
-           .withColumn("t", F.row_number().over(w) - 1)
-           .withColumn("n", F.count(F.lit(1)).over(
-               Window.partitionBy("name", "index")))
-           .withColumn("lag7", F.lag("value", 7).over(w)))
+    seq = _indexed_series(spark, sf_dir)
     lo = F.col("n") - (2 * _CONF_CAL + _CONF_H)
     hi = F.col("n") - (_CONF_CAL + _CONF_H)
     calib = (seq.where((F.col("t") >= lo) & (F.col("t") < hi)
@@ -1725,14 +1715,7 @@ def interval_score_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series mean, so aggregation order cannot move the reported
     skill.  Cost: the holdout-backtest envelope (one window pass, one
     per-series train aggregate, one join, one aggregate)."""
-    from pyspark.sql.window import Window
-    metrics = _metrics(spark, sf_dir)
-    w = Window.partitionBy("name", "index").orderBy("evaluationDate")
-    seq = (metrics
-           .withColumn("t", F.row_number().over(w) - 1)
-           .withColumn("n", F.count(F.lit(1)).over(
-               Window.partitionBy("name", "index")))
-           .withColumn("lag7", F.lag("value", 7).over(w)))
+    seq = _indexed_series(spark, sf_dir)
     train_sd = (seq.where((F.col("t") < F.col("n") - 7)
                           & F.col("lag7").isNotNull())
                 .groupBy("name", "index")
@@ -2939,7 +2922,6 @@ def series_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny); for multi-year spines the O(n log n) merge-sort inversion
     count replaces the pair join (the `parts_skyline_frontier`
     sort-scan discipline)."""
-    from pyspark.sql.window import Window
 
     metrics = _metrics(spark, sf_dir)
     ref = (metrics.where(F.col("name") == "purchase")
@@ -5165,13 +5147,8 @@ def theil_u2_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window + the four-way union + one grouped
     aggregate per (series, method)."""
     from pyspark.sql.window import Window
-    metrics = _metrics(spark, sf_dir)
     w = Window.partitionBy("name", "index").orderBy("evaluationDate")
-    seq = (metrics
-           .withColumn("t", F.row_number().over(w) - 1)
-           .withColumn("n", F.count(F.lit(1)).over(
-               Window.partitionBy("name", "index")))
-           .withColumn("lag7", F.lag("value", 7).over(w))
+    seq = (_indexed_series(spark, sf_dir)
            .withColumn("y_prev", F.lag("value", 1).over(w)))
     train = (seq.where(F.col("t") < F.col("n") - 7)
              .groupBy("name", "index")
@@ -5295,13 +5272,7 @@ def boxcox_guerrero_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: blocks are series-length-bounded, the grid is a 31-row
     literal broadcast — cost is one grouped aggregate + a bounded
     fan-out, partitioned by (name, index)."""
-    from pyspark.sql.window import Window
-    metrics = _metrics(spark, sf_dir)
-    w = Window.partitionBy("name", "index").orderBy("evaluationDate")
-    seq = (metrics
-           .withColumn("t", F.row_number().over(w) - 1)
-           .withColumn("n", F.count(F.lit(1)).over(
-               Window.partitionBy("name", "index"))))
+    seq = _indexed_series(spark, sf_dir)
     nyr = F.floor(F.col("n") / 7)
     blocks = (seq.where(F.col("t") >= F.col("n") - nyr * 7)
               .withColumn("blk", F.floor(

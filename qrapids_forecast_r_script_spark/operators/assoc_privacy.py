@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import md5_int
 from ..sources import load_table
 
 _MIN_SUPPORT = 2      # minimum co-occurrence count for a reported pair
@@ -125,8 +126,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     counts = (ev.groupBy("event_type")
               .agg(F.count(F.lit(1)).alias("n_events")))
-    h = F.conv(F.substring(F.md5("event_type"), 1, 8), 16, 10) \
-         .cast("bigint")
+    h = md5_int("event_type")
     # (k+1)/(m+2) with m an odd prime: u stays strictly inside (0, 1)
     # AND can never be exactly 0.5 (2k+2 = m+2 needs k = m/2, not an
     # integer), so signum(u-1/2) never returns 0 — a 0.5 draw would

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import md5_int
 from ..sources import load_table
 
 # (child table, fk column, parent table, pk column) — the star-schema
@@ -801,9 +802,7 @@ def missing_value_imputation(spark: SparkSession, sf_dir: str
     aggregate, one broadcast of the (tiny) per-group fill table —
     map-side throughout."""
     ev = load_table(spark, sf_dir, "events")
-    bucket = F.conv(F.substring(
-        F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10) \
-        .cast("long") % _IMP_MOD
+    bucket = md5_int(F.col("event_id").cast("string")) % _IMP_MOD
     vu = F.round(F.round(F.col("value"), 6) * 1_000_000, 0).cast("long")
     masked = ev.select(
         "event_type", vu.alias("vu"),

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..sources import load_table
-from .dedup import _BANDS_UNION, _SIG_CTE, minhash_lsh_pairs
+from .dedup import _BANDS_UNION, _SIG_CTE, _sym_edges, minhash_lsh_pairs
 
 _PR_ITERS = 2
 _PR_D = 0.85          # damping (written as CAST(0.85 AS DOUBLE) in SQL)
@@ -44,11 +44,7 @@ def doc_graph_pagerank(spark: SparkSession, sf_dir: str,
     find boilerplate families worth manual review."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     # r9 (guide §2.4): deg and the per-iteration ranks are each
     # referenced 2-3× per power iteration — uncut, the final plan held
     # ~3^k copies of the full chain (14 parquet scans).  Node-grain
@@ -148,11 +144,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str,
     `doc_graph_modularity` scores."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     labels = docs.select("doc_id", F.col("doc_id").alias("lbl"))
     for _ in range(iters):
         nb = (sym.join(labels.select(F.col("doc_id").alias("dst"),
@@ -372,11 +364,7 @@ def doc_graph_link_prediction(spark: SparkSession,
     same budget `doc_graph_triangles` pays; existing edges drop via one
     anti-join; the result is a TakeOrdered top-k, never a full sort."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     deg = (sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
            # only wedge MIDPOINTS consume 1/ln(deg) and a midpoint has
            # ≥ 2 edges by construction; filtering first keeps ln(1)=0
@@ -476,11 +464,7 @@ def doc_graph_kcore(spark: SparkSession, sf_dir: str, k: int = _KC_K,
     shuffle) + one anti-join — no driver collect anywhere; the alive
     set shrinks monotonically, so later rounds cost less."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     deg0 = (sym.groupBy(F.col("src").alias("doc_id"))
             .agg(F.count(F.lit(1)).alias("deg0")))
     alive = deg0.select("doc_id")
@@ -589,11 +573,7 @@ def doc_graph_eigencentrality(spark: SparkSession, sf_dir: str,
     is the only knob; isolated docs are excluded by construction
     (their score is identically 0)."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     x = (sym.select(F.col("src").alias("doc_id")).distinct()
          .withColumn("xm", F.lit(_EC_U).cast("long")))
     for _ in range(iters):
@@ -804,14 +784,7 @@ def doc_graph_bfs_reachability(spark: SparkSession, sf_dir: str,
     frontier against the edge list — identical physical work to one
     hand-written BFS round; depth is the knob."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst"))))
-    # materialize the edge list ONCE: each recursion level re-evaluates
-    # the referenced plan, and the MinHash chain re-ran per level
-    # (measured 8.8 s -> sub-second at sf0.1 with the checkpoint)
-    sym = sym.localCheckpoint(eager=True)
+    sym = _sym_edges(pairs)
     sym.createOrReplaceTempView("qr_bfs_sym")
     return spark.sql(f"""
         WITH RECURSIVE walk(doc_id, dist) AS (
@@ -969,12 +942,7 @@ def doc_graph_closeness_sampled(spark: SparkSession, sf_dir: str,
     Scale: one recursion, k seeds ride the same per-level hash join —
     frontier rows are (seed × ball) bounded; k is the estimator knob."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst"))))
-    # checkpoint before the recursion: see doc_graph_bfs_reachability
-    sym = sym.localCheckpoint(eager=True)
+    sym = _sym_edges(pairs)
     sym.createOrReplaceTempView("qr_close_sym")
     return spark.sql(f"""
         WITH RECURSIVE seeds AS (
@@ -1091,12 +1059,7 @@ def doc_graph_shortest_paths(spark: SparkSession, sf_dir: str,
     pairs = minhash_lsh_pairs(spark, sf_dir)
     wt = (F.lit(101) - F.round(F.col("est_jaccard") * 100, 0)) \
         .cast("bigint")
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"), wt.alias("wt"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst"), wt.alias("wt"))))
-    # checkpoint before the recursion: see doc_graph_bfs_reachability
-    sym = sym.localCheckpoint(eager=True)
+    sym = _sym_edges(pairs, wt.alias("wt"))
     sym.createOrReplaceTempView("qr_sp_edges")
     return spark.sql(f"""
         WITH RECURSIVE walk(doc_id, dist, hops) AS (
@@ -1181,14 +1144,7 @@ def doc_graph_assortativity(spark: SparkSession,
     the correlation is one aggregate over edges with two broadcast
     degree joins."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # r9 (guide §2.4): the uncut sym was re-derived per reference (deg +
-    # the correlation stream — 24 parquet scans planned); same
-    # localCheckpoint cut as the sibling graph queries.
-    sym = (pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"))
-           .union(pairs.select(F.col("doc_b").alias("src"),
-                               F.col("doc_a").alias("dst")))
-           .localCheckpoint())
+    sym = _sym_edges(pairs)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     j = (sym.join(F.broadcast(deg), "src")
          .withColumnRenamed("d", "dx")

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources import load_table
+from ..functions import md5_int
+from ..sources import load_table, orders_with_nation
 
 
 def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,6 +181,24 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.sum("n_transitions").over(wf), 6))
 
 
+def _user_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, t, converted): days from a user's first event to their
+    first purchase (``converted``), else to their last event (censored)
+    — the survival frame the Kaplan-Meier, Nelson-Aalen and log-rank
+    queries share."""
+    ev = load_table(spark, sf_dir, "events")
+    return (ev.groupBy("user_id")
+            .agg(F.min(F.to_date("ts")).alias("d0"),
+                 F.max(F.to_date("ts")).alias("d1"),
+                 F.min(F.when(F.col("event_type") == "purchase",
+                              F.to_date("ts"))).alias("p0"))
+            .select("user_id",
+                    F.coalesce(F.datediff("p0", "d0"),
+                               F.datediff("d1", "d0"))
+                    .cast("bigint").alias("t"),
+                    F.col("p0").isNotNull().alias("converted")))
+
+
 def user_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier estimate of TIME TO FIRST PURCHASE from first touch
     (Kaplan & Meier 1958) — the conversion-time curve behind activation
@@ -203,19 +222,7 @@ def user_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (user)-keyed aggregate over the fact table, then every
     window runs over |distinct t| rows — bounded by the observation
     span in days, not the population."""
-    from pyspark.sql.window import Window
-    ev = load_table(spark, sf_dir, "events")
-    users = (ev.groupBy("user_id")
-             .agg(F.min(F.to_date("ts")).alias("d0"),
-                  F.max(F.to_date("ts")).alias("d1"),
-                  F.min(F.when(F.col("event_type") == "purchase",
-                               F.to_date("ts"))).alias("p0"))
-             .select("user_id",
-                     F.coalesce(F.datediff("p0", "d0"),
-                                F.datediff("d1", "d0"))
-                     .cast("bigint").alias("t"),
-                     F.col("p0").isNotNull().alias("converted")))
-    return km_curve(users)
+    return km_curve(_user_time_to_purchase(spark, sf_dir))
 
 
 def km_curve(users: DataFrame) -> DataFrame:
@@ -273,8 +280,7 @@ def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     value is bit-stable under any partitioning.  At 100 TB: the
     per-user conversion aggregate is the only wide stage."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     users = (ev.groupBy("user_id")
              .agg(F.max(F.when((F.col("event_type") == "purchase")
                                & (F.col("value") > 200), 1)
@@ -600,20 +606,8 @@ def logrank_cohort_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost), then every window runs over |distinct conversion days| rows
     — bounded by the observation span, not the population."""
     from pyspark.sql.window import Window
-    ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    users = (ev.groupBy("user_id")
-             .agg(F.min(F.to_date("ts")).alias("d0"),
-                  F.max(F.to_date("ts")).alias("d1"),
-                  F.min(F.when(F.col("event_type") == "purchase",
-                               F.to_date("ts"))).alias("p0"))
-             .select("user_id",
-                     F.coalesce(F.datediff("p0", "d0"),
-                                F.datediff("d1", "d0"))
-                     .cast("bigint").alias("t"),
-                     F.col("p0").isNotNull().alias("converted"))
-             .withColumn("arm", arm))
+    arm = md5_int(F.col("user_id").cast("string")) % 2
+    users = _user_time_to_purchase(spark, sf_dir).withColumn("arm", arm)
     per_t = (users.groupBy("t")
              .agg(F.count(F.when(F.col("arm") == 0, 1)).alias("l1"),
                   F.count(F.when((F.col("arm") == 0)
@@ -1183,8 +1177,7 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free).  Scale: one user-keyed aggregate (the only wide
     stage), two global power-sum reductions, one broadcast θ."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     pre = F.dayofmonth("ts") < 16
     users = (ev.groupBy("user_id")
              .agg(F.round(F.coalesce(
@@ -1381,8 +1374,7 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square is one double division.  One distinct (segment, user)
     aggregate and a 6-row reduce."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     seg_users = (ev.select(F.col("event_type").alias("segment"),
                            "user_id")
                  .unionAll(ev.select(F.lit("_overall").alias("segment"),
@@ -1528,6 +1520,40 @@ ORACLES["session_sequence_pairs"] = f"""
 QUERIES["session_sequence_pairs"] = session_sequence_pairs
 
 
+def _user_purchase_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, cents, arm): every user's exact integer purchase cents
+    (0 for users who never purchased) and their md5 hash arm — the
+    metric the per-user A/B tests compare."""
+    ev = load_table(spark, sf_dir, "events")
+    arm = md5_int(F.col("user_id").cast("string")) % 2
+    return (ev.groupBy("user_id")
+            .agg(F.coalesce(
+                F.sum(F.when(F.col("event_type") == "purchase",
+                             F.round(F.col("value") * 100, 0)
+                             .cast("long"))), F.lit(0).cast("long"))
+                .alias("cents"))
+            .withColumn("arm", arm))
+
+
+def _cents_tier_ranks(users: DataFrame) -> DataFrame:
+    """Distinct-value tiers of ``users.cents`` with their size ``t``,
+    arm-0 count ``t_a`` and tie-averaged rank ``avg_rank`` — ranks over
+    value cardinality instead of a global per-user window."""
+    tiers = (users.groupBy("cents")
+             .agg(F.count(F.lit(1)).alias("t"),
+                  F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
+                  .alias("t_a")))
+    w = (Window.orderBy("cents")
+         .rowsBetween(Window.unboundedPreceding, -1))
+    return (tiers
+            .withColumn("cum_before",
+                        F.coalesce(F.sum("t").over(w),
+                                   F.lit(0).cast("long")))
+            .withColumn("avg_rank",
+                        F.col("cum_before")
+                        + (F.col("t") + 1) / F.lit(2.0)))
+
+
 def ab_mannwhitney_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test on per-user purchase
     revenue between the two hash arms — the NONPARAMETRIC sibling of
@@ -1551,30 +1577,7 @@ def ab_mannwhitney_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rank SUM per arm folds back with exact half-integer
     arithmetic.  Three narrow aggregates, one tiny sort, one-row
     output."""
-    from pyspark.sql.window import Window
-    ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    users = (ev.groupBy("user_id")
-             .agg(F.coalesce(
-                 F.sum(F.when(F.col("event_type") == "purchase",
-                              F.round(F.col("value") * 100, 0)
-                              .cast("long"))), F.lit(0).cast("long"))
-                 .alias("cents"))
-             .withColumn("arm", arm))
-    tiers = (users.groupBy("cents")
-             .agg(F.count(F.lit(1)).alias("t"),
-                  F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-                  .alias("t_a")))
-    w = (Window.orderBy("cents")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    ranked = (tiers
-              .withColumn("cum_before",
-                          F.coalesce(F.sum("t").over(w),
-                                     F.lit(0).cast("long")))
-              .withColumn("avg_rank",
-                          F.col("cum_before")
-                          + (F.col("t") + 1) / F.lit(2.0)))
+    ranked = _cents_tier_ranks(_user_purchase_cents(spark, sf_dir))
     agg = ranked.agg(
         F.sum("t_a").alias("n_a"),
         F.sum(F.col("t") - F.col("t_a")).alias("n_b"),
@@ -1686,8 +1689,7 @@ def ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined), one 2-row arm aggregate, one-row output — the
     experimentation envelope, no extra shuffle for the panel."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     cents = F.round(F.col("value") * 100, 0).cast("long")
     is_purchase = F.col("event_type") == "purchase"
     post = F.col("ts") >= F.lit(_DID_SPLIT).cast("timestamp")
@@ -1800,9 +1802,7 @@ def revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("r", "n",
                      F.explode(F.sequence(F.lit(1), F.col("n")))
                      .alias("j")))
-    pick = (F.conv(F.substring(
-        F.md5(F.concat_ws("_", F.col("r"), F.col("j"))), 1, 8), 16, 10)
-        .cast("bigint") % F.col("n") + 1)
+    pick = md5_int(F.concat_ws("_", F.col("r"), F.col("j"))) % F.col("n") + 1
     reps = (draws.withColumn("t", pick)
             .join(F.broadcast(idx), "t")
             .groupBy("r")
@@ -2184,8 +2184,7 @@ def ab_sequential_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny spine window — the daily-report envelope."""
     from pyspark.sql.window import Window
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     daily = (ev.where(F.col("event_type") == "purchase")
              .withColumn("arm", arm)
              .groupBy(F.to_date("ts").alias("day"), "arm")
@@ -2342,8 +2341,7 @@ def ips_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
               .limit(1).select(F.col("a").alias("pi_arm")))
     w = Window.orderBy("a")
     idx = arm.select("a").withColumn("i", F.row_number().over(w) - 1)
-    uhash = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                                1, 8), 16, 10).cast("bigint") % n_arms)
+    uhash = md5_int(F.col("user_id").cast("string")) % n_arms
     p_greedy = (rows.crossJoin(F.broadcast(greedy))
                 .select(F.lit("global_greedy").alias("policy"),
                         "a", "r", F.col("pi_arm")))
@@ -2520,13 +2518,8 @@ def ab_bh_fdr_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, one 25-row window + a 25-row literal join — the
     whole correction is dimension-sized after the scan."""
     from pyspark.sql.window import Window
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    arm = (F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    arm = md5_int(F.col("o_custkey").cast("string")) % 2
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey", arm.alias("arm"),
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("decimal(38,0)").alias("yc")))
@@ -2979,16 +2972,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage); the hazard table is |distinct t|-sized — observation
     span, not population."""
     from pyspark.sql.window import Window
-    ev = load_table(spark, sf_dir, "events")
-    users = (ev.groupBy("user_id")
-             .agg(F.min(F.to_date("ts")).alias("d0"),
-                  F.max(F.to_date("ts")).alias("d1"),
-                  F.min(F.when(F.col("event_type") == "purchase",
-                               F.to_date("ts"))).alias("p0"))
-             .select(F.coalesce(F.datediff("p0", "d0"),
-                                F.datediff("d1", "d0"))
-                     .cast("bigint").alias("t"),
-                     F.col("p0").isNotNull().alias("converted")))
+    users = _user_time_to_purchase(spark, sf_dir)
     total = users.agg(F.count(F.lit(1)).alias("n_total"))
     per_t = (users.groupBy("t")
              .agg(F.count(F.lit(1)).alias("n_leaving"),
@@ -3082,12 +3066,8 @@ def mh_pooled_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one orders scan with a broadcast customer-nation join,
     one 25-key aggregate — the correction is dimension-sized."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
                     .alias("exposed"), cents.alias("yc")))
@@ -3188,11 +3168,7 @@ def james_stein_nation_means(spark: SparkSession,
 
     Scale: one orders scan + broadcast nation join + 25-key moment
     aggregate; the shrinkage algebra is dimension-sized."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("decimal(38,0)").alias("yc")))
@@ -3610,6 +3586,27 @@ _HMM_E1 = (0.3, 0.7)            # P(high | calm), P(high | busy)
 # still run.  State size is O(series length) per frontier row, the
 # explicit trade (the join form remains the right shape for
 # unbounded-length series; these walks are day-grid-bounded).
+def _hmm_obs_view(spark: SparkSession, sf_dir: str, view: str,
+                  cols: tuple[str, ...] = ("t", "day", "o")) -> None:
+    """Register ``view`` as the HMM observation string: one row per
+    purchase day with its 1-based position ``t`` and ``o`` = 1 when the
+    day's purchase count is above the median day's, eagerly cut so the
+    recursion reads a materialized relation.  Each recursive-CTE query
+    names its own view (a shared name would race under concurrent
+    queries)."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = (ev.where(F.col("event_type") == "purchase")
+             .groupBy(F.to_date("ts").alias("day"))
+             .agg(F.count(F.lit(1)).alias("c")))
+    med = daily.agg(F.expr("percentile(c, 0.5)").alias("med"))
+    obs = (daily.crossJoin(F.broadcast(med))
+           .select(F.row_number().over(Window.orderBy("day"))
+                   .alias("t"), "day",
+                   (F.col("c") > F.col("med")).cast("int").alias("o")))
+    obs.select(*cols).localCheckpoint(eager=True) \
+        .createOrReplaceTempView(view)
+
+
 _OARR = "oarr"
 _OARR_AGG = ("transform(array_sort(collect_list(struct(t, o))),"
              " x -> x.o)")
@@ -3648,16 +3645,7 @@ def hmm_forward_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join form — the measured 0.12-0.15 s/level scheduling floor).
     The per-step arithmetic is UNCHANGED, so every row is
     bit-identical to the join-form walk the DuckDB oracle runs."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.to_date("ts").alias("day"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    med = daily.agg(F.expr("percentile(c, 0.5)").alias("med"))
-    obs = (daily.crossJoin(F.broadcast(med))
-           .select(F.row_number().over(Window.orderBy("day"))
-                   .alias("t"), "day",
-                   (F.col("c") > F.col("med")).cast("int").alias("o")))
-    obs.localCheckpoint(eager=True).createOrReplaceTempView("qr_hmm_obs")
+    _hmm_obs_view(spark, sf_dir, "qr_hmm_obs")
     a00, a01, a10, a11 = _HMM_A
     e0, e1 = _HMM_E1
     ob0 = (f"CASE element_at({_OARR}, 1) WHEN 1 THEN {e0}D"
@@ -3788,13 +3776,8 @@ def meta_analysis_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one orders scan + broadcast nation join + 25-key moment
     aggregate — the meta-analysis itself is dimension-sized."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    arm = (F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    arm = md5_int(F.col("o_custkey").cast("string")) % 2
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey", arm.alias("arm"),
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("decimal(38,0)").alias("yc")))
@@ -3952,17 +3935,7 @@ def hmm_smoothed_posterior(spark: SparkSession,
 
     Scale: two recursions of constant state over the day spine —
     same cost shape as one; the join is day-grid-sized."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.to_date("ts").alias("day"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    med = daily.agg(F.expr("percentile(c, 0.5)").alias("med"))
-    obs = (daily.crossJoin(F.broadcast(med))
-           .select(F.row_number().over(Window.orderBy("day"))
-                   .alias("t"), "day",
-                   (F.col("c") > F.col("med")).cast("int").alias("o")))
-    obs.localCheckpoint(eager=True).createOrReplaceTempView(
-        "qr_hmm2_obs")
+    _hmm_obs_view(spark, sf_dir, "qr_hmm2_obs")
     a00, a01, a10, a11 = _HMM_A
     e0, e1 = _HMM_E1
     # r10 _REC_ARRAY_STATE (module note): both walks carry the obs
@@ -4132,8 +4105,7 @@ def ab_quantile_treatment_effects(spark: SparkSession,
     KLL-sketch `approx_percentile` is the stated 100 TB swap, same
     output shape); the decile table is 9 rows."""
     orders = load_table(spark, sf_dir, "orders")
-    arm = (F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("o_custkey").cast("string")) % 2
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     rows = orders.select(arm.alias("arm"), cents.alias("yc"))
     qs = ", ".join(str(q) for q in _QTE_QS)
@@ -4204,11 +4176,7 @@ def ab_power_mde_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan + broadcast nation join + 25-key moment
     aggregate; the design table is dimension-sized."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("decimal(38,0)").alias("yc")))
@@ -4291,17 +4259,7 @@ def hmm_baum_welch_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the xi table is (days x 4) — two recursions plus one
     dimension-sized join-and-reduce; iterate K times for K EM steps
     (the unroll knob, as in `doc_length_gmm`)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.to_date("ts").alias("day"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    med = daily.agg(F.expr("percentile(c, 0.5)").alias("med"))
-    obs = (daily.crossJoin(F.broadcast(med))
-           .select(F.row_number().over(Window.orderBy("day"))
-                   .alias("t"),
-                   (F.col("c") > F.col("med")).cast("int").alias("o")))
-    obs.localCheckpoint(eager=True).createOrReplaceTempView(
-        "qr_hmm3_obs")
+    _hmm_obs_view(spark, sf_dir, "qr_hmm3_obs", ("t", "o"))
     a00, a01, a10, a11 = _HMM_A
     e0, e1 = _HMM_E1
     # r10 _REC_ARRAY_STATE (module note): join-free walk bodies — the
@@ -4636,18 +4594,7 @@ def hmm_viterbi_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays per series — O(days) state instead of a second pass; for
     very long series the standard trade is checkpointed backpointer
     tables + a backward walk."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.to_date("ts").alias("day"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    from pyspark.sql.window import Window
-    med = daily.agg(F.expr("percentile(c, 0.5)").alias("med"))
-    obs = (daily.crossJoin(F.broadcast(med))
-           .select(F.row_number().over(Window.orderBy("day"))
-                   .alias("t"), "day",
-                   (F.col("c") > F.col("med")).cast("int").alias("o")))
-    obs.localCheckpoint(eager=True).createOrReplaceTempView(
-        "qr_hmm4_obs")
+    _hmm_obs_view(spark, sf_dir, "qr_hmm4_obs")
     a00, a01, a10, a11 = _HMM_A
     e0, e1 = _HMM_E1
     # r10 _REC_ARRAY_STATE (see module note): the obs string rides in
@@ -5202,11 +5149,7 @@ def anova_nation_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one orders scan + broadcast nation join + 25-key moment
     aggregate; the ANOVA table is one row."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("decimal(38,0)").alias("yc")))
@@ -5323,11 +5266,7 @@ def eb_urgent_share_shrinkage(spark: SparkSession,
 
     Scale: one orders scan + broadcast nation join + 25-key count
     aggregate; the prior fit is a 25-row reduction."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    per = (orders.join(F.broadcast(cust), "o_custkey")
+    per = (orders_with_nation(spark, sf_dir)
            .groupBy("nationkey")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.count(F.when(F.col("o_orderpriority")
@@ -5663,11 +5602,7 @@ def huber_location_nations(spark: SparkSession,
     Scale: two grouped passes over the scan per IRLS step against
     broadcast per-nation scalars — the distributed-IRLS shape, steps
     the knob."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     (F.round(F.col("o_totalprice") * 100, 0)
                      .cast("long") / 100).alias("y"))
@@ -5905,11 +5840,7 @@ def levene_variance_audit(spark: SparkSession,
     Scale: one scan + broadcast median join + 25-key moment
     aggregate — the ANOVA cost shape, twice (median pass + moment
     pass)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("long").alias("yc"))
@@ -6188,8 +6119,7 @@ def ab_sprt_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, not population."""
     from pyspark.sql.window import Window
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     daily = (ev.withColumn("arm", arm)
              .where(F.col("arm") == 0)
              .groupBy(F.to_date("ts").alias("day"))
@@ -6304,12 +6234,8 @@ def kruskal_wallis_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented small-table shortcut — at 100 TB the prefix sum
     runs as the two-pass distributed prefix (`token_shard_packing`)
     over value-range partitions."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
     from pyspark.sql.window import Window
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey",
                     F.round(F.col("o_totalprice") * 100, 0)
                     .cast("long").alias("yc")))
@@ -6425,16 +6351,7 @@ def ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and df are floating, rounded at 6dp.
 
     Scale: one user-grain aggregate + one 2-row arm aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    users = (ev.groupBy("user_id")
-             .agg(F.coalesce(
-                 F.sum(F.when(F.col("event_type") == "purchase",
-                              F.round(F.col("value") * 100, 0)
-                              .cast("long"))), F.lit(0).cast("long"))
-                 .alias("cents"))
-             .withColumn("arm", arm))
+    users = _user_purchase_cents(spark, sf_dir)
     c = F.col("cents").cast("decimal(38,0)")
     a = (users.groupBy("arm")
          .agg(F.count(F.lit(1)).alias("n"),
@@ -6540,30 +6457,7 @@ def ab_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to `ab_mannwhitney_test` — value-tier aggregates
     (value cardinality, not user cardinality), one tiny ordered pass,
     one-row output."""
-    from pyspark.sql.window import Window
-    ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
-    users = (ev.groupBy("user_id")
-             .agg(F.coalesce(
-                 F.sum(F.when(F.col("event_type") == "purchase",
-                              F.round(F.col("value") * 100, 0)
-                              .cast("long"))), F.lit(0).cast("long"))
-                 .alias("cents"))
-             .withColumn("arm", arm))
-    tiers = (users.groupBy("cents")
-             .agg(F.count(F.lit(1)).alias("t"),
-                  F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-                  .alias("t_a")))
-    w = (Window.orderBy("cents")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    ranked = (tiers
-              .withColumn("cum_before",
-                          F.coalesce(F.sum("t").over(w),
-                                     F.lit(0).cast("long")))
-              .withColumn("avg_rank",
-                          F.col("cum_before")
-                          + (F.col("t") + 1) / F.lit(2.0)))
+    ranked = _cents_tier_ranks(_user_purchase_cents(spark, sf_dir))
     agg = ranked.agg(
         F.sum("t_a").alias("n_a"),
         F.sum(F.col("t") - F.col("t_a")).alias("n_b"),
@@ -6655,8 +6549,7 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_bootstrap_ci envelope), one grouped sum per replicate,
     one-row output."""
     ev = load_table(spark, sf_dir, "events")
-    arm = (F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                              1, 8), 16, 10).cast("bigint") % 2)
+    arm = md5_int(F.col("user_id").cast("string")) % 2
     daily = (ev.where(F.col("event_type") == "purchase")
              .groupBy(F.to_date("ts").alias("d"))
              .agg(F.sum(F.when(arm == 0,
@@ -6673,10 +6566,8 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = daily.select(
         "d", "diff_c",
         F.explode(F.sequence(F.lit(0), F.lit(_PERM_B - 1))).alias("b"))
-    flip = (F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.col("b").cast("string"),
-                          F.col("d").cast("string"))), 1, 8),
-        16, 10).cast("bigint") % 2)
+    flip = md5_int(F.concat_ws("|", F.col("b").cast("string"),
+                               F.col("d").cast("string"))) % 2
     reps = (grid
             .select("b", F.when(flip == 1, -F.col("diff_c"))
                     .otherwise(F.col("diff_c")).alias("sd"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions import md5_int
 from ..sources import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -172,9 +173,7 @@ def deterministic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine — which is also why this query is exactly oracle-checkable.
     """
     orders = load_table(spark, sf_dir, "orders")
-    bucket = F.conv(F.substring(
-        F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10) \
-        .cast("long") % 10
+    bucket = md5_int(F.col("o_orderkey").cast("string")) % 10
     return (orders.where(bucket == 0)
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_sampled"),

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions import md5_int
 from ..sources import load_table
 
 _SALT_BUCKETS = 16
@@ -709,10 +710,8 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     same keys and shapes."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    ob = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")),
-                            1, 8), 16, 10).cast("long") % _IJV_ORD_MOD
-    cb = F.conv(F.substring(F.md5(F.col("c_custkey").cast("string")),
-                            1, 8), 16, 10).cast("long") % _IJV_CUST_MOD
+    ob = md5_int(F.col("o_orderkey").cast("string")) % _IJV_ORD_MOD
+    cb = md5_int(F.col("c_custkey").cast("string")) % _IJV_CUST_MOD
     orders = orders.withColumn("is_delta", ob == 0)
     cust = cust.withColumn("is_delta", cb == 0)
     a_old = orders.where(~F.col("is_delta"))
@@ -774,9 +773,7 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     ev = load_table(spark, sf_dir, "events")
     erased = (cust.where(
-        F.conv(F.substring(F.md5(F.col("c_custkey").cast("string")),
-                           1, 8), 16, 10).cast("long")
-        % _ERASE_MOD == 0)
+        md5_int(F.col("c_custkey").cast("string")) % _ERASE_MOD == 0)
         .select("c_custkey").localCheckpoint())
     # r9 (guide §2.4): cut the dead-order key set too — the orders AND
     # lineitem audits each semi-join against it, so uncut the
@@ -974,18 +971,17 @@ def consistent_hash_rebalance(spark: SparkSession,
     broadcast assignments — placement never shuffles the data it
     places."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                           1, 15), 16, 10).cast("bigint")
+    h = md5_int(F.col("doc_id").cast("string"), 1, 15)
     keyed = docs.select("doc_id", h.alias("h"))
 
     def ring(n_shards):
         pts = spark.range(n_shards * _CH_VNODES).select(
             (F.col("id") % n_shards).cast("int").alias("shard"),
-            F.conv(F.substring(F.md5(F.concat_ws(
+            md5_int(F.concat_ws(
                 ":", F.lit("ring"),
                 (F.col("id") % n_shards).cast("string"),
-                (F.col("id") / n_shards).cast("int").cast("string"))),
-                1, 15), 16, 10).cast("bigint").alias("rh"))
+                (F.col("id") / n_shards).cast("int").cast("string")),
+                1, 15).alias("rh"))
         wrap = pts.orderBy("rh").limit(1).select(
             F.col("shard").alias("wrap_shard"))
         return pts, wrap

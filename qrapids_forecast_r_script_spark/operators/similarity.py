@@ -84,6 +84,18 @@ def _as_double(col: str | Column) -> Column:
     return c.cast("array<double>")
 
 
+def _top_k(scored: DataFrame, *extra: str) -> DataFrame:
+    """Each query's ``_TOP_K`` neighbors by cosine (ties: lower
+    neighbor_id first) as (query_id, rank, neighbor_id, *extra,
+    cosine)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (scored
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= _TOP_K)
+            .select("query_id", "rank", "neighbor_id", *extra, "cosine"))
+
+
 def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors for the 5 lowest vec_ids.
 
@@ -112,12 +124,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (corpus.crossJoin(F.broadcast(queries))
               .where(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id", sim.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(scored)
 
 
 def _nd_planes() -> list[list[float]]:
@@ -213,6 +220,22 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
+def _lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
+    """Random-hyperplane LSH bucket: bit i set iff ``vec`` projects
+    non-negatively onto ``planes[i]``."""
+    bits = []
+    for i, plane in enumerate(planes):
+        proj = F.aggregate(
+            F.zip_with(vec, F.array(*[F.lit(float(v)) for v in plane]),
+                       lambda x, y: x * y),
+            F.lit(0.0), lambda acc, v: acc + v)
+        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
+    out = bits[0]
+    for b in bits[1:]:
+        out = out + b
+    return out
+
+
 def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
                  dim: int = 64) -> DataFrame:
     """ANN top-k via random-hyperplane LSH: bucket = sign bits of 8 seeded
@@ -224,21 +247,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _hyperplanes(dim, n_planes)
 
-    def bucket(vec: Column) -> Column:
-        bits = []
-        for i, plane in enumerate(planes):
-            proj = F.aggregate(
-                F.zip_with(vec, F.array(*[F.lit(float(v)) for v in plane]),
-                           lambda x, y: x * y),
-                F.lit(0.0), lambda acc, v: acc + v)
-            bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
     with_bucket = (emb.select("vec_id", _as_double("embedding").alias("vec"))
-                   .withColumn("bucket", bucket(F.col("vec")))
+                   .withColumn("bucket", _lsh_bucket(F.col("vec"), planes))
                    .withColumn("vnorm", _norm(F.col("vec"))))
     queries = (with_bucket.orderBy("vec_id").limit(_N_QUERIES)
                .select(F.col("vec_id").alias("query_id"),
@@ -251,12 +261,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       sim.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(scored)
 
 
 def _ivf_assigned(spark: SparkSession, sf_dir: str,
@@ -326,12 +331,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       sim.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(scored)
 
 
 # Product quantization: m subspaces × k codes.  Both CONSTANT, so the
@@ -676,12 +676,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       sim.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(scored)
 
 
 # MaxSim multi-vector retrieval: token vectors per document (64 dims
@@ -870,14 +865,8 @@ def sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shortlist (no second corpus scan)
     cosine = F.round(_dot(F.col("qvec"), F.col("nvec"))
                      / (F.col("qnorm") * _norm(F.col("nvec"))), 6)
-    wfinal = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (short.select("query_id", "neighbor_id", "sq_score",
-                         cosine.alias("cosine"))
-            .withColumn("rank", F.row_number().over(wfinal))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "sq_score",
-                    "cosine"))
+    return _top_k(short.select("query_id", "neighbor_id", "sq_score",
+                               cosine.alias("cosine")), "sq_score")
 
 
 def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,14 +909,8 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              .where(F.col("srank") <= _MAT_SHORTLIST))
     cosine = F.round(_dot(F.col("qvec"), F.col("nvec"))
                      / (F.col("qnorm") * _norm(F.col("nvec"))), 6)
-    wfinal = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (short.select("query_id", "neighbor_id", "trunc_cosine",
-                         cosine.alias("cosine"))
-            .withColumn("rank", F.row_number().over(wfinal))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "trunc_cosine",
-                    "cosine"))
+    return _top_k(short.select("query_id", "neighbor_id", "trunc_cosine",
+                               cosine.alias("cosine")), "trunc_cosine")
 
 
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
@@ -950,21 +933,8 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _hyperplanes(dim, n_planes)
 
-    def bucket(vec: Column) -> Column:
-        bits = []
-        for i, plane in enumerate(planes):
-            proj = F.aggregate(
-                F.zip_with(vec, F.array(*[F.lit(float(v)) for v in plane]),
-                           lambda x, y: x * y),
-                F.lit(0.0), lambda acc, v: acc + v)
-            bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
     with_bucket = (emb.select("vec_id", _as_double("embedding").alias("vec"))
-                   .withColumn("bucket", bucket(F.col("vec")))
+                   .withColumn("bucket", _lsh_bucket(F.col("vec"), planes))
                    .withColumn("vnorm", _norm(F.col("vec"))))
     probe_arr = F.array(
         F.col("qbucket"),
@@ -983,12 +953,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       sim.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(scored)
 
 
 def triplet_mining_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2431,14 +2396,8 @@ def binary_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              .where(F.col("srank") <= _BQ_SHORTLIST))
     cosine = F.round(_dot(F.col("qvec"), F.col("nvec"))
                      / (F.col("qnorm") * _norm(F.col("nvec"))), 6)
-    wfinal = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (short.select("query_id", "neighbor_id", "hamming",
-                         cosine.alias("cosine"))
-            .withColumn("rank", F.row_number().over(wfinal))
-            .where(F.col("rank") <= _TOP_K)
-            .select("query_id", "rank", "neighbor_id", "hamming",
-                    "cosine"))
+    return _top_k(short.select("query_id", "neighbor_id", "hamming",
+                               cosine.alias("cosine")), "hamming")
 
 
 ORACLES["binary_quant_topk"] = f"""

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import md5_int
 from ..sources import load_table
 
 # shared stopword list for language scoring / quality ratios
@@ -123,9 +124,10 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (winnowing-style rolling fingerprint).  The fingerprint is the minimum
     32-bit md5-derived shingle hash — identical arithmetic on the oracle
     side, so exact-checkable; at scale this is a map + per-doc min."""
-    from .dedup import shingle_table, shingle_hash_col
+    from .dedup import shingle_table
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_table(docs).select("doc_id", shingle_hash_col().alias("h"))
+    sh = shingle_table(docs).select(
+        "doc_id", md5_int(F.col("shingle")).alias("h"))
     return (sh.groupBy("doc_id")
             .agg(F.min("h").alias("fingerprint"),
                  F.max("h").alias("max_shingle_hash"),
@@ -253,10 +255,7 @@ def chunk_hash_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = chunks.select(
         "doc_id", "chunk_id",
         F.explode(F.split("chunk_text", " ")).alias("token"))
-    # same 32-bit md5-derived hash construction as dedup.shingle_hash_col
-    # (proven engine-identical in the MinHash/Bloom oracles)
-    hd = F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10) \
-        .cast("long")
+    hd = md5_int(F.col("token"))
     sparse = (toks
               .select("doc_id", "chunk_id",
                       F.pmod(hd, F.lit(_HE_DIM)).alias("dim"),
@@ -1515,7 +1514,6 @@ def retrieval_rbo_bm25_vs_ql(spark: SparkSession,
 
     Scale: both rankers are existing bounded chains; the RBO join is
     (query x 10 x 10)-bounded."""
-    from pyspark.sql.window import Window
     # r9 (guide §2.4): the BM25 list feeds the overlap join AND the
     # all-queries frame — one k·Q-row cut
     bm = bm25_topk(spark, sf_dir).select(

@@ -50,7 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources import load_table
+from ..functions import md5_int
+from ..sources import load_table, orders_with_nation
 
 # add-k smoothing for the NB token model (k=0.5, Jeffreys — matches
 # text_quality._LM_K so the two corpus LMs share their prior).
@@ -619,11 +620,8 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("doc_id") % _FH_DOC_MOD == 0))
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("token"))
-    bucket = (F.conv(F.substring(F.md5("token"), 1, 8), 16, 10)
-              .cast("bigint") % _FH_BUCKETS)
-    sign = (F.lit(1)
-            - 2 * (F.conv(F.substring(F.md5("token"), 9, 1), 16, 10)
-                   .cast("bigint") % 2))
+    bucket = md5_int("token") % _FH_BUCKETS
+    sign = F.lit(1) - 2 * (md5_int("token", 9, 1) % 2)
     cells = (toks.select("doc_id", bucket.alias("bucket"),
                          sign.alias("sgn"))
              .groupBy("doc_id", "bucket")
@@ -918,12 +916,8 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, one 1-row global cross — the canonical map-side
     pattern; the encoding table itself is dimension-sized and ships
     back to trainers as a broadcast dictionary."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey", cents.alias("yc")))
     per = (rows.groupBy("nationkey")
            .agg(F.count(F.lit(1)).alias("n_orders"),
@@ -1286,12 +1280,8 @@ def woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: orders→customer broadcast join, one 25-key count
     aggregate, one 1-row cross — the encoding is dimension-sized."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").alias("nationkey"))
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    rows = (orders.join(F.broadcast(cust), "o_custkey")
+    rows = (orders_with_nation(spark, sf_dir)
             .select("nationkey", cents.alias("yc")))
     mean = rows.agg((F.sum("yc") / F.count(F.lit(1))).alias("mu"))
     lab = (rows.crossJoin(F.broadcast(mean))

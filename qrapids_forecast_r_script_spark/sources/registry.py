@@ -158,6 +158,17 @@ def load_series(metrics: DataFrame) -> DataFrame:
                     F.col("value").cast("double").alias("y")))
 
 
+def orders_with_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``orders`` joined to its customer's nation: every orders column
+    plus ``nationkey``, the customer side broadcast (one row per
+    customer, two columns)."""
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"),
+        F.col("c_nationkey").alias("nationkey"))
+    return orders.join(F.broadcast(cust), "o_custkey")
+
+
 def events_as_metrics(events: DataFrame) -> DataFrame:
     """Derive a qr_metrics-shaped frame from the driver's ``events`` table
     (FIXTURES.md §3): daily sum of ``value`` per event_type.

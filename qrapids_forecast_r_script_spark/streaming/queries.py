@@ -28,6 +28,7 @@ import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.window import Window
 
 from .. import schemas
@@ -60,7 +61,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _scoped_stream_shuffle(spark: SparkSession):
     """Temporarily size ``spark.sql.shuffle.partitions`` for a local
     availableNow replay (SPARK_GRAFT_STREAM_SHUFFLE, default 4) — see
-    the state-store-sizing note on :func:`_run_to_memory_sink`.  Safe
+    the state-store-sizing note on :func:`_run_available_now`.  Safe
     because every caller runs streaming queries sequentially and the
     query pins the partition count into its own fresh checkpoint at
     start."""
@@ -76,9 +77,10 @@ def _scoped_stream_shuffle(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _run_to_memory_sink(df: DataFrame, name: str, output_mode: str,
-                        timeout_s: float = 300) -> None:
-    """availableNow replay into a memory sink, raising on timeout.
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter,
+                       name: str, timeout_s: float = 300) -> None:
+    """Start ``writer`` as an availableNow replay from a fresh checkpoint
+    and wait for it, raising on timeout.
 
     A timed-out streaming query must NEVER return its sink table — that
     would be a silently partial result (availableNow emits incrementally)
@@ -104,21 +106,24 @@ def _run_to_memory_sink(df: DataFrame, name: str, output_mode: str,
     path; bench is sequential), so the temporary session mutation
     cannot race another thread's query plan.
     """
-    with _scoped_stream_shuffle(df.sparkSession):
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (df.writeStream
-                 .format("memory")
-                 .queryName(name)
-                 .outputMode(output_mode)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True)
-                 .start())
-            finished = q.awaitTermination(timeout_s)
-            if not finished:
-                q.stop()
-                raise TimeoutError(
-                    f"streaming query {name!r} did not finish within "
-                    f"{timeout_s}s — refusing to return a partial sink")
+    with _scoped_stream_shuffle(spark), tempfile.TemporaryDirectory() as ckpt:
+        q = (writer.option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start())
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {name!r} did not finish within "
+                f"{timeout_s}s — refusing to return a partial sink")
+
+
+def _run_to_memory_sink(df: DataFrame, name: str, output_mode: str,
+                        timeout_s: float = 300) -> None:
+    """availableNow replay of ``df`` into the memory table ``name``."""
+    _run_available_now(df.sparkSession,
+                       df.writeStream.format("memory").queryName(name)
+                       .outputMode(output_mode),
+                       name, timeout_s)
 
 
 def _tumbling_agg(df: DataFrame) -> DataFrame:
@@ -379,7 +384,6 @@ def events_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax query is an exact oracle.
     """
     import shutil
-    import tempfile
 
     state_dir = os.path.join(
         tempfile.gettempdir(), "qrapids_stream_state",
@@ -417,18 +421,8 @@ def events_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = events_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts", "value", "event_id")
-    with _scoped_stream_shuffle(spark), tempfile.TemporaryDirectory() as ckpt:
-        q = (stream.writeStream
-             .foreachBatch(_merge)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "events_stream_upsert_state did not finish — refusing "
-                "to return a partial state table")
+    _run_available_now(spark, stream.writeStream.foreachBatch(_merge),
+                       "events_stream_upsert_state")
     return (spark.read.parquet(state_dir)
             .select("user_id", "event_type", "last_ts", "last_value"))
 
@@ -487,7 +481,6 @@ def events_stream_trending_upsert(spark: SparkSession,
     result, so this shares the exact batch SQL oracle — proving the
     bounded-state form is result-identical, not just claimed."""
     import shutil
-    import tempfile
 
     state_dir = os.path.join(
         tempfile.gettempdir(), "qrapids_trending_state",
@@ -517,20 +510,9 @@ def events_stream_trending_upsert(spark: SparkSession,
               .select(F.col("w.start").alias("window_start"),
                       F.col("w.end").alias("window_end"),
                       "user_id", "n_events"))
-    import tempfile as _tf
-    with _scoped_stream_shuffle(spark), _tf.TemporaryDirectory() as ckpt:
-        q = (counts.writeStream
-             .foreachBatch(_merge)
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "events_stream_trending_upsert did not finish — refusing "
-                "to return a partial state table")
+    _run_available_now(spark, counts.writeStream.foreachBatch(_merge)
+                       .outputMode("update"),
+                       "events_stream_trending_upsert")
     snap = spark.read.parquet(state_dir)
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("user_id").asc())

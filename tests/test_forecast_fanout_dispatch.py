@@ -101,3 +101,32 @@ def test_non_fanout_methods_ignore_flag(spark, monkeypatch):
     low = api.forecast_batch(spark, metrics, "ETS", 7, 7)
     assert "FlatMapGroupsInPandas" in low._jdf.queryExecution().toString()
     pd.testing.assert_frame_equal(shipped, _collect(low))
+
+
+def test_fanout_warns_when_series_exceed_the_cap(spark, monkeypatch,
+                                                 caplog):
+    """The fan-outs cap each series at MAX_SERIES_LENGTH inside the JVM;
+    forecast_batch must say so on the driver (the single-task path's
+    prepare_series warns per series for the same truncation).  A 40-
+    point series against a 30-point cap warns once naming the cap; a
+    cap above the longest series stays quiet."""
+    import logging
+
+    from qrapids_forecast_r_script_spark.forecast import api
+
+    metrics = _toy_metrics(spark, names=("alpha",))
+    monkeypatch.setattr(api, "FANOUT_POINT_THRESHOLD", 1)
+    monkeypatch.setattr(api, "MAX_SERIES_LENGTH", 30)
+    with caplog.at_level(logging.WARNING, logger=api.__name__):
+        df = api.forecast_batch(spark, metrics, "HYBRID", 7, 7)
+    assert "FlatMapGroupsInPandas" not in df._jdf.queryExecution().toString()
+    warned = [r.getMessage() for r in caplog.records
+              if r.name == api.__name__]
+    assert len(warned) == 1, warned
+    assert "40 points" in warned[0] and "30-point cap (R:28)" in warned[0]
+
+    caplog.clear()
+    monkeypatch.setattr(api, "MAX_SERIES_LENGTH", 40)
+    with caplog.at_level(logging.WARNING, logger=api.__name__):
+        api.forecast_batch(spark, metrics, "BAGGEDETS", 7, 7)
+    assert not [r for r in caplog.records if r.name == api.__name__]
