@@ -97,13 +97,11 @@ def _assemble_series(metrics: DataFrame, cv_horizon: int) -> DataFrame:
             .withColumn("window", F.col("n") - 2 * F.lit(h)))
 
 
-def _series_units(metrics: DataFrame | None, frequency: int, horizon: int,
-                  cv_horizon: int, series: DataFrame | None = None,
-                  ) -> DataFrame:
+def _series_units(series: DataFrame, frequency: int,
+                  cv_horizon: int) -> DataFrame:
     """(name, index, component, origin, window, cand, y) — one row per
-    fit unit, assembled and exploded entirely JVM-side.  Pass a
-    pre-assembled ``series`` frame to reuse one (checkpointed)
-    aggregation across the explosion and the winner re-join.
+    fit unit of the assembled ``series`` frame (``_assemble_series``),
+    exploded entirely JVM-side.
 
     origin = -1 marks the final full-series fit; CV origins mirror
     ``_cv_rmse``: window = n − 2·cvHorizon (R:326), one-step slide,
@@ -113,8 +111,6 @@ def _series_units(metrics: DataFrame | None, frequency: int, horizon: int,
     m = max(1, int(frequency))
     h = int(cv_horizon)
     letters = F.array(*[F.lit(c) for c in _COMPONENTS])
-    if series is None:
-        series = _assemble_series(metrics, h)
     cv_ok = (F.col("window") >= F.greatest(F.lit(4), F.lit(m)))
     origins = F.when(
         cv_ok, F.sequence(F.greatest(F.col("window"),
@@ -282,10 +278,13 @@ def _finalize_arima(frequency: int, horizon: int):
     return fn
 
 
-def hybrid_fanout_components(spark: SparkSession, metrics: DataFrame,
-                             frequency: int = 7, horizon: int = 14,
-                             ) -> DataFrame:
-    """Per-(series, component) weights + final forecast bands.
+def _components_from_series(spark: SparkSession, series: DataFrame,
+                            frequency: int, horizon: int,
+                            ) -> tuple[DataFrame, DataFrame]:
+    """Core of the fan-out over a PRE-ASSEMBLED (and ideally
+    checkpointed) series frame — assembled once and reused for the unit
+    explosion AND the winner's y re-join, instead of re-running the
+    base-table aggregation twice (r6 review finding).
 
     Weight reassembly mirrors ``fit_hybrid`` exactly: RMSE over the
     concatenated fold errors (horizonAverage=TRUE), weight ∝ 1/RMSE,
@@ -297,19 +296,7 @@ def hybrid_fanout_components(spark: SparkSession, metrics: DataFrame,
     walk — followed by a one-row-per-series finalize stage; a candidate
     unit that raises a degenerate error poisons the whole component
     ('arima_fail'), because the sequential fit would have thrown out of
-    fit_arima and dropped 'a' entirely."""
-    series = _assemble_series(metrics, horizon).localCheckpoint()
-    comp, _ = _components_from_series(spark, series, frequency, horizon)
-    return comp
-
-
-def _components_from_series(spark: SparkSession, series: DataFrame,
-                            frequency: int, horizon: int,
-                            ) -> tuple[DataFrame, DataFrame]:
-    """Core of the fan-out over a PRE-ASSEMBLED (and ideally
-    checkpointed) series frame — assembled once and reused for the unit
-    explosion AND the winner's y re-join, instead of re-running the
-    base-table aggregation twice (r6 review finding).
+    fit_arima and dropped 'a' entirely.
 
     Returns ``(components, poisoned)``: the per-(series, component)
     weight+band rows, and the (name, index) keys of series where a
@@ -317,8 +304,7 @@ def _components_from_series(spark: SparkSession, series: DataFrame,
     sequential path NaNs the whole series there
     (``fit_and_forecast_pdf`` catches around fit+forecast together), so
     ``hybrid_fanout_batch`` must too."""
-    units = _series_units(None, frequency, horizon, cv_horizon=horizon,
-                          series=series)
+    units = _series_units(series, frequency, cv_horizon=horizon)
     from ..session import shuffle_width
     width = shuffle_width(spark)
     results = (units

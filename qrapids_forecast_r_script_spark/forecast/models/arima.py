@@ -58,12 +58,13 @@ def kpss_stat(y: np.ndarray) -> float:
 
 
 KPSS_CRIT_5PCT = 0.463
+_MAX_D = 2            # auto.arima's max.d
 
 
-def ndiffs(y: np.ndarray, max_d: int = 2) -> int:
+def ndiffs(y: np.ndarray) -> int:
     d = 0
     y = np.asarray(y, float)
-    while d < max_d and len(y) > 8 and kpss_stat(y) > KPSS_CRIT_5PCT:
+    while d < _MAX_D and len(y) > 8 and kpss_stat(y) > KPSS_CRIT_5PCT:
         y = np.diff(y)
         d += 1
     return d
@@ -588,8 +589,11 @@ def finalize_arima_winner(y, m, d, D, w, nw, include_const,
                       c, sigma2, crit, e, arpoly, mapoly)
 
 
-def _roots_ok(poly, eps: float = 0.001) -> bool:
-    """All roots of 1 + c1 B + ... outside |B| = 1 + eps.
+_ROOT_EPS = 0.001     # roots must lie outside |B| = 1 + _ROOT_EPS
+
+
+def _roots_ok(poly) -> bool:
+    """All roots of 1 + c1 B + ... outside |B| = 1 + eps, eps = _ROOT_EPS.
 
     Implemented via the Schur-Cohn reduction instead of an
     eigendecomposition: B-roots outside radius 1+eps ⟺ the reversed
@@ -605,7 +609,7 @@ def _roots_ok(poly, eps: float = 0.001) -> bool:
         return True
     if np.all(np.abs(poly[1:]) < 1e-12):
         return True
-    r0 = 1.0 / (1.0 + eps)
+    r0 = 1.0 / (1.0 + _ROOT_EPS)
     # reversed poly z^k + c1 z^{k-1} + ... + ck, rescaled z → r0·u:
     # monic coeffs a_j = c_j / r0^j for the u^{k-j} term
     a = [1.0]

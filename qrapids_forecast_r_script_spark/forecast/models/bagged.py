@@ -26,17 +26,19 @@ from .stl import stl_decompose
 NUM_REPLICATES = 100  # baggedETS(num = 100), the forecast package default
 
 
-def _boxcox_lambda(y: np.ndarray, m: int = 2,
-                   lower: float = 0.0, upper: float = 1.0) -> float:
+# Box-Cox lambda search range: bld.mbb.bootstrap's BoxCox.lambda(x,
+# lower=0, upper=1) restriction (R:205)
+_BC_LOWER, _BC_UPPER = 0.0, 1.0
+
+
+def _boxcox_lambda(y: np.ndarray, m: int = 2) -> float:
     """Guerrero's Box-Cox lambda (Guerrero 1993), the R-faithful
     blocking (r8 alignment with the relational replay
     `boxcox_guerrero_lambda`): split the LAST floor(n/period)*period
     observations into length-``period`` blocks (period = max(2, m),
     forecast:::guerrero's x.mat), per-block mean/sd, and pick the
-    grid lambda in [lower, upper] minimizing the coefficient of
-    variation of sd_h / mean_h^(1-lambda).  The [0, 1] default range
-    is exactly `bld.mbb.bootstrap`'s BoxCox.lambda(x, lower=0,
-    upper=1) restriction (the BAGGEDETS path, R:205); the 0.1 grid
+    grid lambda in [_BC_LOWER, _BC_UPPER] = [0, 1] minimizing the
+    coefficient of variation of sd_h / mean_h^(1-lambda); the 0.1 grid
     (vs R's continuous optimize()) is the documented deviation,
     shared with the oracled query so engine and query return the
     SAME decision (pinned by test).  Ties break to the smaller
@@ -55,9 +57,9 @@ def _boxcox_lambda(y: np.ndarray, m: int = 2,
     if np.any(means <= 0):
         return 1.0
     best_lam, best_cv = 1.0, np.inf
-    n_steps = int(round((upper - lower) / 0.1))
+    n_steps = int(round((_BC_UPPER - _BC_LOWER) / 0.1))
     for i in range(n_steps + 1):
-        lam = lower + i * 0.1
+        lam = _BC_LOWER + i * 0.1
         ratio = sds / np.power(means, 1.0 - lam)
         mu = ratio.mean()
         if mu <= 0:

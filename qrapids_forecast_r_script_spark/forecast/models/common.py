@@ -24,13 +24,19 @@ DEGENERATE_ERRORS = (ValueError, FloatingPointError, ZeroDivisionError,
                      OverflowError, np.linalg.LinAlgError)
 
 
-def nelder_mead(fn, x0: np.ndarray, *, max_iter: int = 500,
-                tol: float = 1e-8, step: float = 0.1):
+# Nelder-Mead: relative convergence tolerance on the simplex's f-spread,
+# and the initial simplex's relative step along each coordinate
+_NM_TOL = 1e-8
+_NM_STEP = 0.1
+
+
+def nelder_mead(fn, x0: np.ndarray, *, max_iter: int = 500):
     """Minimal Nelder-Mead simplex minimizer (numpy-only).
 
     Good enough for the ≤6-parameter smoothing/ARMA objectives used here;
     runs inside executor Python workers, so no scipy dependency.
     """
+    tol, step = _NM_TOL, _NM_STEP
     n = len(x0)
     # initial simplex
     simplex = [np.asarray(x0, dtype=float)]

@@ -22,10 +22,19 @@ from .common import bands_from_paths, seeded_rng
 _N_PATHS = 1000
 
 
-def _yule_walker_order(y: np.ndarray, max_p: int = 10) -> int:
+_YW_MAX_P = 10       # largest AR order the Yule-Walker AIC search tries
+
+# _MLP training: full-batch GD steps, learning rate, momentum, L2 decay
+_TRAIN_ITERS = 400
+_TRAIN_LR = 0.1
+_TRAIN_MOMENTUM = 0.9
+_TRAIN_DECAY = 1e-4
+
+
+def _yule_walker_order(y: np.ndarray) -> int:
     """AR order by Yule-Walker + AIC (R's ar() default selection)."""
     n = len(y)
-    max_p = min(max_p, n // 3)
+    max_p = min(_YW_MAX_P, n // 3)
     if max_p < 1:
         return 1
     e = y - y.mean()
@@ -72,11 +81,12 @@ class _MLP:
         H = 1.0 / (1.0 + np.exp(-(X @ self.W1 + self.b1)))
         return H @ self.W2 + self.b2
 
-    def train(self, X, t, iters=400, lr=0.1, momentum=0.9, decay=1e-4):
+    def train(self, X, t):
+        lr, momentum, decay = _TRAIN_LR, _TRAIN_MOMENTUM, _TRAIN_DECAY
         n = len(t)
         vW1 = np.zeros_like(self.W1); vb1 = np.zeros_like(self.b1)
         vW2 = np.zeros_like(self.W2); vb2 = 0.0
-        for _ in range(iters):
+        for _ in range(_TRAIN_ITERS):
             Z = X @ self.W1 + self.b1
             H = 1.0 / (1.0 + np.exp(-Z))
             out = H @ self.W2 + self.b2

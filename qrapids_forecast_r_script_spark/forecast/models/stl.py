@@ -45,7 +45,10 @@ def loess_smooth(y: np.ndarray, span_points: int) -> np.ndarray:
     return out
 
 
-def stl_decompose(y: np.ndarray, m: int, inner: int = 3):
+_STL_INNER = 3        # seasonal-then-trend smoothing passes
+
+
+def stl_decompose(y: np.ndarray, m: int):
     """STL-lite: iterated cycle-subseries smoothing + loess trend.
 
     Returns (trend, seasonal, remainder).  Mirrors stl()'s structure with
@@ -58,7 +61,7 @@ def stl_decompose(y: np.ndarray, m: int, inner: int = 3):
     if m > 1 and n >= 2 * m:
         slots = np.arange(n) % m
         t_span = max(3, int(np.ceil(1.5 * m / (1 - 1.5 / 13))) | 1)  # stl t.window
-        for _ in range(inner):
+        for _ in range(_STL_INNER):
             # 1. periodic cycle-subseries seasonal (s.window='periodic'):
             #    per-slot means of the detrended series, centered — no loess
             #    edge effects, which matters on short series

@@ -15,29 +15,34 @@ frequency 7, horizon 14).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..sources import events_as_metrics, load_table
-from .api import forecast_batch
+from .api import _FORECAST_KEYS, forecast_batch
 
 Z80 = "1.2815515655446004"
 Z95 = "1.959963984540054"
 
 _ROUND = 6
+_EVENTS_HORIZON = 14   # two weeks of the daily events-derived series
 
 
 def _metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_as_metrics(load_table(spark, sf_dir, "events"))
 
 
-def _batch(spark, sf_dir, method, horizon=14):
+def _rounded_bands(out: DataFrame, step: str | Column) -> DataFrame:
+    """The forecast output columns of ``out`` with every band rounded to
+    ``_ROUND`` dp; ``step`` is the caller's step column."""
+    return out.select("name", "index", "method", step,
+                      *[F.round(c, _ROUND).alias(c) for c in _FORECAST_KEYS])
+
+
+def _batch(spark, sf_dir, method):
     out = forecast_batch(spark, _metrics(spark, sf_dir), method,
-                         frequency=7, horizon=horizon)
-    cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-    out = out.select(
-        "name", "index", "method", F.col("step").cast("long").alias("step"),
-        *[F.round(c, _ROUND).alias(c) for c in cols])
-    return out
+                         frequency=7, horizon=_EVENTS_HORIZON)
+    return _rounded_bands(
+        out, F.col("step").cast("long").alias("step"))
 
 
 def _make(method):
@@ -73,12 +78,9 @@ def _make_user_series(method):
         metrics = (metrics.withColumn("n_obs", n_obs)
                    .where(F.col("n_obs") >= 14).drop("n_obs"))
         out = forecast_batch(spark, metrics, method,
-                             frequency=7, horizon=14)
-        cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-        return out.select(
-            "name", "index", "method",
-            F.col("step").cast("long").alias("step"),
-            *[F.round(c, _ROUND).alias(c) for c in cols])
+                             frequency=7, horizon=_EVENTS_HORIZON)
+        return _rounded_bands(
+            out, F.col("step").cast("long").alias("step"))
     q.__name__ = f"forecast_{method.lower()}_user_series"
     return q
 
@@ -120,11 +122,8 @@ def forecast_hybrid_fanout_events(spark: SparkSession,
     the other 10 reference methods."""
     from .hybrid_fanout import hybrid_fanout_batch
     out = hybrid_fanout_batch(spark, _metrics(spark, sf_dir),
-                              frequency=7, horizon=14)
-    cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-    return out.select(
-        "name", "index", "method", "step",
-        *[F.round(c, _ROUND).alias(c) for c in cols])
+                              frequency=7, horizon=_EVENTS_HORIZON)
+    return _rounded_bands(out, "step")
 
 
 QUERIES["forecast_hybrid_fanout_events"] = forecast_hybrid_fanout_events
@@ -140,11 +139,8 @@ def forecast_baggedets_fanout_events(spark: SparkSession,
     per task instead of 100.  Rows-only like the other model fits."""
     from .bagged_fanout import bagged_fanout_batch
     out = bagged_fanout_batch(spark, _metrics(spark, sf_dir),
-                              frequency=7, horizon=14)
-    cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-    return out.select(
-        "name", "index", "method", "step",
-        *[F.round(c, _ROUND).alias(c) for c in cols])
+                              frequency=7, horizon=_EVENTS_HORIZON)
+    return _rounded_bands(out, "step")
 
 
 QUERIES["forecast_baggedets_fanout_events"] = forecast_baggedets_fanout_events
@@ -833,10 +829,8 @@ def forecast_cache_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = store.forecast_with_cache(name, index, "SNAIVE", 7, 14,
                                      must_not_scan)
     out = spark.createDataFrame(rows, schema=schemas.FORECAST)
-    cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-    return out.select("name", "index", "method",
-                      F.col("step").cast("long").alias("step"),
-                      *[F.round(c, _ROUND).alias(c) for c in cols])
+    return _rounded_bands(
+        out, F.col("step").cast("long").alias("step"))
 
 
 EVAL_QUERIES["forecast_cache_roundtrip"] = forecast_cache_roundtrip
@@ -861,11 +855,8 @@ def forecast_snaive_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFram
                .select("name", F.lit("test.metrics.orders").alias("index"),
                        "evaluationDate", "value"))
     out = forecast_batch(spark, metrics, "SNAIVE", frequency=12, horizon=12)
-    cols = ["lower1", "lower2", "mean", "upper1", "upper2"]
-    return out.select(
-        "name", "index", "method",
-        F.col("step").cast("long").alias("step"),
-        *[F.round(c, _ROUND).alias(c) for c in cols])
+    return _rounded_bands(
+        out, F.col("step").cast("long").alias("step"))
 
 
 _METRICS_ORDERS_MONTHLY = """
@@ -1243,8 +1234,6 @@ EVAL_ORACLES["series_acf"] = f"""
 # reference's 10-method registry (R:6-7) lacks entirely, both expressed
 # so the driver hash-checks them end-to-end.
 
-_CR_ALPHA = 0.5   # SES smoothing: (1-alpha) = 2^-1 makes the recursion
-                  # EXACT integer arithmetic (see docstring)
 _CR_CAP = 24      # keep the last 24 demands: the dropped weights are
                   # <= 2^-23 ~ 1.2e-7, below the 6dp output grid
 _CR_MOD = 101     # sparse deterministic user slice -> genuinely

@@ -181,11 +181,11 @@ def _round_sql(r: int) -> str:
     )"""
 
 
-def _bpe_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
-    body = "".join(_round_sql(r) for r in range(1, rounds + 1))
+def _bpe_oracle_sql() -> str:
+    body = "".join(_round_sql(r) for r in range(1, _BPE_ROUNDS + 1))
     rules = "\n    UNION ALL\n".join(
         f"    SELECT {r} AS merge_rank, ta AS left_sym, tb AS right_sym, "
-        f"pair_count FROM top{r}" for r in range(1, rounds + 1))
+        f"pair_count FROM top{r}" for r in range(1, _BPE_ROUNDS + 1))
     return f"""
     WITH words AS (
         SELECT word, count(*) AS wf FROM (
@@ -244,8 +244,8 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-def _bpe_encode_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
-    body = "".join(_round_sql(r) for r in range(1, rounds + 1))
+def _bpe_encode_oracle_sql() -> str:
+    body = "".join(_round_sql(r) for r in range(1, _BPE_ROUNDS + 1))
     return f"""
     WITH words AS (
         SELECT word, count(*) AS wf FROM (
@@ -259,7 +259,7 @@ def _bpe_encode_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
     , chars AS (
         SELECT word, count(*) AS n_chars_w FROM syms0 GROUP BY word
     ), tok AS (
-        SELECT word, count(*) AS n_tok_w FROM syms{rounds} GROUP BY word
+        SELECT word, count(*) AS n_tok_w FROM syms{_BPE_ROUNDS} GROUP BY word
     ), wd AS (
         SELECT doc_id, word, count(*) AS n FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS word

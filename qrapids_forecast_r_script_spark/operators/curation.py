@@ -69,33 +69,31 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("keep_pct").cast("int").alias("keep_pct")))
 
 
-def source_quota_cap(spark: SparkSession, sf_dir: str,
-                     cap: int = _SOURCE_CAP) -> DataFrame:
-    """Per-source document quota: keep the ``cap`` longest docs of each
-    source (n_chars desc, doc_id tiebreak).
+def source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source document quota: keep the ``_SOURCE_CAP`` longest docs
+    of each source (n_chars desc, doc_id tiebreak).
 
     The domain-quota step of corpus curation — prevents any single
     crawl source from dominating the mix.  One shuffle on ``source``;
     rank-then-filter pushes nothing across sources, so a skewed source
     costs only its own partition (for a pathological mega-source,
-    pre-aggregate a salted partial top-``cap`` per salt, then re-rank
-    the ``salt_count * cap`` survivors — same two-level shape as
-    ``scale_patterns.salted_skew_join``).
+    pre-aggregate a salted partial top-``_SOURCE_CAP`` per salt, then
+    re-rank the ``salt_count * _SOURCE_CAP`` survivors — same two-level
+    shape as ``scale_patterns.salted_skew_join``).
     """
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc())
     return (docs
             .withColumn("src_rank", F.row_number().over(w))
-            .where(F.col("src_rank") <= cap)
+            .where(F.col("src_rank") <= _SOURCE_CAP)
             .select("doc_id", "source", "n_chars", "src_rank"))
 
 
-def token_shard_packing(spark: SparkSession, sf_dir: str,
-                        budget: int = _SHARD_BUDGET,
-                        bucket_width: int = _PACK_BUCKET) -> DataFrame:
+def token_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every doc a token-budget shard id: shard = (exclusive
-    running token count within lang, ordered by doc_id) div ``budget``.
+    running token count within lang, ordered by doc_id) div
+    ``_SHARD_BUDGET``.
 
     The naive form is one window over (PARTITION BY lang ORDER BY
     doc_id) — a single task per language, which at 100 TB serializes
@@ -117,7 +115,7 @@ def token_shard_packing(spark: SparkSession, sf_dir: str,
             .select("doc_id", "lang",
                     F.regexp_count(F.col("text"), F.lit(r"[A-Za-z0-9]+"))
                      .cast("bigint").alias("n_tokens"))
-            .withColumn("bucket", F.expr(f"doc_id div {bucket_width}")))
+            .withColumn("bucket", F.expr(f"doc_id div {_PACK_BUCKET}")))
     bucket_tot = (toks.groupBy("lang", "bucket")
                   .agg(F.sum("n_tokens").alias("bucket_tokens")))
     wb = (Window.partitionBy("lang").orderBy("bucket")
@@ -133,7 +131,8 @@ def token_shard_packing(spark: SparkSession, sf_dir: str,
                         F.coalesce(F.sum("n_tokens").over(wd), F.lit(0)))
             .join(F.broadcast(offsets), ["lang", "bucket"])
             .select("doc_id", "lang", "n_tokens",
-                    F.expr(f"(bucket_offset + within_excl) div {budget}")
+                    F.expr("(bucket_offset + within_excl) div "
+                           f"{_SHARD_BUDGET}")
                      .alias("shard_id")))
 
 
@@ -171,15 +170,16 @@ def _eval_ids(docs: DataFrame) -> DataFrame:
             .select("doc_id"))
 
 
-def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, pos, shingle) for every n-gram start position — the
-    posexplode + window-lead construction (HOF-free, one tokenization),
+def _doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, shingle) for every ``_CONTAM_N``-gram start position
+    — the posexplode + window-lead construction (HOF-free, one tokenization),
     shared by the audit (which distincts away pos) and the transform
     (which needs pos for span coverage)."""
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
-    grams = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, n)]
+    grams = [F.col("tok")] + [F.lead("tok", i).over(w)
+                              for i in range(1, _CONTAM_N)]
     return (toks
             .select("doc_id", "pos",
                     F.concat_ws(" ", *grams).alias("shingle"),
@@ -188,10 +188,9 @@ def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
             .select("doc_id", "pos", "shingle"))
 
 
-def eval_contamination(spark: SparkSession, sf_dir: str,
-                       n: int = _CONTAM_N) -> DataFrame:
+def eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval decontamination: which training documents share
-    ``n``-gram shingles with the held-out eval set, and how much.
+    ``_CONTAM_N``-gram shingles with the held-out eval set, and how much.
 
     Eval set = the 10 lowest-doc_id English documents (deterministic).
     Every other doc is "training"; a doc is contaminated if any of its
@@ -208,7 +207,7 @@ def eval_contamination(spark: SparkSession, sf_dir: str,
     """
     docs = load_table(spark, sf_dir, "documents")
     eval_ids = _eval_ids(docs)
-    sh = _doc_shingles(docs, n).select("doc_id", "shingle").distinct()
+    sh = _doc_shingles(docs).select("doc_id", "shingle").distinct()
     ev = F.broadcast(sh.join(F.broadcast(eval_ids), "doc_id")
                      .select("shingle").distinct())
     train = sh.join(eval_ids, "doc_id", "left_anti")
@@ -223,12 +222,11 @@ def eval_contamination(spark: SparkSession, sf_dir: str,
                      .alias("contamination")))
 
 
-def decontaminate_spans(spark: SparkSession, sf_dir: str,
-                        n: int = _CONTAM_N) -> DataFrame:
+def decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decontamination TRANSFORM (the step after
     :func:`eval_contamination`'s audit): actually REMOVE every token
     span that overlaps the eval set — each training doc loses the
-    tokens covered by any contaminated ``n``-gram window and is
+    tokens covered by any contaminated ``_CONTAM_N``-gram window and is
     re-assembled in original order (Lee/Brown-style span excision, the
     form labs ship because dropping whole documents wastes the clean
     majority of a barely-contaminated doc).
@@ -238,18 +236,19 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str,
     the oracle proves; emitting full bodies would bloat the compare).
 
     Scale shape: eval shingles broadcast (KBs vs TBs); coverage
-    expansion is a constant ×n explode of only the CONTAMINATED starts;
-    the anti-join and the re-assembly group are both keyed by doc_id —
-    one corpus shuffle, same contract as the audit query.
+    expansion is a constant ×``_CONTAM_N`` explode of only the
+    CONTAMINATED starts; the anti-join and the re-assembly group are both
+    keyed by doc_id — one corpus shuffle, same contract as the audit
+    query.
     """
     docs = load_table(spark, sf_dir, "documents")
     eval_ids = _eval_ids(docs)
     train = docs.join(eval_ids, "doc_id", "left_anti")
     toks = train.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
-    starts = _doc_shingles(train, n)
+    starts = _doc_shingles(train)
     ev_sh = F.broadcast(_doc_shingles(
-        docs.join(F.broadcast(eval_ids), "doc_id"), n)
+        docs.join(F.broadcast(eval_ids), "doc_id"))
         .select("shingle").distinct())
     # r9 (guide §2.4): cut the contaminated-position set — the token
     # anti-join and the removed-count aggregate each reference it, so
@@ -258,7 +257,8 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str,
                .select("doc_id",
                        F.explode(F.sequence(
                            F.col("pos"),
-                           F.col("pos") + F.lit(n - 1))).alias("pos"))
+                           F.col("pos") + F.lit(_CONTAM_N - 1)))
+                       .alias("pos"))
                .distinct().localCheckpoint())
     kept = toks.join(covered, ["doc_id", "pos"], "left_anti")
     cleaned = (kept.groupBy("doc_id")
@@ -282,12 +282,11 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str,
 _WS_K = 50                       # weighted sample size
 
 
-def weighted_sample_docs(spark: SparkSession, sf_dir: str,
-                         k: int = _WS_K) -> DataFrame:
+def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis 2006, "Weighted random sampling with a reservoir"): each
     doc gets key = ln(u)/w for a hash-derived uniform u and weight w,
-    and the k LARGEST keys are the sample — inclusion probability
+    and the ``_WS_K`` LARGEST keys are the sample — inclusion probability
     proportional to weight, one pass, no replacement bookkeeping.  The
     curation use: sample documents proportional to length/quality so a
     fixed-budget subset covers the corpus mass, not the doc count.
@@ -308,7 +307,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str,
     scored = docs.select("doc_id", "source", "n_chars",
                          key.alias("ws_key"))
     top = (scored.orderBy(F.col("ws_key").desc(), F.col("doc_id").asc())
-           .limit(k))
+           .limit(_WS_K))
     w = Window.orderBy(F.col("ws_key").desc(), F.col("doc_id").asc())
     return (top.withColumn("sample_rank", F.row_number().over(w))
             .select("sample_rank", "doc_id", "source", "n_chars",
@@ -318,8 +317,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str,
 _SHUFFLE_EPOCHS = 2
 
 
-def epoch_shuffle_order(spark: SparkSession, sf_dir: str,
-                        epochs: int = _SHUFFLE_EPOCHS) -> DataFrame:
+def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-epoch training order: each epoch assigns every
     doc a position by ranking ``md5(epoch || ':' || doc_id)`` — a fresh
     pseudo-random permutation per epoch that is nevertheless exactly
@@ -336,7 +334,7 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ep = docs.select(
         "doc_id",
-        F.explode(F.array(*[F.lit(e) for e in range(epochs)]))
+        F.explode(F.array(*[F.lit(e) for e in range(_SHUFFLE_EPOCHS)]))
         .alias("epoch"))
     key = F.md5(F.concat(F.col("epoch").cast("string"), F.lit(":"),
                          F.col("doc_id").cast("string")).cast("binary"))

@@ -417,6 +417,7 @@ def _sym_edges(pairs: DataFrame, *extra: Column) -> DataFrame:
 
 
 _LP_HOPS = 3        # propagation hops fused per materialization round
+_LP_MAX_ITER = 20   # propagation hops before the large-star fallback
 
 
 def _label_prop(edges: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
@@ -534,7 +535,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
 
 def cluster_edges(docs: DataFrame, pairs: DataFrame,
-                  max_iter: int = 20) -> DataFrame:
+                  max_iter: int = _LP_MAX_ITER) -> DataFrame:
     """Assign every doc the min doc_id of its connected component in the
     ``pairs`` graph (singletons keep their own id).
 
@@ -566,8 +567,7 @@ def cluster_edges(docs: DataFrame, pairs: DataFrame,
                     F.coalesce("cluster_id", "doc_id").alias("cluster_id")))
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str,
-                   max_iter: int = 20) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS from the MinHash-LSH candidate pairs: connected
     components via iterative min-label propagation — every doc gets the
     smallest doc_id reachable through the pair graph (singletons keep
@@ -585,7 +585,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return cluster_edges(docs, pairs, max_iter=max_iter)
+    return cluster_edges(docs, pairs)
 
 
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:

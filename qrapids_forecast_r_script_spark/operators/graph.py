@@ -37,8 +37,7 @@ _PR_TOP = 20
 _PR_DP = 6            # end-of-iteration rounding (engine resync)
 
 
-def doc_graph_pagerank(spark: SparkSession, sf_dir: str,
-                       iters: int = _PR_ITERS) -> DataFrame:
+def doc_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``_PR_TOP`` documents by PageRank over the near-dup graph —
     the "most central duplicate hub" ranking a corpus auditor uses to
     find boilerplate families worth manual review."""
@@ -54,7 +53,7 @@ def doc_graph_pagerank(spark: SparkSession, sf_dir: str,
     n = docs.count()                      # bounded driver scalar
     d = _PR_D
     ranks = docs.select("doc_id", (F.lit(1.0) / F.lit(float(n))).alias("r"))
-    for _ in range(iters):
+    for _ in range(_PR_ITERS):
         contrib = (sym.join(deg, "src")
                    .join(ranks.withColumnRenamed("doc_id", "src"), "src")
                    .groupBy(F.col("dst").alias("doc_id"))
@@ -79,10 +78,10 @@ def doc_graph_pagerank(spark: SparkSession, sf_dir: str,
             .select("rank", "doc_id", F.col("r").alias("pagerank")))
 
 
-def _pagerank_oracle_sql(iters: int = _PR_ITERS) -> str:
+def _pagerank_oracle_sql() -> str:
     prev = "r0"
     iter_ctes = []
-    for i in range(iters):
+    for i in range(_PR_ITERS):
         cur = f"r{i + 1}"
         iter_ctes.append(f"""
         {cur} AS (
@@ -137,16 +136,15 @@ _TRI_TOP = 20
 _LPA_ITERS = 2
 
 
-def _lpa_labels(spark: SparkSession, sf_dir: str,
-                iters: int = _LPA_ITERS):
-    """Shared LPA chain: (labels, pairs, sym) after ``iters`` synchronous
+def _lpa_labels(spark: SparkSession, sf_dir: str):
+    """Shared LPA chain: (labels, pairs, sym) after ``_LPA_ITERS`` synchronous
     rounds — the label assignment `doc_graph_communities` summarizes and
     `doc_graph_modularity` scores."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sym = _sym_edges(pairs)
     labels = docs.select("doc_id", F.col("doc_id").alias("lbl"))
-    for _ in range(iters):
+    for _ in range(_LPA_ITERS):
         nb = (sym.join(labels.select(F.col("doc_id").alias("dst"),
                                      F.col("lbl").alias("nlbl")), "dst")
               .groupBy("src", "nlbl")
@@ -164,8 +162,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str,
     return labels, pairs, sym
 
 
-def doc_graph_communities(spark: SparkSession, sf_dir: str,
-                          iters: int = _LPA_ITERS) -> DataFrame:
+def doc_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) over the near-dup pair graph: every node starts as its
     own label; each round it adopts the MOST FREQUENT label among its
@@ -185,17 +182,17 @@ def doc_graph_communities(spark: SparkSession, sf_dir: str,
     one neighbor-label count keyed by (node, label) and one argmax
     window per node — fan-out bounded by degree (band-bounded on this
     graph); the same plan repeats at scale until labels stabilize."""
-    labels, _, _ = _lpa_labels(spark, sf_dir, iters)
+    labels, _, _ = _lpa_labels(spark, sf_dir)
     return (labels.groupBy(F.col("lbl").alias("community"))
             .agg(F.count(F.lit(1)).alias("n_members"),
                  F.min("doc_id").alias("first_member"))
             .orderBy(F.col("n_members").desc(), F.col("community").asc()))
 
 
-def _communities_oracle_sql(iters: int = _LPA_ITERS) -> str:
+def _communities_oracle_sql() -> str:
     prev = "l0"
     ctes = []
-    for i in range(iters):
+    for i in range(_LPA_ITERS):
         cur = f"l{i + 1}"
         ctes.append(f"""
         {cur} AS (
@@ -446,11 +443,10 @@ _KC_K = 2         # core threshold: survive while >= k alive neighbors
 _KC_ROUNDS = 3    # unrolled peel rounds (each = one degree pass)
 
 
-def doc_graph_kcore(spark: SparkSession, sf_dir: str, k: int = _KC_K,
-                    rounds: int = _KC_ROUNDS) -> DataFrame:
+def doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peel (Seidman 1983 / the Matula-Beck degeneracy order)
     over the MinHash near-dup pair graph: repeatedly delete nodes with
-    fewer than ``k`` ALIVE neighbors; after ``rounds`` passes, the
+    fewer than ``_KC_K`` ALIVE neighbors; after ``_KC_ROUNDS`` passes, the
     survivors approximate the k-core (the fixpoint's superset — each
     extra round is the same plan repeated, and the unrolled-3 form is
     the oracle-able correctness anchor, the PageRank/LPA convention).
@@ -469,14 +465,14 @@ def doc_graph_kcore(spark: SparkSession, sf_dir: str, k: int = _KC_K,
             .agg(F.count(F.lit(1)).alias("deg0")))
     alive = deg0.select("doc_id")
     peeled = None
-    for r in range(1, rounds + 1):
+    for r in range(1, _KC_ROUNDS + 1):
         e = (sym
              .join(alive.withColumnRenamed("doc_id", "src"), "src")
              .join(alive.withColumnRenamed("doc_id", "dst"), "dst"))
         deg = (e.groupBy(F.col("src").alias("doc_id"))
                .agg(F.count(F.lit(1)).alias("deg")))
         dead = (alive.join(deg, "doc_id", "left")
-                .where(F.coalesce(F.col("deg"), F.lit(0)) < k)
+                .where(F.coalesce(F.col("deg"), F.lit(0)) < _KC_K)
                 .select("doc_id", F.lit(r).alias("peel_round")))
         peeled = dead if peeled is None else peeled.unionByName(dead)
         alive = (alive.join(dead.select("doc_id"), "doc_id", "left_anti")
@@ -488,11 +484,11 @@ def doc_graph_kcore(spark: SparkSession, sf_dir: str, k: int = _KC_K,
             .orderBy("doc_id"))
 
 
-def _kcore_oracle_sql(k: int = _KC_K, rounds: int = _KC_ROUNDS) -> str:
+def _kcore_oracle_sql() -> str:
     prev = "a0"
     round_ctes = []
     dead_names = []
-    for r in range(1, rounds + 1):
+    for r in range(1, _KC_ROUNDS + 1):
         cur = f"a{r}"
         round_ctes.append(f"""
         d{r} AS (
@@ -505,7 +501,7 @@ def _kcore_oracle_sql(k: int = _KC_K, rounds: int = _KC_ROUNDS) -> str:
         dead{r} AS (
             SELECT a.doc_id, {r} AS peel_round
             FROM {prev} a LEFT JOIN d{r} ON a.doc_id = d{r}.doc_id
-            WHERE coalesce(d{r}.deg, 0) < {k}
+            WHERE coalesce(d{r}.deg, 0) < {_KC_K}
         ),
         {cur} AS (
             SELECT doc_id FROM {prev}
@@ -548,8 +544,7 @@ _EC_TOP = 20
 _EC_U = 1_000_000     # score micro-grid (max-normalized, so scores <= 1)
 
 
-def doc_graph_eigencentrality(spark: SparkSession, sf_dir: str,
-                              iters: int = _EC_ITERS) -> DataFrame:
+def doc_graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``_EC_TOP`` documents by eigenvector centrality (Bonacich
     1972) over the near-dup pair graph: x' = A·x, max-normalized each
     round.  The third member of the centrality family next to
@@ -576,7 +571,7 @@ def doc_graph_eigencentrality(spark: SparkSession, sf_dir: str,
     sym = _sym_edges(pairs)
     x = (sym.select(F.col("src").alias("doc_id")).distinct()
          .withColumn("xm", F.lit(_EC_U).cast("long")))
-    for _ in range(iters):
+    for _ in range(_EC_ITERS):
         # r9 (guide §2.4): s feeds both the max-normalizer and the
         # update — one node-grain cut per round keeps the plan linear
         s = (sym.join(x.withColumnRenamed("doc_id", "src"), "src")
@@ -599,10 +594,10 @@ def doc_graph_eigencentrality(spark: SparkSession, sf_dir: str,
             .select("rank", "doc_id", "centrality"))
 
 
-def _eigencentrality_oracle_sql(iters: int = _EC_ITERS) -> str:
+def _eigencentrality_oracle_sql() -> str:
     prev = "x0"
     ctes = []
-    for i in range(iters):
+    for i in range(_EC_ITERS):
         cur = f"x{i + 1}"
         ctes.append(f"""
         {cur} AS (
@@ -758,8 +753,8 @@ ORACLES["doc_graph_degree_powerlaw"] = _SIG_CTE + """
 _BFS_DEPTH = 4
 
 
-def doc_graph_bfs_reachability(spark: SparkSession, sf_dir: str,
-                               depth: int = _BFS_DEPTH) -> DataFrame:
+def doc_graph_bfs_reachability(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
     """Breadth-first reachability from the lowest-id document that has
     a near-dup edge, written as an ANSI ``WITH RECURSIVE`` CTE and
     executed by Spark's OWN recursion engine (new in Spark 4) — the
@@ -773,7 +768,7 @@ def doc_graph_bfs_reachability(spark: SparkSession, sf_dir: str,
     ``min(dist)`` group collapses walk multiplicity to true BFS
     distance.  Bounded because near-dup components are clique-like
     and small (`dedup_cluster_sizes` pins the size histogram): walk
-    count ≤ |component|^depth, a constant-bounded blowup — the
+    count ≤ |component|^_BFS_DEPTH, a constant-bounded blowup — the
     documented trade for engine-native recursion vs the manual
     converge-loop (which `dedup_clusters` keeps for the unbounded
     case).  Both engines run the SAME recursive SQL, so the oracle
@@ -782,7 +777,7 @@ def doc_graph_bfs_reachability(spark: SparkSession, sf_dir: str,
 
     Scale shape: each recursion level is one hash join of the
     frontier against the edge list — identical physical work to one
-    hand-written BFS round; depth is the knob."""
+    hand-written BFS round; ``_BFS_DEPTH`` sets the level count."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sym = _sym_edges(pairs)
     sym.createOrReplaceTempView("qr_bfs_sym")
@@ -794,14 +789,14 @@ def doc_graph_bfs_reachability(spark: SparkSession, sf_dir: str,
             UNION ALL
             SELECT e.dst AS doc_id, CAST(w.dist + 1 AS BIGINT) AS dist
             FROM walk w JOIN qr_bfs_sym e ON e.src = w.doc_id
-            WHERE w.dist < {depth}
+            WHERE w.dist < {_BFS_DEPTH}
         )
         SELECT doc_id, CAST(min(dist) AS BIGINT) AS dist
         FROM walk GROUP BY doc_id
     """)
 
 
-def _bfs_oracle_sql(depth: int = _BFS_DEPTH) -> str:
+def _bfs_oracle_sql() -> str:
     return _SIG_CTE.replace("WITH", "WITH RECURSIVE", 1) + f"""
         , bands AS ({_BANDS_UNION}),
         pairs AS (
@@ -820,7 +815,7 @@ def _bfs_oracle_sql(depth: int = _BFS_DEPTH) -> str:
             UNION ALL
             SELECT e.dst AS doc_id, CAST(w.dist + 1 AS BIGINT) AS dist
             FROM walk w JOIN sym e ON e.src = w.doc_id
-            WHERE w.dist < {depth}
+            WHERE w.dist < {_BFS_DEPTH}
         )
         SELECT doc_id, CAST(min(dist) AS BIGINT) AS dist
         FROM walk GROUP BY doc_id
@@ -876,12 +871,12 @@ def doc_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "modularity"))
 
 
-def _modularity_oracle_sql(iters: int = _LPA_ITERS) -> str:
-    base = _communities_oracle_sql(iters)
+def _modularity_oracle_sql() -> str:
+    base = _communities_oracle_sql()
     # reuse everything up to (and incl.) the last label CTE, swap the
     # final SELECT for the modularity computation
     head = base[:base.rindex("SELECT lbl AS community")].rstrip()
-    last = f"l{iters}"
+    last = f"l{_LPA_ITERS}"
     return head + "," + f"""
         medges AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs),
         intra AS (
@@ -921,8 +916,8 @@ ORACLES["doc_graph_modularity"] = _modularity_oracle_sql()
 _CL_SEEDS = 10      # constant seed sample (Eppstein-Wang estimator)
 
 
-def doc_graph_closeness_sampled(spark: SparkSession, sf_dir: str,
-                                depth: int = _BFS_DEPTH) -> DataFrame:
+def doc_graph_closeness_sampled(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
     """Sampled closeness + harmonic centrality (Eppstein & Wang 2004
     pivot sampling; Boldi & Vigna 2014 for the harmonic form) — the
     "how near is this doc to its whole dup neighborhood" read that
@@ -957,7 +952,7 @@ def doc_graph_closeness_sampled(spark: SparkSession, sf_dir: str,
             SELECT w.seed, e.dst AS doc_id,
                    CAST(w.dist + 1 AS BIGINT) AS dist
             FROM walk w JOIN qr_close_sym e ON e.src = w.doc_id
-            WHERE w.dist < {depth}
+            WHERE w.dist < {_BFS_DEPTH}
         ),
         dists AS (
             SELECT seed, doc_id, min(dist) AS d
@@ -978,7 +973,7 @@ def doc_graph_closeness_sampled(spark: SparkSession, sf_dir: str,
     """)
 
 
-def _closeness_oracle_sql(depth: int = _BFS_DEPTH) -> str:
+def _closeness_oracle_sql() -> str:
     return _SIG_CTE.replace("WITH", "WITH RECURSIVE", 1) + f"""
         , bands AS ({_BANDS_UNION}),
         pairs AS (
@@ -1003,7 +998,7 @@ def _closeness_oracle_sql(depth: int = _BFS_DEPTH) -> str:
             SELECT w.seed, e.dst AS doc_id,
                    CAST(w.dist + 1 AS BIGINT) AS dist
             FROM walk w JOIN sym e ON e.src = w.doc_id
-            WHERE w.dist < {depth}
+            WHERE w.dist < {_BFS_DEPTH}
         ),
         dists AS (
             SELECT seed, doc_id, min(dist) AS d
@@ -1031,8 +1026,8 @@ ORACLES["doc_graph_closeness_sampled"] = _closeness_oracle_sql()
 _SP_HOPS = 4       # walk-hop guard (same bound, and reasoning, as BFS)
 
 
-def doc_graph_shortest_paths(spark: SparkSession, sf_dir: str,
-                             hops: int = _SP_HOPS) -> DataFrame:
+def doc_graph_shortest_paths(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
     """Weighted single-source shortest paths over the near-dup graph —
     BFS's metric upgrade: edge cost = ``101 − round(100·est_jaccard)``
     (strong duplicates are cheap to traverse, weak candidates
@@ -1049,7 +1044,7 @@ def doc_graph_shortest_paths(spark: SparkSession, sf_dir: str,
     before entering the recursion), so path sums are exact BIGINTs —
     no float accumulation across recursion levels.  Bounded for the
     BFS reason: near-dup components are small and clique-like
-    (`dedup_cluster_sizes`), so walk count ≤ |component|^hops.
+    (`dedup_cluster_sizes`), so walk count ≤ |component|^_SP_HOPS.
 
     Scale shape: each level is one hash join frontier×edges; for an
     unbounded/contended graph the hand-rolled converge-loop with a
@@ -1072,14 +1067,14 @@ def doc_graph_shortest_paths(spark: SparkSession, sf_dir: str,
                    CAST(w.dist + e.wt AS BIGINT) AS dist,
                    CAST(w.hops + 1 AS BIGINT) AS hops
             FROM walk w JOIN qr_sp_edges e ON e.src = w.doc_id
-            WHERE w.hops < {hops}
+            WHERE w.hops < {_SP_HOPS}
         )
         SELECT doc_id, CAST(min(dist) AS BIGINT) AS wdist
         FROM walk GROUP BY doc_id
     """)
 
 
-def _shortest_paths_oracle_sql(hops: int = _SP_HOPS) -> str:
+def _shortest_paths_oracle_sql() -> str:
     return _SIG_CTE.replace("WITH", "WITH RECURSIVE", 1) + f"""
         , bands AS ({_BANDS_UNION}),
         cand AS (
@@ -1111,7 +1106,7 @@ def _shortest_paths_oracle_sql(hops: int = _SP_HOPS) -> str:
                    CAST(w.dist + e.wt AS BIGINT) AS dist,
                    CAST(w.hops + 1 AS BIGINT) AS hops
             FROM walk w JOIN edges e ON e.src = w.doc_id
-            WHERE w.hops < {hops}
+            WHERE w.hops < {_SP_HOPS}
         )
         SELECT doc_id, CAST(min(dist) AS BIGINT) AS wdist
         FROM walk GROUP BY doc_id

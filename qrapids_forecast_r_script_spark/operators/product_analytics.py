@@ -1937,10 +1937,10 @@ def event_markov_stationary(spark: SparkSession, sf_dir: str
 QUERIES["event_markov_stationary"] = event_markov_stationary
 
 
-def _markov_stationary_oracle_sql(iters: int = _MS_ITERS) -> str:
+def _markov_stationary_oracle_sql() -> str:
     prev = "pi0"
     steps = []
-    for i in range(iters):
+    for i in range(_MS_ITERS):
         cur = f"pi{i + 1}"
         steps.append(f"""
         {cur} AS (
@@ -3140,9 +3140,6 @@ ORACLES["mh_pooled_odds_ratio"] = """
                  / CAST(sum(b) * sum(c) AS DOUBLE), 6) AS or_crude
     FROM terms
 """
-
-
-_JS_K = 25      # number of nation groups (fixed TPC-H dimension)
 
 
 def james_stein_nation_means(spark: SparkSession,

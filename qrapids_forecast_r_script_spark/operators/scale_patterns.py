@@ -377,13 +377,11 @@ def salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMS_P = 4294967311
 _CMS_PARAMS = [(1103515245, 12345), (214013, 2531011),
                (22695477, 1), (1664525, 1013904223)]
-_CMS_DEPTH = len(_CMS_PARAMS)
 _CMS_WIDTH = 256
 _CMS_TOP = 10
 
 
-def cms_heavy_hitters(spark: SparkSession, sf_dir: str,
-                      width: int = _CMS_WIDTH) -> DataFrame:
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min-sketch heavy hitters (Cormode & Muthukrishnan 2005)
     built in PURE Catalyst: the per-user event-count estimate is
     ``min over d of counter[d][h_d(user)]`` on a fixed depth×width
@@ -406,7 +404,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str,
     cell_structs = [
         F.struct(F.lit(d).alias("d"),
                  ((F.col("user_id") * F.lit(a) + F.lit(b))
-                  % F.lit(_CMS_P) % F.lit(width)).alias("cell"))
+                  % F.lit(_CMS_P) % F.lit(_CMS_WIDTH)).alias("cell"))
         for d, (a, b) in enumerate(_CMS_PARAMS)]
     counters = (ev.select(F.explode(F.array(*cell_structs)).alias("x"))
                 .groupBy(F.col("x.d").alias("d"),

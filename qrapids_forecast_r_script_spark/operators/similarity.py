@@ -27,12 +27,14 @@ from ..sources import load_table
 
 _TOP_K = 10
 _N_QUERIES = 5
+_EMB_DIM = 64        # width of every vector in the embeddings table
 
 # IVF coarse quantizer: FIXED centroid count + probe width — both constants,
 # so the centroid broadcast and the per-vector assignment cost are
 # independent of corpus size (the round-1 N/50 scheme grew with N).  At
 # production scale K would be ~4096; 32 keeps cells populated at the test
-# corpus sizes (500-2000 vectors) — both are exposed as function args.
+# corpus sizes (500-2000 vectors).  `ivf_topk` keeps ``nprobe`` as an
+# argument because `ivf_nprobe_sweep` runs it at several probe widths.
 _IVF_K = 32
 _IVF_NPROBE = 4
 
@@ -42,7 +44,6 @@ _IVF_NPROBE = 4
 # 0.935 recall of the exact within-label pairs at sf0.01 vs 0.396 for 4x4.
 _ND_BANDS = 12
 _ND_BITS = 3
-_ND_DIM = 64
 _ND_THRESHOLD = 0.25
 
 
@@ -129,7 +130,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nd_planes() -> list[list[float]]:
     rng = np.random.default_rng(20250813)
-    return rng.standard_normal((_ND_BANDS * _ND_BITS, _ND_DIM)).tolist()
+    return rng.standard_normal((_ND_BANDS * _ND_BITS, _EMB_DIM)).tolist()
 
 
 def _nd_band_vals(vec: str) -> list[Column]:
@@ -215,9 +216,12 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["vec_a", "vec_b"]))
 
 
-def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+_LSH_PLANES = 8      # sign bits per LSH bucket (ann_lsh / multiprobe)
+
+
+def _hyperplanes() -> list[list[float]]:
     rng = np.random.default_rng(20240813)
-    return rng.standard_normal((n_planes, dim)).tolist()
+    return rng.standard_normal((_LSH_PLANES, _EMB_DIM)).tolist()
 
 
 def _lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
@@ -236,8 +240,7 @@ def _lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
-                 dim: int = 64) -> DataFrame:
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via random-hyperplane LSH: bucket = sign bits of 8 seeded
     projections; exact cosine re-rank within each query's bucket.
 
@@ -245,7 +248,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
     candidate count drops ~2^planes-fold; recall measured in tests.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(dim, n_planes)
+    planes = _hyperplanes()
 
     with_bucket = (emb.select("vec_id", _as_double("embedding").alias("vec"))
                    .withColumn("bucket", _lsh_bucket(F.col("vec"), planes))
@@ -264,8 +267,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, n_planes: int = 8,
     return _top_k(scored)
 
 
-def _ivf_assigned(spark: SparkSession, sf_dir: str,
-                  k: int = _IVF_K) -> DataFrame:
+def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF index chain shared by :func:`ivf_topk` and the nprobe
     sweep: every vector ranked against the fixed k=32 hash-sampled
     centroids — (vec_id, vec, vnorm, centroid_id, csim, rn)."""
@@ -281,7 +283,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str,
     cents = (vecs
              .orderBy(F.md5(F.col("vec_id").cast("string").cast("binary")),
                       F.col("vec_id"))
-             .limit(k)
+             .limit(_IVF_K)
              .select(F.col("vec_id").alias("centroid_id"),
                      F.col("vec").alias("cvec"),
                      F.col("vnorm").alias("cnorm")))
@@ -295,7 +297,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str,
             .withColumn("rn", F.row_number().over(wassign)))
 
 
-def ivf_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
+def ivf_topk(spark: SparkSession, sf_dir: str,
              nprobe: int = _IVF_NPROBE,
              assigned: DataFrame | None = None) -> DataFrame:
     """IVF (inverted-file) ANN — the second scale path besides LSH.
@@ -316,7 +318,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
     cell, so probing nprobe distinct cells never duplicates a candidate.
     Recall loss comes only from nprobe, measured in tests.
     """
-    assigned = _ivf_assigned(spark, sf_dir, k) if assigned is None \
+    assigned = _ivf_assigned(spark, sf_dir) if assigned is None \
         else assigned
     cell = (assigned.where(F.col("rn") == 1)
             .select("vec_id", "vec", "vnorm", "centroid_id"))
@@ -339,29 +341,26 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
 # independent of corpus size — same scale contract as the fixed-k IVF.
 _PQ_M = 16         # subspaces (64 dims → 4 dims each)
 _PQ_CODES = 64     # codes per subspace → 16×6 bits = 12 bytes/vector
-_PQ_DIM = 64
 _PQ_SHORTLIST = 50  # ADC candidates kept for the exact re-rank
 _PQ_TRAIN = 1024    # codebook training sample (bounded — FAISS-style:
                     # train the quantizer on a fixed-size sample, then
                     # encode the full corpus exactly once)
 
 
-def pq_topk(spark: SparkSession, sf_dir: str, m: int = _PQ_M,
-            n_codes: int = _PQ_CODES,
-            shortlist: int = _PQ_SHORTLIST) -> DataFrame:
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with exact re-rank (Jégou et al. 2011,
     "Product Quantization for Nearest Neighbor Search") — the
     memory-bound scale path: each vector is stored as m small code ids
     (16×6 bits = 12 bytes vs 256 bytes raw), query-to-corpus distance is
     an asymmetric-distance (ADC) sum of m precomputed scalars, and only
-    the ADC top-``shortlist`` candidates are touched with full-width
+    the ADC top-``_PQ_SHORTLIST`` candidates are touched with full-width
     exact cosine — the standard shortlist/re-rank architecture, so the
     returned cosines are EXACT and recall loss comes only from the
     shortlist cut (0.84 recall@10 measured vs brute force at sf0.01).
 
     Codebook: TRAINED per subspace with one rounded-Lloyd round (round
     3; previously a hash-sample stand-in): init codes are the subvectors
-    of the ``n_codes`` corpus vectors with the smallest ``md5(vec_id)``
+    of the ``_PQ_CODES`` corpus vectors with the smallest ``md5(vec_id)``
     (deterministic, reproducible), then every subvector is assigned to
     its nearest init code and each code is replaced by its cell's
     per-dimension mean in unit-normalized space, rounded at 6 dp so the
@@ -388,7 +387,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, m: int = _PQ_M,
     ranking, with id tiebreaks — bit-reproducible in the DuckDB oracle
     (both sides fold left-to-right in double).
     """
-    sub_len = _PQ_DIM // m
+    sub_len = _EMB_DIM // _PQ_M
     emb = load_table(spark, sf_dir, "embeddings")
     # Unit-normalization is carried ALGEBRAICALLY via per-vector scalar
     # norms instead of materializing normalized arrays:
@@ -411,7 +410,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, m: int = _PQ_M,
             _norm(F.col("rvec")).alias(norm_out),
             F.posexplode(F.array(*[
                 F.slice(F.col("rvec"), s * sub_len + 1, sub_len)
-                for s in range(m)])).alias("sub_idx", vec_out))
+                for s in range(_PQ_M)])).alias("sub_idx", vec_out))
 
     def _l2(a: str, b: str, na: str, nb: str) -> Column:
         av, bv, nav, nbv = F.col(a), F.col(b), F.col(na), F.col(nb)
@@ -430,7 +429,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, m: int = _PQ_M,
     # of the 6.2 s total at sf0.1 in the scored stage alone).
     codebook = _subs(
         raw.orderBy(F.md5(F.col("vec_id").cast("string").cast("binary")),
-                    F.col("vec_id")).limit(n_codes),
+                    F.col("vec_id")).limit(_PQ_CODES),
         "code_src", "cvec", "cnorm").withColumn(
             "code_id", F.dense_rank().over(
                 Window.partitionBy("sub_idx").orderBy("code_src")))
@@ -551,7 +550,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, m: int = _PQ_M,
     cands = (scored
              .where(F.col("query_id") != F.col("vec_id"))
              .withColumn("adc_rank", F.row_number().over(wadc))
-             .where(F.col("adc_rank") <= shortlist)
+             .where(F.col("adc_rank") <= _PQ_SHORTLIST)
              .select("query_id", "vec_id"))
     # exact re-rank on full raw vectors (cosine = dot / norm product)
     corpus = raw.select("vec_id", F.col("rvec").alias("nvec"),
@@ -594,8 +593,7 @@ def _argmax_cell(vecs: DataFrame, cents: DataFrame) -> DataFrame:
             .withColumn("rn", F.row_number().over(w)))
 
 
-def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
-                    nprobe: int = _IVF_NPROBE) -> DataFrame:
+def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with k-means-refined centroids — the production form of
     :func:`ivf_topk`, closing its documented "sample as a stand-in for
     k-means" shortcut while KEEPING the exact DuckDB oracle.
@@ -630,7 +628,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
     cents = (vecs
              .orderBy(F.md5(F.col("vec_id").cast("string").cast("binary")),
                       F.col("vec_id"))
-             .limit(k)
+             .limit(_IVF_K)
              .select(F.col("vec_id").alias("centroid_id"),
                      F.col("vec").alias("cvec"),
                      F.col("vnorm").alias("cnorm")))
@@ -666,7 +664,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
     cell = (assigned.where(F.col("rn") == 1)
             .select("vec_id", "vec", "vnorm", "centroid_id"))
     queries = (assigned.where((F.col("vec_id") < _N_QUERIES)
-                              & (F.col("rn") <= nprobe))
+                              & (F.col("rn") <= _IVF_NPROBE))
                .select(F.col("vec_id").alias("query_id"),
                        F.col("vec").alias("qvec"),
                        F.col("vnorm").alias("qnorm"), "centroid_id"))
@@ -684,7 +682,6 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = _IVF_K,
 # as the PQ subspaces, standing in for real per-token embeddings the
 # synthetic table doesn't carry).
 _MS_TOKENS = 8
-_MS_DIM = 64
 
 
 def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -706,7 +703,7 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered identically on both engines (Spark x/0 is NULL but DuckDB
     is Inf — the divergence class the drift guard documents).
     """
-    sub_len = _MS_DIM // _MS_TOKENS
+    sub_len = _EMB_DIM // _MS_TOKENS
     emb = load_table(spark, sf_dir, "embeddings")
     toks = (emb.select(
         "vec_id",
@@ -913,8 +910,7 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                cosine.alias("cosine")), "trunc_cosine")
 
 
-def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
-                        n_planes: int = 8, dim: int = 64) -> DataFrame:
+def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN (Lv et al. 2007, "Multi-Probe LSH: Efficient
     Indexing for High-Dimensional Similarity Search"): instead of more
     hash tables, each query ALSO probes the buckets at Hamming
@@ -931,7 +927,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
     the entire point of the technique at 100 TB.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(dim, n_planes)
+    planes = _hyperplanes()
 
     with_bucket = (emb.select("vec_id", _as_double("embedding").alias("vec"))
                    .withColumn("bucket", _lsh_bucket(F.col("vec"), planes))
@@ -939,7 +935,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str,
     probe_arr = F.array(
         F.col("qbucket"),
         *[F.col("qbucket").bitwiseXOR(F.lit(1 << i))
-          for i in range(n_planes)])
+          for i in range(_LSH_PLANES)])
     queries = (with_bucket.orderBy("vec_id").limit(_N_QUERIES)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("vec").alias("qvec"),
@@ -1123,8 +1119,7 @@ QUERIES = {
 }
 
 
-def _ivf_kmeans_oracle_sql(k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
-                           rounds: int = _KM_ROUNDS) -> str:
+def _ivf_kmeans_oracle_sql() -> str:
     """Unrolled-Lloyd IVF oracle: each refinement round is an
     assignment CTE + a per-(centroid, dim) rounded mean rebuilt into a
     list — the same computation the Spark side runs, in pure SQL."""
@@ -1137,9 +1132,9 @@ def _ivf_kmeans_oracle_sql(k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
             FROM embeddings
         ), cents0 AS (
             SELECT vec_id AS centroid_id, emb AS cemb FROM vecs
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}
+            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_IVF_K}
         )"""]
-    for r in range(rounds):
+    for r in range(_KM_ROUNDS):
         c = cos.format(a="v.emb", b="c.cemb")
         parts.append(f"""
         assign{r} AS (
@@ -1166,13 +1161,13 @@ def _ivf_kmeans_oracle_sql(k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
             SELECT v.vec_id, v.emb, c.centroid_id,
                    row_number() OVER (PARTITION BY v.vec_id
                        ORDER BY {c} DESC, c.centroid_id ASC) AS rn
-            FROM vecs v CROSS JOIN cents{rounds} c
+            FROM vecs v CROSS JOIN cents{_KM_ROUNDS} c
         ), final_cell AS (
             SELECT vec_id, emb, centroid_id FROM final_assign WHERE rn = 1
         ), qprobe AS (
             SELECT vec_id AS query_id, emb AS qemb, centroid_id
             FROM final_assign
-            WHERE vec_id < {_N_QUERIES} AND rn <= {nprobe}
+            WHERE vec_id < {_N_QUERIES} AND rn <= {_IVF_NPROBE}
         ), scored AS (
             SELECT q.query_id, v.vec_id AS neighbor_id, {sim} AS cosine
             FROM qprobe q JOIN final_cell v ON q.centroid_id = v.centroid_id
@@ -1187,12 +1182,12 @@ def _ivf_kmeans_oracle_sql(k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
     """)
 
 
-def _ann_lsh_oracle_sql(n_planes: int = 8, dim: int = 64) -> str:
+def _ann_lsh_oracle_sql() -> str:
     """ANN-LSH oracle with the seeded hyperplanes inlined as double
     literals (repr round-trips exactly), the same technique as the
     neardup oracle — upgrading this query from rows-only to fully
     hash-checked."""
-    planes = _hyperplanes(dim, n_planes)
+    planes = _hyperplanes()
     bits = []
     for i, plane in enumerate(planes):
         lits = ", ".join(repr(float(v)) for v in plane)
@@ -1337,16 +1332,16 @@ ORACLES = {
             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_PQ_CODES}
         ), codebook AS (
             SELECT s.sub_idx, c.code_src, c.vn AS cnorm,
-                   c.remb[s.sub_idx * {_PQ_DIM // _PQ_M} + 1
-                          : s.sub_idx * {_PQ_DIM // _PQ_M} + {_PQ_DIM // _PQ_M}]
+                   c.remb[s.sub_idx * {_EMB_DIM // _PQ_M} + 1
+                          : s.sub_idx * {_EMB_DIM // _PQ_M} + {_EMB_DIM // _PQ_M}]
                        AS cvec,
                    row_number() OVER (PARTITION BY s.sub_idx
                                       ORDER BY c.code_src) AS code_id
             FROM srcs c, range(0, {_PQ_M}) s(sub_idx)
         ), vsubs AS (
             SELECT v.vec_id, v.vn, s.sub_idx,
-                   v.remb[s.sub_idx * {_PQ_DIM // _PQ_M} + 1
-                          : s.sub_idx * {_PQ_DIM // _PQ_M} + {_PQ_DIM // _PQ_M}]
+                   v.remb[s.sub_idx * {_EMB_DIM // _PQ_M} + 1
+                          : s.sub_idx * {_EMB_DIM // _PQ_M} + {_EMB_DIM // _PQ_M}]
                        AS svec
             FROM normed v, range(0, {_PQ_M}) s(sub_idx)
         ), tsrcs AS (
@@ -1384,7 +1379,7 @@ ORACLES = {
                    round(avg(v.svec[p.pos] / v.vn), 6) AS cval
             FROM assign0 a
             JOIN vsubs v USING (vec_id, sub_idx),
-                 range(1, {_PQ_DIM // _PQ_M} + 1) p(pos)
+                 range(1, {_EMB_DIM // _PQ_M} + 1) p(pos)
             GROUP BY 1, 2, 3
         ), codebook2 AS (
             SELECT sub_idx, code_id,
@@ -1475,9 +1470,9 @@ ORACLES["maxsim_multivector_topk"] = f"""
         FROM embeddings
     ), toks AS (
         SELECT v.vec_id, s.tok_idx,
-               v.remb[s.tok_idx * {_MS_DIM // _MS_TOKENS} + 1
-                      : s.tok_idx * {_MS_DIM // _MS_TOKENS}
-                        + {_MS_DIM // _MS_TOKENS}] AS tvec
+               v.remb[s.tok_idx * {_EMB_DIM // _MS_TOKENS} + 1
+                      : s.tok_idx * {_EMB_DIM // _MS_TOKENS}
+                        + {_EMB_DIM // _MS_TOKENS}] AS tvec
         FROM rawv v, range(0, {_MS_TOKENS}) s(tok_idx)
     ), ntoks AS (
         SELECT vec_id, tok_idx, tvec,
@@ -1586,17 +1581,18 @@ ORACLES["matryoshka_topk"] = f"""
 """
 
 
-def _multiprobe_oracle_sql(n_planes: int = 8, dim: int = 64) -> str:
+def _multiprobe_oracle_sql() -> str:
     """Multi-probe oracle: the LSH bucket expression plus an unnested
     probe list (exact bucket + each 1-bit flip via xor)."""
-    planes = _hyperplanes(dim, n_planes)
+    planes = _hyperplanes()
     bits = []
     for i, plane in enumerate(planes):
         lits = ", ".join(repr(float(v)) for v in plane)
         bits.append(f"CASE WHEN list_dot_product(emb, [{lits}]) >= 0 "
                     f"THEN {1 << i} ELSE 0 END")
     bucket = " + ".join(bits)
-    probes = ", ".join(f"xor(bucket, {1 << i})" for i in range(n_planes))
+    probes = ", ".join(f"xor(bucket, {1 << i})"
+                       for i in range(_LSH_PLANES))
     return f"""
         WITH vecs AS (
             SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -1717,12 +1713,12 @@ _JL_DIM = 8          # target dimensionality
 _JL_PAIRS = 32       # evaluation pairs: (2i, 2i+1) for i < 32
 
 
-def _jl_signs(dim: int = 64, k: int = _JL_DIM) -> list[list[float]]:
+def _jl_signs() -> list[list[float]]:
     """Seeded ±1 projection matrix (Achlioptas 2003 database-friendly
     JL: Rademacher entries work as well as Gaussians) — same inlining
     contract as `_hyperplanes`."""
     rng = np.random.default_rng(20260814)
-    return rng.choice([-1.0, 1.0], size=(k, dim)).tolist()
+    return rng.choice([-1.0, 1.0], size=(_JL_DIM, _EMB_DIM)).tolist()
 
 
 def jl_projection_distortion(spark: SparkSession,

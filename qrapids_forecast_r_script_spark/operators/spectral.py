@@ -175,7 +175,7 @@ _CEN_SQL = f"""
         )
 """
 
-def _pca_oracle_sql(iters: int = _PCA_ITERS) -> str:
+def _pca_oracle_sql() -> str:
     """Generate the unrolled power-iteration oracle (the BPE
     `_round_sql` pattern: the loop writes the CTE chain the Spark side
     builds as a plan loop).
@@ -190,7 +190,7 @@ def _pca_oracle_sql(iters: int = _PCA_ITERS) -> str:
         proj0 AS MATERIALIZED (
             SELECT vec_id, round(c, {_DP}) AS p FROM cen WHERE pos = 0
         )"""]
-    for k in range(1, iters + 1):
+    for k in range(1, _PCA_ITERS + 1):
         ctes.append(f"""
         w{k}r AS (
             SELECT pos, round(avg(p * c), {_DP}) AS wr
@@ -208,7 +208,7 @@ def _pca_oracle_sql(iters: int = _PCA_ITERS) -> str:
         projf AS (
             SELECT p.vec_id, e.label, p.p AS proj,
                    CAST(round(p.p * 1e6, 0) AS BIGINT) AS p6
-            FROM proj{iters} p
+            FROM proj{_PCA_ITERS} p
             JOIN (SELECT DISTINCT vec_id, label FROM embeddings) e
               USING (vec_id)
         )

@@ -132,11 +132,10 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("score6") > 0) == teacher).alias("teacher_agrees"))
 
 
-def sequence_packing_examples(spark: SparkSession, sf_dir: str,
-                              seq_len: int = _SEQ_LEN,
-                              bucket_width: int = _PACK_BUCKET) -> DataFrame:
+def sequence_packing_examples(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
     """Pack the corpus (concatenated in doc_id order) into fixed
-    ``seq_len``-token training examples and report, per example, the
+    ``_SEQ_LEN``-token training examples and report, per example, the
     documents it spans.
 
     Token offsets come from the corpus-wide EXCLUSIVE prefix sum,
@@ -154,7 +153,7 @@ def sequence_packing_examples(spark: SparkSession, sf_dir: str,
     toks = (docs
             .select("doc_id",
                     F.size(F.split("text", " ")).cast("bigint").alias("n"))
-            .withColumn("bucket", F.expr(f"doc_id div {bucket_width}")))
+            .withColumn("bucket", F.expr(f"doc_id div {_PACK_BUCKET}")))
     bucket_tot = toks.groupBy("bucket").agg(F.sum("n").alias("bt"))
     wb = (Window.orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, -1))
@@ -170,10 +169,10 @@ def sequence_packing_examples(spark: SparkSession, sf_dir: str,
     ex = staged.select(
         "doc_id", "n", "s",
         F.explode(F.expr(
-            f"sequence(s div {seq_len}, (s + n - 1) div {seq_len})"))
+            f"sequence(s div {_SEQ_LEN}, (s + n - 1) div {_SEQ_LEN})"))
         .alias("example_id"))
-    lo = F.col("example_id") * seq_len
-    hi = (F.col("example_id") + 1) * seq_len
+    lo = F.col("example_id") * _SEQ_LEN
+    hi = (F.col("example_id") + 1) * _SEQ_LEN
     return (ex.groupBy("example_id")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("first_doc_id"),

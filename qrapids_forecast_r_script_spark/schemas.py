@@ -46,12 +46,6 @@ SERIES = StructType([
     StructField("y", DoubleType()),
 ])
 
-# Prophet frame (SURVEY §1.3): the one date-aware path (R:35-38).
-PROPHET_FRAME = StructType([
-    StructField("ds", DateType()),
-    StructField("y", DoubleType()),
-])
-
 # ---------------------------------------------------------------------------
 # Forecast output (SURVEY §1.4): long-row form of the reference's named list
 # of 5 equal-length vectors (R:99-100).  lower1/upper1 = 80% prediction
@@ -154,8 +148,6 @@ EMBEDDINGS = StructType([
     StructField("embedding", ArrayType(FloatType())),
     StructField("label", IntegerType()),
 ])
-
-EVENT_PROPS_JSON = StructType([StructField("k", LongType())])
 
 # Multimodal column convention (north-star extension): opaque payload bytes +
 # typed metadata. Decode/extract runs as mapInPandas (operators/multimodal.py).

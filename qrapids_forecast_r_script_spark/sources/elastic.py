@@ -46,7 +46,6 @@ def es_reader(spark: SparkSession, host: str, port: int = 9200,
 
 
 def search_element_es(spark: SparkSession, host: str, name: str, index: str,
-                      limit: int = MAX_SERIES_LENGTH,
                       **conn_kwargs) -> DataFrame:
     """searchElement (R:23-40) against a live ES cluster.
 
@@ -84,4 +83,4 @@ def search_element_es(spark: SparkSession, host: str, name: str, index: str,
                       F.to_date("evaluationDate").alias("evaluationDate"),
                       F.col("value").cast("double").alias("value"))
             .orderBy("evaluationDate")
-            .limit(limit))
+            .limit(MAX_SERIES_LENGTH))

@@ -57,20 +57,20 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sf_dir))
 
 
+# shuffle partitions (= state stores per stateful operator) of a local
+# availableNow replay — see the state-store-sizing note on
+# :func:`_run_available_now`
+_STREAM_SHUFFLE = 4
+
+
 @contextmanager
 def _scoped_stream_shuffle(spark: SparkSession):
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a local
-    availableNow replay (SPARK_GRAFT_STREAM_SHUFFLE, default 4) — see
-    the state-store-sizing note on :func:`_run_available_now`.  Safe
-    because every caller runs streaming queries sequentially and the
-    query pins the partition count into its own fresh checkpoint at
-    start."""
-    # int() at read time: a malformed knob must fail HERE, not as an
-    # opaque planner error deep inside the streaming query (the
-    # session.py SPARK_GRAFT_SHUFFLE precedent)
-    parts = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
+    """Temporarily set ``spark.sql.shuffle.partitions`` to
+    ``_STREAM_SHUFFLE`` for a local availableNow replay.  Safe because
+    every caller runs streaming queries sequentially and the query pins
+    the partition count into its own fresh checkpoint at start."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE))
     try:
         yield
     finally:
@@ -96,9 +96,8 @@ def _run_available_now(spark: SparkSession, writer: DataStreamWriter,
     stores.  At the session default of 32, the left-outer join spends
     8-30 s (high variance) on ~384 store commits; at 4 it runs ~3.5 s
     with identical output (19 772 rows either way — stream content is
-    partition-count-invariant).  On a real cluster the right number is
-    sized to cores × state volume, so it stays a knob
-    (SPARK_GRAFT_STREAM_SHUFFLE, default 4) rather than a constant.
+    partition-count-invariant), hence ``_STREAM_SHUFFLE = 4``; on a
+    real cluster the right number is sized to cores × state volume.
     The conf is scoped-and-restored: stateful queries capture the
     partition count from the session at START (it is then pinned in the
     checkpoint), and every caller here runs streaming queries

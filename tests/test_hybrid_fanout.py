@@ -28,11 +28,13 @@ def test_fanout_weights_equal_single_task(spark, metrics):
     same 1/RMSE normalization — only the orchestration differs."""
     from qrapids_forecast_r_script_spark.forecast.api import prepare_series
     from qrapids_forecast_r_script_spark.forecast.hybrid_fanout import (
-        hybrid_fanout_components)
+        _assemble_series, _components_from_series)
     from qrapids_forecast_r_script_spark.forecast.models.hybrid import (
         fit_hybrid)
 
-    got = hybrid_fanout_components(spark, metrics).toPandas()
+    got = _components_from_series(
+        spark, _assemble_series(metrics, 14).localCheckpoint(), 7, 14)[0]
+    got = got.toPandas()
     assert len(got)  # at least one (series, component) row
     mp = metrics.toPandas()
     for (name, index), g in mp.groupby(["name", "index"]):
@@ -74,14 +76,14 @@ def test_fanout_unit_explosion_shape(spark, metrics):
     final-fit unit per component plus ≤4 CV folds per component, with
     fold windows/origins exactly matching _cv_rmse's slicing."""
     from qrapids_forecast_r_script_spark.forecast.hybrid_fanout import (
-        _series_units)
+        _assemble_series, _series_units)
     from qrapids_forecast_r_script_spark.forecast.models.hybrid import (
         _COMPONENTS)
 
     from qrapids_forecast_r_script_spark.forecast.hybrid_fanout import (
         _ARIMA_GRID)
 
-    units = _series_units(metrics, 7, 14, 14).toPandas()
+    units = _series_units(_assemble_series(metrics, 14), 7, 14).toPandas()
     for (name, index), g in units.groupby(["name", "index"]):
         n = len(g.iloc[0]["y"])
         h = 14

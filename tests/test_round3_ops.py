@@ -176,14 +176,15 @@ def test_ann_eval_ndcg_rerank_guarantee(spark, sf_dir):
         assert r.dcg <= perfect + 1e-9, (r, perfect)
 
 
-def test_cms_overestimates_under_forced_collisions(spark, sf_dir):
+def test_cms_overestimates_under_forced_collisions(spark, sf_dir,
+                                                   monkeypatch):
     """Shrink the sketch to width 4 so collisions are guaranteed: the
     Count-Min bound est >= exact must STILL hold for every reported
     user, and at least one estimate must strictly exceed its exact
     count (collisions inflate, never deflate)."""
-    from qrapids_forecast_r_script_spark.operators.scale_patterns import (
-        cms_heavy_hitters)
-    rows = cms_heavy_hitters(spark, sf_dir, width=4).collect()
+    from qrapids_forecast_r_script_spark.operators import scale_patterns
+    monkeypatch.setattr(scale_patterns, "_CMS_WIDTH", 4)
+    rows = scale_patterns.cms_heavy_hitters(spark, sf_dir).collect()
     assert rows
     assert all(r.est_count >= r.exact_count for r in rows), rows
     assert any(r.est_count > r.exact_count for r in rows), \

@@ -271,13 +271,12 @@ def test_foreachbatch_upsert_survives_restart_exactly_once(spark, tmp_path):
     assert final == {1: 9.0, 2: 2.0, 3: 3.0}
 
 
-def test_stream_shuffle_conf_is_scoped_and_restored(spark, sf_dir):
+def test_stream_shuffle_conf_is_scoped_and_restored(spark, sf_dir,
+                                                    monkeypatch):
     """The availableNow replay sizes spark.sql.shuffle.partitions down
-    for state-store count (default 4, SPARK_GRAFT_STREAM_SHUFFLE) and
-    must ALWAYS restore the session value — even on failure — so batch
-    queries keep the session's parallelism."""
-    import os as _os
-
+    for state-store count (``_STREAM_SHUFFLE``) and must ALWAYS restore
+    the session value — even on failure — so batch queries keep the
+    session's parallelism."""
     import pytest as _pytest
 
     from qrapids_forecast_r_script_spark.streaming import queries as sq
@@ -285,16 +284,13 @@ def test_stream_shuffle_conf_is_scoped_and_restored(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     sq.events_stream_tumbling_1h(spark, sf_dir)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # the knob is read per-run
-    _os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "2"
-    try:
+    # the constant is read per-run
+    monkeypatch.setattr(sq, "_STREAM_SHUFFLE", 2)
+    with sq._scoped_stream_shuffle(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # restore must happen on the failure path too
+    with _pytest.raises(RuntimeError):
         with sq._scoped_stream_shuffle(spark):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-        # restore must happen on the failure path too
-        with _pytest.raises(RuntimeError):
-            with sq._scoped_stream_shuffle(spark):
-                raise RuntimeError("boom")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    finally:
-        _os.environ.pop("SPARK_GRAFT_STREAM_SHUFFLE", None)
+            raise RuntimeError("boom")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
