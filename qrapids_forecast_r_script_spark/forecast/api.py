@@ -71,10 +71,21 @@ def fit_and_forecast_pdf(pdf: pd.DataFrame, method: str, frequency: int,
     index = str(pdf["index"].iloc[0])
     y, ds_days = prepare_series(pdf)
     seed_key = (name, index, method)
-    try:
+
+    def bands():
         model = fit_method(method, y, frequency, ds_days=ds_days,
                            horizon=horizon, seed_key=seed_key)
-        bands = forecast_fitted(model, horizon, seed_key=seed_key)
+        return forecast_fitted(model, horizon, seed_key=seed_key)
+
+    return forecast_or_nan(name, index, method, horizon, bands)
+
+
+def forecast_or_nan(name: str, index: str, method: str, horizon: int,
+                    bands) -> pd.DataFrame:
+    """Forecast rows from ``bands()``, shared by the single-task path
+    and the fan-outs' per-series combine."""
+    try:
+        out = bands()
     except _DEGENERATE_ERRORS as exc:
         # degenerate series: emit NaN bands rather than killing the job,
         # but leave a trace in executor logs
@@ -83,8 +94,8 @@ def fit_and_forecast_pdf(pdf: pd.DataFrame, method: str, frequency: int,
             "forecast failed for series (%s, %s, %s): %r — emitting NaN",
             name, index, method, exc)
         nan = np.full(horizon, np.nan)
-        bands = {k: nan for k in _FORECAST_KEYS}
-    return forecast_rows(name, index, method, bands)
+        out = {k: nan for k in _FORECAST_KEYS}
+    return forecast_rows(name, index, method, out)
 
 
 # Series-length threshold where the HYBRID/BAGGEDETS fan-outs beat the

@@ -9,17 +9,18 @@ per series (``seeded_rng(*seed_key, "mbb")``) and replicate generation
 is cheap relative to the fit (one STL decomposition + block resampling),
 so each Spark task can regenerate the replicate list locally and fit
 exactly ONE member — bit-identical to the member the sequential loop
-fits, making the reassembled ensemble exactly equal
-(``tests/test_bagged_fanout.py``).
+fits.
 
 Plan shape mirrors ``hybrid_fanout``: JVM series assembly (shared
-``_assemble_series``) → JVM replicate explosion → round-robin spread →
-one ``mapInPandas`` fit boundary → JVM ensemble reassembly
-(mean/min/max envelope per step, the reference's single band duplicated
-into both pairs, R:216-217).  NaN members poison the whole series step
-exactly like numpy's mean/min/max do sequentially (Arrow nullifies NaN
-array elements, and Spark's min would otherwise skip what numpy
-propagates — same class of fix as the hybrid combine, r6 review).
+``_assemble_series``) → JVM replicate explosion → range spread → one
+``mapInPandas`` fit stage → one ``cogroup`` of each series with its
+members, whose per-series call stacks the member point forecasts in
+replicate order and hands them to the model's own ``envelope`` (mean +
+min/max, the single band duplicated into both pairs, R:216-217).  A
+failed member NaNs the series through ``api.forecast_or_nan``, the rule
+the single-task path applies, so the rows equal
+``forecast_batch(..., "BAGGEDETS")`` bit for bit
+(``tests/test_bagged_fanout.py``).
 """
 
 from __future__ import annotations
@@ -33,8 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
+from .api import forecast_or_nan
 from .hybrid_fanout import _assemble_series
-from .models.bagged import NUM_REPLICATES
+from .models.bagged import NUM_REPLICATES, envelope
 from .models.common import DEGENERATE_ERRORS
 
 _REP_RESULT = T.StructType([
@@ -42,8 +44,8 @@ _REP_RESULT = T.StructType([
     T.StructField("index", T.StringType()),
     T.StructField("rep", T.LongType()),
     # 'member' (points set) | 'fail' (a member fit/forecast degenerated
-    # → the sequential path would raise out of fit_fn / NaN the series,
-    # so the batch combine NaNs every step of the series)
+    # → the sequential path would raise out of fit_bagged_ets and NaN
+    # the series, so the per-series combine does too)
     T.StructField("kind", T.StringType()),
     T.StructField("points", T.ArrayType(T.DoubleType())),
 ])
@@ -104,11 +106,29 @@ def _run_members(frequency: int, horizon: int):
     return fn
 
 
+def _combine(horizon: int):
+    """The per-series stage: the series' members in, its forecast rows
+    out."""
+    h = int(horizon)
+
+    def fn(key, _series: pd.DataFrame, members: pd.DataFrame) -> pd.DataFrame:
+        def bands():
+            if (members["kind"] == "fail").any():
+                raise ValueError("a bagged ETS member degenerated")
+            points = members.sort_values("rep")["points"]
+            return envelope(np.array([np.asarray(p, dtype=float)
+                                      for p in points]))
+
+        return forecast_or_nan(str(key[0]), str(key[1]), "BAGGEDETS", h,
+                               bands)
+
+    return fn
+
+
 def bagged_fanout_batch(spark: SparkSession, metrics: DataFrame,
                         frequency: int = 7, horizon: int = 14) -> DataFrame:
     """Drop-in for ``forecast_batch(..., "BAGGEDETS")`` output: the
-    same (name, index, method, step, 5 bands) rows — ensemble mean +
-    min/max envelope, single band duplicated (R:216-217)."""
+    same (name, index, method, step, 5 bands) rows."""
     from ..session import shuffle_width
     h = int(horizon)
     series = _assemble_series(metrics, h).localCheckpoint()
@@ -125,41 +145,8 @@ def bagged_fanout_batch(spark: SparkSession, metrics: DataFrame,
                .repartitionByRange(shuffle_width(spark),
                                    "name", "index", "rep")
                .mapInPandas(_run_members(frequency, h),
-                            schema=_REP_RESULT)
-               .localCheckpoint())  # two consumers (fail scan + combine)
-    poisoned = (members.where(F.col("kind") == "fail")
-                .select("name", "index").distinct())
-    nan = F.lit(float("nan"))
-    z = (members.where(F.col("kind") == "member")
-         .join(poisoned, ["name", "index"], "left_anti")
-         .select("name", "index",
-                 F.posexplode("points").alias("pos", "v"))
-         # Arrow nullifies NaN array elements; numpy's mean/min/max all
-         # propagate NaN sequentially, so restore it before aggregating
-         .withColumn("v", F.coalesce("v", nan)))
-    has_nan = F.max(F.when(F.isnan("v"), 1).otherwise(0)) == 1
-    combined = (z.groupBy("name", "index", F.col("pos").alias("step"))
-                .agg(F.when(has_nan, nan)
-                     .otherwise(F.avg("v")).alias("mean"),
-                     # Spark orders NaN greatest, so min() would skip a
-                     # NaN member numpy propagates — the has_nan guard
-                     # covers all three aggregates
-                     F.when(has_nan, nan)
-                     .otherwise(F.min("v")).alias("lower"),
-                     F.when(has_nan, nan)
-                     .otherwise(F.max("v")).alias("upper")))
-    full = (series.select("name", "index")
-            .withColumn("step",
-                        F.explode(F.sequence(F.lit(0), F.lit(h - 1)))))
-    return (full.join(combined, ["name", "index", "step"], "left")
-            .select("name", "index",
-                    F.lit("BAGGEDETS").alias("method"),
-                    (F.col("step") + 1).cast("int").alias("step"),
-                    F.coalesce("lower", nan).alias("lower1"),
-                    F.coalesce("lower", nan).alias("lower2"),
-                    F.coalesce("mean", nan).alias("mean"),
-                    F.coalesce("upper", nan).alias("upper1"),
-                    F.coalesce("upper", nan).alias("upper2"))
-            # .to() aligns type AND nullability with the grouped-UDF
-            # path so the forecast_batch dispatch is schema-invisible
-            .to(schemas.FORECAST))
+                            schema=_REP_RESULT))
+    key = ["name", "index"]
+    return (series.select(*key).groupBy(*key)
+            .cogroup(members.groupBy(*key))
+            .applyInPandas(_combine(h), schema=schemas.FORECAST))

@@ -1,28 +1,36 @@
-"""HYBRID fold×component fan-out — the straggler-killing batch path.
+"""HYBRID component × fold fan-out — the batch path for long series.
 
 ``fit_hybrid`` (``models/hybrid.py``, reference semantics
 ``TimeSeriesFunctions_GPL_0.5.1.R:321-344``) runs 6 component fits plus
 6 × ≤4 rolling-CV refits inside ONE task, so a single long series bounds
 the whole stage: measured 36/156/359 s single-task at 1k/5k/10k points
-(SCALE.md "HYBRID straggler budget").  This module explodes the same
-work into (series × component × fold) Spark tasks and reassembles the
-CV weights with JVM-side aggregation, cutting the critical path to the
-slowest SINGLE fit (~6× folds ≈ 30× at the 4-fold cap) while producing
-the same weights and the same combined bands (each component fit is
-internally seeded, so WHERE it runs cannot change WHAT it returns —
-``tests/test_hybrid_fanout.py`` asserts equality against the
-single-task path).
+(SCALE.md "HYBRID straggler budget").  This module only schedules that
+work: it explodes each series into (component × fold) fit units — the
+ARIMA final fit into one unit per grid order — so the critical path is
+the slowest SINGLE fit.  It combines nothing itself.  Each series and
+its unit results meet in one per-series Python call that runs the
+models' own rules: ``best_arima_candidate`` + ``finalize_arima_winner``
+for the ARIMA grid, ``fold_rmse``, ``hybrid_weights`` and
+``combine_bands`` for the ensemble, and ``api.forecast_or_nan`` for a
+degenerate series.  Every fit is internally seeded, so where it runs
+cannot change what it returns, and the rows equal
+``forecast_batch(..., "HYBRID")`` bit for bit
+(``tests/test_hybrid_fanout.py``).
 
 Plan shape (100 TB story):
 - series assembly is one ``sort_array(collect_list(struct(...)))``
-  aggregation — the same single shuffle as ``forecast_batch``;
-- unit explosion (components × CV origins + a final-fit marker) is pure
-  JVM ``explode``/``sequence`` — no Python, no extra shuffle;
-- one ``repartition`` on the unit key spreads fits across the cluster
-  (the whole point: a 10k-point series becomes ~30 independent tasks);
-- the Python boundary is exactly one ``mapInPandas`` that runs the
-  numpy fits — everything before and after (RMSE, inverse-error
-  weights, fallback shares, band combination) is built-in expressions.
+  aggregation — the same single shuffle as ``forecast_batch`` — cut
+  with ``localCheckpoint`` because two stages read it;
+- unit explosion (components × CV origins + a final-fit marker, ARIMA
+  grid orders) is pure JVM ``explode``/``sequence`` — no Python, no
+  extra shuffle;
+- one round-robin ``repartition`` spreads the fits across the cluster
+  (the whole point: a 10k-point series becomes 125 independent fit
+  units);
+- one ``mapInPandas`` runs the numpy fits;
+- one ``cogroup`` of the series with its unit results runs the
+  per-series combine: every assembled series is one group, so a series
+  whose fits all failed still gets its NaN rows.
 
 The reference's own 10k cap (R:28) bounds every unit's input; the
 fan-out exists for the n ≳ 5k tail where the single-task path is the
@@ -38,16 +46,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .. import schemas
 from ..sources.registry import MAX_SERIES_LENGTH
-from .models.arima import arima_candidate_grid
+from .api import _FORECAST_KEYS, forecast_or_nan
+from .models.arima import (_arima_short_model, arima_candidate_grid,
+                           arima_prep, best_arima_candidate,
+                           finalize_arima_winner, fit_arima_candidate)
 from .models.common import DEGENERATE_ERRORS
 from .models.hybrid import (_COMPONENTS, _component_forecast,
-                            _component_point_forecast)
-
-_BANDS = ["mean", "lower1", "lower2", "upper1", "upper2"]
+                            _component_point_forecast, combine_bands,
+                            fold_rmse, hybrid_weights)
 
 # The ARIMA final fit is itself an exhaustive ~96-order grid and was
 # measured to BE the post-fan-out straggler (301 s of a 314 s wall at
@@ -55,25 +64,29 @@ _BANDS = ["mean", "lower1", "lower2", "upper1", "upper2"]
 # exploded one level deeper: one task per candidate order, indexed into
 # the seasonal SUPERSET grid (a non-seasonal series simply skips the
 # P/Q>0 indices — the surviving subsequence keeps the enumeration
-# order, so the (crit, index) argmin reproduces fit_arima's first-best
-# tie-break exactly).
+# order, so walking the candidates by index reproduces fit_arima's
+# first-best tie-break exactly).
 _ARIMA_GRID = arima_candidate_grid(seasonal=True)
 
 _UNIT_RESULT = T.StructType([
     T.StructField("name", T.StringType()),
     T.StructField("index", T.StringType()),
     T.StructField("component", T.StringType()),
-    # 'cv' (errs set) | 'cv_fail' (poisons the component's RMSE →
+    T.StructField("origin", T.LongType()),
+    # 'cv' (errs set) | 'cv_fail' (the component gets no RMSE → the
     # fallback weight, matching _cv_rmse's any-fold-fails → None) |
     # 'final' (band arrays set) | 'final_fail' (post-fit forecast
-    # degenerated → the series gets NaN rows in the batch combine, like
+    # degenerated → the series gets NaN rows, like
     # fit_and_forecast_pdf) | 'arima_cand' (one grid order's CSS fit:
     # cand/crit/cand_x/cand_sigma2 set) | 'arima_short' (nw < 5 — the
-    # white-noise fallback marker); a final FIT that degenerates emits
-    # nothing, dropping the component exactly like fit_hybrid does
+    # white-noise fallback marker) | 'arima_fail' (a candidate raised,
+    # which would have thrown out of fit_arima → 'a' is dropped); a
+    # final FIT that degenerates emits nothing, dropping the component
+    # exactly like fit_hybrid does
     T.StructField("kind", T.StringType()),
     T.StructField("errs", T.ArrayType(T.DoubleType())),
-    *[T.StructField(b, T.ArrayType(T.DoubleType())) for b in _BANDS],
+    *[T.StructField(b, T.ArrayType(T.DoubleType()))
+      for b in _FORECAST_KEYS],
     T.StructField("cand", T.LongType()),
     T.StructField("crit", T.DoubleType()),
     T.StructField("cand_x", T.ArrayType(T.DoubleType())),
@@ -144,7 +157,6 @@ def _run_units(frequency: int, horizon: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import OrderedDict
 
-        from .models.arima import arima_prep, fit_arima_candidate
         # Bounded LRU (ADVICE r6): the cache persists across ALL batches
         # of the partition (not per-batch), and an arima_prep tuple
         # holds full y/w arrays (~160 KB at 10k points) — unbounded it
@@ -170,10 +182,10 @@ def _run_units(frequency: int, horizon: int):
                 _, fit_fn, cv_fit_fn = _COMPONENTS[r.component]
                 y = np.asarray(r.y, float)
                 base = {"name": r.name, "index": r.index,
-                        "component": r.component, "errs": None,
-                        "cand": None, "crit": None, "cand_x": None,
-                        "cand_sigma2": None,
-                        **{b: None for b in _BANDS}}
+                        "component": r.component, "origin": r.origin,
+                        "errs": None, "cand": None, "crit": None,
+                        "cand_x": None, "cand_sigma2": None,
+                        **{b: None for b in _FORECAST_KEYS}}
                 if r.origin < 0 and r.cand >= 0:  # one ARIMA grid order
                     try:
                         (_, _, seasonal, _, _, w, nw,
@@ -190,7 +202,7 @@ def _run_units(frequency: int, horizon: int):
                                                   p_, q_, P_, Q_)
                     except DEGENERATE_ERRORS:
                         # the sequential fit_arima would have thrown out
-                        # of the whole grid walk → poison the component
+                        # of the whole grid walk → drop the component
                         rows.append({**base, "kind": "arima_fail"})
                         continue
                     if fit is None:
@@ -210,20 +222,20 @@ def _run_units(frequency: int, horizon: int):
                     except DEGENERATE_ERRORS:
                         # post-fit forecast degenerate: the sequential
                         # path NaNs the whole series
-                        # (fit_and_forecast_pdf) — emit the poison
-                        # marker so the batch combine does the same
+                        # (fit_and_forecast_pdf) — emit the marker so
+                        # the per-series combine does the same
                         rows.append({**base, "kind": "final_fail"})
                         continue
                     rows.append({**base, "kind": "final",
                                  **{b: [float(v) for v in bands[b]]
-                                    for b in _BANDS}})
-                else:  # one rolling-CV fold
+                                    for b in _FORECAST_KEYS}})
+                else:  # one rolling-CV fold, as _cv_rmse runs it
                     train = y[r.origin - r.window:r.origin]
                     actual = y[r.origin:r.origin + h]
                     try:
                         model = cv_fit_fn(train, m)
                         fc = _component_point_forecast(model, h, r.component)
-                        errs = (actual - np.asarray(fc)[:len(actual)])
+                        errs = actual - fc
                         rows.append({**base, "kind": "cv",
                                      "errs": [float(e) for e in errs]})
                     except DEGENERATE_ERRORS:
@@ -233,195 +245,112 @@ def _run_units(frequency: int, horizon: int):
     return fn
 
 
-def _finalize_arima(frequency: int, horizon: int):
-    """Second (tiny) Python stage: one row per series — rebuild the
-    winning candidate into an ArimaModel (exact-ML refinement included,
-    identical to the sequential path) and forecast it."""
+def _unit_results(spark: SparkSession, series: DataFrame,
+                  frequency: int, horizon: int) -> DataFrame:
+    """Every fit unit of the assembled ``series`` frame, run: the
+    explosion, the spread, and the one ``mapInPandas`` fit stage."""
+    from ..session import shuffle_width
+    return (_series_units(series, frequency, cv_horizon=horizon)
+            # ROUND-ROBIN repartition (no columns): units are
+            # independent fits with no key-locality to preserve, and
+            # hash-distributing the few heavy units (high-order ARIMA
+            # candidates) behind one key collides them onto one task —
+            # measured 44 s → 36 s wall at n=10k from even spreading
+            # alone.  User-specified, so exempt from AQE coalescing
+            # (same rationale as forecast_batch).
+            .repartition(shuffle_width(spark))
+            .mapInPandas(_run_units(frequency, horizon),
+                         schema=_UNIT_RESULT))
+
+
+def _arima_bands(y, m, h, units: pd.DataFrame) -> dict | None:
+    """fit_arima over the fanned-out grid, then the component forecast;
+    None where fit_arima would have raised (fit_hybrid drops 'a')."""
+    kinds = set(units["kind"])
+    if "arima_fail" in kinds:
+        return None
+    try:
+        y, m, _, d, D, w, nw, include_const = arima_prep(y, m)
+        if "arima_short" in kinds:
+            model = _arima_short_model(y, m, d, D, w, nw)
+        else:
+            cands = units[units["kind"] == "arima_cand"].sort_values("cand")
+            (p, q, P, Q), (crit, x, sigma2) = best_arima_candidate(
+                (_ARIMA_GRID[int(r.cand)],
+                 (r.crit, np.asarray(r.cand_x, dtype=float), r.cand_sigma2))
+                for r in cands.itertuples(index=False))
+            model = finalize_arima_winner(y, m, d, D, w, nw, include_const,
+                                          p, q, P, Q, x, sigma2, crit)
+    except DEGENERATE_ERRORS:
+        return None
+    return _component_forecast(model, h, "a")
+
+
+def _shipped_bands(units: pd.DataFrame) -> dict | None:
+    """A component's final bands as its fit task forecast them; None
+    when its final fit failed."""
+    final = units[units["kind"].isin(("final", "final_fail"))]
+    if final.empty:
+        return None
+    if final["kind"].iloc[0] == "final_fail":
+        raise ValueError("a hybrid component forecast degenerated")
+    return {b: np.asarray(final[b].iloc[0], dtype=float)
+            for b in _FORECAST_KEYS}
+
+
+def _cv_rmse_of(units: pd.DataFrame) -> float | None:
+    """_cv_rmse from the component's fold rows: None when a fold
+    failed, else the RMSE over the errors in origin order."""
+    folds = units[units["kind"].isin(("cv", "cv_fail"))].sort_values("origin")
+    if (folds["kind"] == "cv_fail").any():
+        return None
+    return fold_rmse([e for errs in folds["errs"]
+                      for e in np.asarray(errs, dtype=float)])
+
+
+def _weights_and_bands(y, m, h, units: pd.DataFrame) -> tuple[dict, dict]:
+    """fit_hybrid over one series' unit results: the CV weights and the
+    bands of every fitted component.  Raises where the single-task path
+    raises: no component fitted, or a component forecast degenerated."""
+    bands, rmses = {}, {}
+    for letter in _COMPONENTS:
+        u = units[units["component"] == letter]
+        b = _arima_bands(y, m, h, u) if letter == "a" else _shipped_bands(u)
+        if b is None:
+            continue
+        bands[letter] = b
+        rmses[letter] = _cv_rmse_of(u)
+    if not bands:
+        raise ValueError("no hybrid component could be fitted")
+    return hybrid_weights(list(bands), rmses), bands
+
+
+def _combine(frequency: int, horizon: int):
+    """The per-series stage: one assembled series and all its unit
+    results in, its forecast rows out."""
     m = max(1, int(frequency))
     h = int(horizon)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .models.arima import (_arima_short_model, arima_prep,
-                                   finalize_arima_winner)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                y = np.asarray(r.y, float)
-                base = {"name": r.name, "index": r.index,
-                        "component": "a", "errs": None, "cand": None,
-                        "crit": None, "cand_x": None,
-                        "cand_sigma2": None,
-                        **{b: None for b in _BANDS}}
-                try:  # fit phase (inside fit_arima sequentially)
-                    (y2, m2, _seasonal, d, D, w, nw,
-                     include_const) = arima_prep(y, m)
-                    if r.kind == "arima_short":
-                        model = _arima_short_model(y2, m2, d, D, w, nw)
-                    else:
-                        p_, q_, P_, Q_ = _ARIMA_GRID[r.cand]
-                        model = finalize_arima_winner(
-                            y2, m2, d, D, w, nw, include_const,
-                            p_, q_, P_, Q_, np.asarray(r.cand_x, float),
-                            float(r.cand_sigma2), float(r.crit))
-                except DEGENERATE_ERRORS:
-                    continue  # drop 'a', like fit_hybrid
-                try:  # forecast phase (sequentially NaNs the series)
-                    bands = _component_forecast(model, h, "a")
-                except DEGENERATE_ERRORS:
-                    rows.append({**base, "kind": "final_fail"})
-                    continue
-                rows.append({**base, "kind": "final",
-                             **{b: [float(v) for v in bands[b]]
-                                for b in _BANDS}})
-            yield pd.DataFrame(rows, columns=[f.name for f in _UNIT_RESULT])
+    def fn(key, series: pd.DataFrame, units: pd.DataFrame) -> pd.DataFrame:
+        y = np.asarray(series["y"].iloc[0], dtype=float)
+
+        def bands():
+            weights, by_letter = _weights_and_bands(y, m, h, units)
+            return combine_bands(weights, by_letter, h)
+
+        return forecast_or_nan(str(key[0]), str(key[1]), "HYBRID", h, bands)
 
     return fn
-
-
-def _components_from_series(spark: SparkSession, series: DataFrame,
-                            frequency: int, horizon: int,
-                            ) -> tuple[DataFrame, DataFrame]:
-    """Core of the fan-out over a PRE-ASSEMBLED (and ideally
-    checkpointed) series frame — assembled once and reused for the unit
-    explosion AND the winner's y re-join, instead of re-running the
-    base-table aggregation twice (r6 review finding).
-
-    Weight reassembly mirrors ``fit_hybrid`` exactly: RMSE over the
-    concatenated fold errors (horizonAverage=TRUE), weight ∝ 1/RMSE,
-    components with no usable CV take the mean of the known inverses
-    (or an equal share when none is known), normalized per series.
-
-    The ARIMA grid argmin is a JVM ``row_number`` over (crit, cand) —
-    (crit, index)-ascending reproduces fit_arima's first-strictly-best
-    walk — followed by a one-row-per-series finalize stage; a candidate
-    unit that raises a degenerate error poisons the whole component
-    ('arima_fail'), because the sequential fit would have thrown out of
-    fit_arima and dropped 'a' entirely.
-
-    Returns ``(components, poisoned)``: the per-(series, component)
-    weight+band rows, and the (name, index) keys of series where a
-    component FORECAST degenerated after a successful fit — the
-    sequential path NaNs the whole series there
-    (``fit_and_forecast_pdf`` catches around fit+forecast together), so
-    ``hybrid_fanout_batch`` must too."""
-    units = _series_units(series, frequency, cv_horizon=horizon)
-    from ..session import shuffle_width
-    width = shuffle_width(spark)
-    results = (units
-               # ROUND-ROBIN repartition (no columns): units are
-               # independent fits with no key-locality to preserve, and
-               # hash-distributing the few heavy units (high-order
-               # ARIMA candidates) behind one key collides them onto
-               # one task — measured 44 s → 36 s wall at n=10k from
-               # even spreading alone.  User-specified, so exempt from
-               # AQE coalescing (same rationale as forecast_batch).
-               .repartition(width)
-               .mapInPandas(_run_units(frequency, horizon),
-                            schema=_UNIT_RESULT)
-               # materialize ONCE: three consumers read this frame
-               # (finals, the ARIMA argmin, the CV aggregation), and
-               # without lineage truncation Spark re-runs every fit per
-               # consumer — measured 124 s → 36 s wall at n=10k.  The
-               # checkpointed rows are tiny (bands + error vectors);
-               # same pattern as the dhash/recursive-CTE operators.
-               .localCheckpoint())
-    acand = results.where(F.col("kind").isin(
-        "arima_cand", "arima_short", "arima_fail"))
-    fail_series = (acand.where(F.col("kind") == "arima_fail")
-                   .select("name", "index").distinct())
-    wsel = (Window.partitionBy("name", "index")
-            .orderBy(F.asc_nulls_last("crit"), F.asc("cand")))
-    winner = (acand.where(F.col("kind") != "arima_fail")
-              .withColumn("rn", F.row_number().over(wsel))
-              .where(F.col("rn") == 1).drop("rn")
-              .join(fail_series, ["name", "index"], "left_anti")
-              .join(series.select("name", "index", "y"), ["name", "index"]))
-    arima_finals = winner.mapInPandas(_finalize_arima(frequency, horizon),
-                                      schema=_UNIT_RESULT)
-    all_finals = (results.where(F.col("kind").isin("final", "final_fail"))
-                  .unionByName(arima_finals))
-    # a post-fit FORECAST degenerate ('final_fail') NaNs the whole
-    # series in the sequential path — surface those keys to the caller
-    poisoned = (all_finals.where(F.col("kind") == "final_fail")
-                .select("name", "index").distinct())
-    finals = (all_finals.where(F.col("kind") == "final")
-              .drop("kind", "errs", "cand", "crit", "cand_x",
-                    "cand_sigma2"))
-    # array_sort before the fold-sum: collect_list order is
-    # partition-dependent and fp addition is not associative — sorting
-    # pins the summation order so reruns hash identically
-    cv = (results.where(F.col("kind").isin("cv", "cv_fail"))
-          .groupBy("name", "index", "component")
-          .agg(F.sum(F.when(F.col("kind") == "cv_fail", 1)
-                     .otherwise(0)).alias("fails"),
-               F.array_sort(F.flatten(F.collect_list("errs")))
-               .alias("all_errs"))
-          .withColumn(
-              "rmse",
-              F.when((F.col("fails") > 0) | (F.size("all_errs") == 0),
-                     F.lit(None).cast("double"))
-              .otherwise(F.sqrt(
-                  F.aggregate("all_errs", F.lit(0.0),
-                              lambda acc, x: acc + x * x)
-                  / F.size("all_errs"))))
-          .select("name", "index", "component", "rmse"))
-    w = Window.partitionBy("name", "index")
-    comp = (finals
-            .join(cv, ["name", "index", "component"], "left")
-            # NaN guard (r6 review finding): Spark evaluates NaN > 0 as
-            # TRUE, so a NaN fold error (a fit that produced NaN
-            # forecasts without raising) would poison every weight in
-            # the series; the sequential `r and r > 0` sends NaN to the
-            # fallback — match it
-            .withColumn("inv", F.when((F.col("rmse") > 0)
-                                      & ~F.isnan("rmse"),
-                                      1.0 / F.col("rmse")))
-            .withColumn("inv", F.coalesce(
-                "inv", F.avg("inv").over(w), F.lit(1.0)))
-            .withColumn("weight", F.col("inv") / F.sum("inv").over(w))
-            .drop("inv", "rmse"))
-    return comp, poisoned
 
 
 def hybrid_fanout_batch(spark: SparkSession, metrics: DataFrame,
                         frequency: int = 7, horizon: int = 14) -> DataFrame:
     """Drop-in for ``forecast_batch(..., "HYBRID")`` output: the same
-    (name, index, method, step, 5 bands) rows, combined with
-    PI.combination='mean' (R:340) as a JVM-side weighted sum.
-
-    Degenerate-series parity (r6 review finding): the sequential path
-    emits `horizon` NaN-band rows both when NO component fits and when
-    any component's post-fit forecast degenerates
-    (``fit_and_forecast_pdf`` catches around the whole fit+forecast).
-    The fan-out therefore left-joins the combined bands back onto the
-    full series-key × step frame and fills the missing/poisoned series
-    with NaN rows instead of silently dropping them."""
+    (name, index, method, step, 5 bands) rows."""
     h = int(horizon)
     series = _assemble_series(metrics, h).localCheckpoint()
-    comp, poisoned = _components_from_series(spark, series, frequency, h)
-    z = (comp.join(poisoned, ["name", "index"], "left_anti")
-         .select("name", "index", "component", "weight",
-                 F.posexplode(F.arrays_zip(*_BANDS)).alias("pos", "v")))
-    # NaN band values (a component that forecast NaN without raising,
-    # e.g. NN on a 1-point series) arrive as NULL array elements — the
-    # Arrow pandas→Spark conversion nullifies NaN — and Spark's sum
-    # SKIPS nulls, which would silently drop that component from the
-    # mix where the sequential weighted sum NaN-poisons the series.
-    # Coalesce back to NaN so the arithmetic matches (r6 review).
-    nan = F.lit(float("nan"))
-    combined = (z.groupBy("name", "index", F.col("pos").alias("step"))
-                .agg(*[F.sum(F.col("weight")
-                             * F.coalesce(F.col(f"v.{b}"), nan)).alias(b)
-                       for b in _BANDS]))
-    full = (series.select("name", "index")
-            .withColumn("step",
-                        F.explode(F.sequence(F.lit(0), F.lit(h - 1)))))
-    return (full.join(combined, ["name", "index", "step"], "left")
-            # the batch path stamps the REQUESTED method string
-            # (fit_and_forecast_pdf), so the drop-in does too
-            .select("name", "index", F.lit("HYBRID").alias("method"),
-                    (F.col("step") + 1).cast("int").alias("step"),
-                    *[F.coalesce(b, nan).alias(b) for b in _BANDS])
-            # .to() aligns type AND nullability with the grouped-UDF
-            # path so the forecast_batch dispatch is schema-invisible
-            .to(schemas.FORECAST))
+    key = ["name", "index"]
+    return (series.select(*key, "y").groupBy(*key)
+            .cogroup(_unit_results(spark, series, frequency, h)
+                     .groupBy(*key))
+            .applyInPandas(_combine(frequency, h), schema=schemas.FORECAST))

@@ -414,9 +414,9 @@ def _psi_weights(arpoly, mapoly, horizon):
 def arima_prep(y: np.ndarray, frequency: int,
                force_seasonality: bool = False):
     """Shared pre-grid state: differencing decisions + the differenced
-    series.  Split out of ``fit_arima`` (r6) so the order grid can be
-    fanned out across Spark tasks (``forecast/hybrid_fanout.py``) —
-    every candidate fit needs exactly this tuple and nothing else.
+    series.  Split out of ``fit_arima`` so the order grid can be fanned
+    out across Spark tasks (``forecast/hybrid_fanout.py``) — every
+    candidate fit and the winner's finalize need exactly this tuple.
     Returns ``(y, m, seasonal, d, D, w, nw, include_const)``."""
     y = np.asarray(y, float)
     n = len(y)
@@ -451,7 +451,7 @@ def arima_candidate_grid(seasonal: bool, max_p: int = 5, max_q: int = 5,
                          max_order: int = 5) -> list[tuple[int, int, int, int]]:
     """The exhaustive (stepwise=FALSE) order grid, in the exact
     enumeration order ``fit_arima`` walks it — candidate INDEX is the
-    tie-break, so the distributed argmin must share this ordering."""
+    tie-break, so the fan-out's grid walk must share this ordering."""
     Ps = range(max_P + 1) if seasonal else [0]
     Qs = range(max_Q + 1) if seasonal else [0]
     return [(p, q, P, Q)
@@ -521,18 +521,25 @@ def fit_arima(y: np.ndarray, frequency: int, force_seasonality: bool = False,
         y, frequency, force_seasonality)
     if nw < 5:
         return _arima_short_model(y, m, d, D, w, nw)
-    best = None
-    for p, q, P, Q in arima_candidate_grid(seasonal, max_p, max_q,
-                                           max_P, max_Q, max_order):
-        fit = fit_arima_candidate(w, nw, m, include_const, p, q, P, Q)
-        if fit is None:
-            continue
-        crit, xfit, sigma2 = fit
-        if best is None or crit < best[0]:
-            best = (crit, p, q, P, Q, xfit, sigma2)
-    crit, p, q, P, Q, x, sigma2 = best
+    (p, q, P, Q), (crit, x, sigma2) = best_arima_candidate(
+        (order, fit_arima_candidate(w, nw, m, include_const, *order))
+        for order in arima_candidate_grid(seasonal, max_p, max_q,
+                                          max_P, max_Q, max_order))
     return finalize_arima_winner(y, m, d, D, w, nw, include_const,
                                  p, q, P, Q, x, sigma2, crit)
+
+
+def best_arima_candidate(fits):
+    """The grid walk: ``fits`` yields ``(order, fit)`` in grid order,
+    ``fit`` being ``fit_arima_candidate``'s ``(crit, xfit, sigma2)`` or
+    None (order too long, skipped).  Returns the first strictly-best
+    ``(order, fit)`` — an earlier order wins a tie, and a NaN criterion
+    never beats anything."""
+    best = None
+    for order, fit in fits:
+        if fit is not None and (best is None or fit[0] < best[1][0]):
+            best = (order, fit)
+    return best
 
 
 def finalize_arima_winner(y, m, d, D, w, nw, include_const,

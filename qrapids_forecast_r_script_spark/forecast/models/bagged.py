@@ -125,14 +125,18 @@ class BaggedETSModel:
         # members contribute POINT forecasts only (the envelope is the
         # min/max across members) — point_forecast skips the M-seasonal
         # 2000-path interval simulation each full forecast() would run
-        points = np.array([mem.point_forecast(horizon)
-                           for mem in self.members])
-        mean = points.mean(axis=0)
-        lower = points.min(axis=0)
-        upper = points.max(axis=0)
-        # single band duplicated into both pairs (R:216-217)
-        return {"mean": mean, "lower1": lower, "lower2": lower,
-                "upper1": upper, "upper2": upper}
+        return envelope(np.array([mem.point_forecast(horizon)
+                                  for mem in self.members]))
+
+
+def envelope(points: np.ndarray) -> dict:
+    """The ensemble's bands from its (member × step) point forecasts:
+    mean, and the min/max envelope as the single band duplicated into
+    both pairs (R:216-217)."""
+    lower = points.min(axis=0)
+    upper = points.max(axis=0)
+    return {"mean": points.mean(axis=0), "lower1": lower, "lower2": lower,
+            "upper1": upper, "upper2": upper}
 
 
 def fit_bagged_ets(y: np.ndarray, frequency: int,

@@ -89,9 +89,43 @@ def _cv_rmse(y, m, horizon, fit_fn, key):
             errs.extend((np.asarray(actual) - fc).tolist())
         except DEGENERATE_ERRORS:
             return None
-    if not errs:
+    return fold_rmse(errs)
+
+
+def fold_rmse(errs) -> float | None:
+    """RMSE over every fold's errors concatenated in origin order
+    (horizonAverage=TRUE); None when there are no folds."""
+    if not len(errs):
         return None
     return float(np.sqrt(np.mean(np.square(errs))))
+
+
+def hybrid_weights(letters, rmses) -> dict:
+    """weights='cv.errors': 1/RMSE per fitted component, normalized;
+    a component with no usable RMSE (no folds, a failed fold, NaN or 0)
+    takes the mean of the known inverses, or 1 when none is known."""
+    inv = {}
+    for letter in letters:
+        r = rmses.get(letter)
+        inv[letter] = (1.0 / r) if (r and r > 0) else None
+    known = [v for v in inv.values() if v is not None]
+    fallback = float(np.mean(known)) if known else 1.0
+    inv = {k: (v if v is not None else fallback) for k, v in inv.items()}
+    total = sum(inv.values())
+    return {k: v / total for k, v in inv.items()}
+
+
+def combine_bands(weights, bands_by_letter, horizon) -> dict:
+    """PI.combination='mean' (R:340): the weighted sum of the component
+    bands, accumulated in ``_COMPONENTS`` order."""
+    out = {}
+    for k in ("mean", "lower1", "lower2", "upper1", "upper2"):
+        acc = np.zeros(horizon)
+        for letter in _COMPONENTS:
+            if letter in bands_by_letter:
+                acc += weights[letter] * np.asarray(bands_by_letter[letter][k])
+        out[k] = acc
+    return out
 
 
 class HybridModel:
@@ -103,16 +137,9 @@ class HybridModel:
         self.weights = weights         # {letter: weight}, sums to 1
 
     def forecast(self, horizon: int) -> dict:
-        bands = {}
-        for letter, model in self.models.items():
-            bands[letter] = _component_forecast(model, horizon, letter)
-        out = {}
-        for k in ("mean", "lower1", "lower2", "upper1", "upper2"):
-            acc = np.zeros(horizon)
-            for letter, b in bands.items():
-                acc += self.weights[letter] * np.asarray(b[k])
-            out[k] = acc
-        return out
+        bands = {letter: _component_forecast(model, horizon, letter)
+                 for letter, model in self.models.items()}
+        return combine_bands(self.weights, bands, horizon)
 
 
 def fit_hybrid(y: np.ndarray, frequency: int, cv_horizon: int = 14) -> HybridModel:
@@ -128,15 +155,5 @@ def fit_hybrid(y: np.ndarray, frequency: int, cv_horizon: int = 14) -> HybridMod
         rmses[letter] = rmse
     if not models:
         raise ValueError("no hybrid component could be fitted")
-    # weights = 1/RMSE normalized (hybridModel weights='cv.errors');
-    # components whose CV failed fall back to equal share of the remainder
-    inv = {}
-    for letter in models:
-        r = rmses.get(letter)
-        inv[letter] = (1.0 / r) if (r and r > 0) else None
-    known = [v for v in inv.values() if v is not None]
-    fallback = float(np.mean(known)) if known else 1.0
-    inv = {k: (v if v is not None else fallback) for k, v in inv.items()}
-    total = sum(inv.values())
-    weights = {k: v / total for k, v in inv.items()}
-    return HybridModel(y, m, cv_horizon, models, weights)
+    return HybridModel(y, m, cv_horizon, models,
+                       hybrid_weights(list(models), rmses))

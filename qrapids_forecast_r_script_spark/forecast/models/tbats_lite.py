@@ -121,8 +121,7 @@ def _arma_error_forecast(phi, theta, e_hist, a_hist, horizon: int):
 
 
 class TbatsLiteModel:
-    def __init__(self, y, m, lam, use_bc, k, coef, ets_model, n,
-                 arma=None):
+    def __init__(self, y, m, lam, use_bc, k, coef, ets_model, n, arma):
         self.y = np.asarray(y, float)
         self.m = m
         self.lam = lam
@@ -132,8 +131,7 @@ class TbatsLiteModel:
         self.ets_model = ets_model    # damped ETS on the adjusted series
         self.n = n
         # (p, q, phi, theta, e_hist, a_hist) — ARMA error block
-        self.arma = arma if arma is not None else (
-            0, 0, np.zeros(0), np.zeros(0), np.zeros(0), np.zeros(0))
+        self.arma = arma
 
     @property
     def arma_order(self) -> tuple:

@@ -114,10 +114,11 @@ QUERIES = {
 def forecast_hybrid_fanout_events(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """HYBRID via the (series × component × fold) fan-out
-    (``hybrid_fanout.py``) — same weights and bands as
+    (``hybrid_fanout.py``) — the same rows, bit for bit, as
     ``forecast_hybrid_events``'s single-task path (asserted by
-    tests/test_hybrid_fanout.py), but the critical path is one fit per
-    task instead of ~30: the n ≳ 5k straggler fix measured in SCALE.md.
+    tests/test_hybrid_fanout.py), but the critical path is one fit
+    instead of every fit of the series: the n ≳ 5k straggler fix
+    measured in SCALE.md.
     Rows-only (the model fits are iterative, not SQL-expressible), like
     the other 10 reference methods."""
     from .hybrid_fanout import hybrid_fanout_batch

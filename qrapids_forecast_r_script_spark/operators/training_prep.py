@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import md5_int
 from ..sources import load_table, orders_with_nation
+from .curation import _PACK_BUCKET
 
 # add-k smoothing for the NB token model (k=0.5, Jeffreys — matches
 # text_quality._LM_K so the two corpus LMs share their prior).
@@ -60,7 +61,6 @@ _NB_K = 0.5
 _NB_TARGET_LANG = "en"
 
 _SEQ_LEN = 128                  # tokens per packed training example
-_PACK_BUCKET = 64               # doc_ids per prefix-sum bucket (curation)
 
 _CENT_DP = 6                    # centroid / cosine resync grid (1e-6)
 

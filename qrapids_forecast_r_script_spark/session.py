@@ -61,7 +61,7 @@ def get_spark(app_name: str = "qrapids-forecast-spark",
     return builder.getOrCreate()
 
 
-def shuffle_width(spark: SparkSession, default: int = 32) -> int:
+def shuffle_width(spark: SparkSession) -> int:
     """The session's shuffle-partition count as an explicit repartition
     width (Connect-clean: read from conf, not from the classic
     context's default-parallelism attribute).
@@ -69,9 +69,6 @@ def shuffle_width(spark: SparkSession, default: int = 32) -> int:
     Used wherever a CPU-bound grouped/mapInPandas stage needs a
     user-specified repartition that AQE's size-based coalescing must
     not collapse (forecast_batch, the hybrid fan-out, cogrouped ops,
-    PQ candidate expansion) — one definition instead of the four
-    copies the r6 review found."""
-    try:
-        return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except (TypeError, ValueError):
-        return default
+    PQ candidate expansion) — one definition instead of four copies.
+    A malformed setting raises rather than being replaced."""
+    return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))

@@ -4,8 +4,8 @@ The moving-block bootstrap is seeded per (name, index, method), so each
 Spark task regenerates the identical replicate list and fits exactly
 one member — the reassembled ensemble (mean + min/max envelope,
 duplicated band pairs, R:216-217) must equal forecast_batch's
-single-task output to fp-aggregation noise, with identical
-(name, index, step) key sets and NaN placement.
+single-task output bit for bit, with identical (name, index, step) key
+sets and NaN placement.
 """
 
 import numpy as np
@@ -38,8 +38,7 @@ def test_bagged_fanout_equals_single_task(spark, metrics):
     for c in ["mean", "lower1", "lower2", "upper1", "upper2"]:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         assert (np.isnan(av) == np.isnan(bv)).all(), c
-        ok = ~np.isnan(av)
-        np.testing.assert_allclose(av[ok], bv[ok], rtol=0, atol=1e-9)
+        assert np.array_equal(av, bv, equal_nan=True), c
 
 
 def test_bagged_fanout_rowcount_on_short_series(spark):
@@ -71,8 +70,7 @@ def test_bagged_fanout_rowcount_on_short_series(spark):
     for c in ["mean", "lower1", "upper2"]:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         assert (np.isnan(av) == np.isnan(bv)).all(), (c, av, bv)
-        ok = ~np.isnan(av)
-        np.testing.assert_allclose(av[ok], bv[ok], rtol=0, atol=1e-9)
+        assert np.array_equal(av, bv, equal_nan=True), (c, av, bv)
 
 
 def test_run_members_bounded_cache_interleaved_series():

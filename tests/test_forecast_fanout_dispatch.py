@@ -60,9 +60,9 @@ def test_auto_routes_below_threshold_to_single_task(spark, method,
 def test_auto_routes_above_threshold_to_fanout(spark, method, monkeypatch):
     """Drop the threshold to 1 point: forecast_batch must take the
     fan-out path (plan shows mapInPandas, not the grouped single-task
-    stage) and the results must equal the single-task path's to
-    fp-summation noise, with an IDENTICAL schema (the r7 int-step
-    alignment)."""
+    stage) and the results must equal the single-task path's bit for
+    bit, NaN placement included, with an IDENTICAL schema (the r7
+    int-step alignment)."""
     from qrapids_forecast_r_script_spark.forecast import api
 
     metrics = _toy_metrics(spark)
@@ -86,8 +86,9 @@ def test_auto_routes_above_threshold_to_fanout(spark, method, monkeypatch):
             == n[["name", "index", "step"]].values).all()
     assert (a["method"] == method).all()
     for c in ["lower1", "lower2", "mean", "upper1", "upper2"]:
-        np.testing.assert_allclose(a[c].to_numpy(), n[c].to_numpy(),
-                                   rtol=0, atol=1e-9)
+        av, nv = a[c].to_numpy(), n[c].to_numpy()
+        assert (np.isnan(av) == np.isnan(nv)).all(), c
+        assert np.array_equal(av, nv, equal_nan=True), c
 
 
 def test_non_fanout_methods_ignore_flag(spark, monkeypatch):

@@ -1,11 +1,12 @@
 """HYBRID fan-out equality vs the single-task path (r5 verdict item 4).
 
 ``hybrid_fanout.py`` explodes each series into (component × fold)
-Spark tasks and reassembles the CV weights JVM-side; because every
-component fit is internally seeded, the exploded fits are bit-identical
-to the ones ``fit_hybrid`` runs in sequence — so the weights must match
-EXACTLY and the combined bands to fp-summation noise.  These tests pin
-that contract on the real events-derived series.
+Spark tasks and hands each series' unit results to one per-series call
+that runs the models' own combine rules; because every component fit is
+internally seeded, the exploded fits are bit-identical to the ones
+``fit_hybrid`` runs in sequence — so the weights and the combined bands
+must match EXACTLY.  These tests pin that contract on the real
+events-derived series.
 """
 
 import numpy as np
@@ -28,32 +29,28 @@ def test_fanout_weights_equal_single_task(spark, metrics):
     same 1/RMSE normalization — only the orchestration differs."""
     from qrapids_forecast_r_script_spark.forecast.api import prepare_series
     from qrapids_forecast_r_script_spark.forecast.hybrid_fanout import (
-        _assemble_series, _components_from_series)
+        _assemble_series, _unit_results, _weights_and_bands)
     from qrapids_forecast_r_script_spark.forecast.models.hybrid import (
         fit_hybrid)
 
-    got = _components_from_series(
-        spark, _assemble_series(metrics, 14).localCheckpoint(), 7, 14)[0]
-    got = got.toPandas()
-    assert len(got)  # at least one (series, component) row
+    series = _assemble_series(metrics, 14).localCheckpoint()
+    units = _unit_results(spark, series, 7, 14).toPandas()
+    assert len(units)  # at least one unit result
+    assembled = {(r["name"], r["index"]): np.asarray(r["y"], dtype=float)
+                 for r in series.collect()}
     mp = metrics.toPandas()
     for (name, index), g in mp.groupby(["name", "index"]):
         y, _ = prepare_series(g)
         want = fit_hybrid(y, 7, cv_horizon=14).weights
-        rows = got[(got["name"] == name) & (got["index"] == index)]
-        assert set(rows["component"]) == set(want), (name, index)
-        for r in rows.itertuples():
-            # identical seeded fits → identical RMSEs; the only fp
-            # reassociation is the normalizing sum over ≤6 components
-            assert abs(r.weight - want[r.component]) < 1e-12, (
-                name, index, r.component, r.weight, want[r.component])
+        rows = units[(units["name"] == name) & (units["index"] == index)]
+        got, _ = _weights_and_bands(assembled[(name, index)], 7, 14, rows)
+        assert got == want, (name, index, got, want)
 
 
 @pytest.mark.slow
 def test_fanout_bands_equal_single_task_batch(spark, metrics):
     """hybrid_fanout_batch is a drop-in for forecast_batch(...,
-    'HYBRID'): same rows, same method stamp, bands equal to the
-    fp-summation tolerance of the JVM-side weighted combine."""
+    'HYBRID'): same rows, same method stamp, bit-identical bands."""
     from qrapids_forecast_r_script_spark.forecast.api import forecast_batch
     from qrapids_forecast_r_script_spark.forecast.hybrid_fanout import (
         hybrid_fanout_batch)
@@ -67,8 +64,8 @@ def test_fanout_bands_equal_single_task_batch(spark, metrics):
     assert (a[key].values == b[key].values).all()
     assert (a["method"] == b["method"]).all()
     for c in ["mean", "lower1", "lower2", "upper1", "upper2"]:
-        np.testing.assert_allclose(a[c].to_numpy(), b[c].to_numpy(),
-                                   rtol=0, atol=1e-9)
+        assert np.array_equal(a[c].to_numpy(), b[c].to_numpy(),
+                              equal_nan=True), c
 
 
 def test_fanout_unit_explosion_shape(spark, metrics):
@@ -144,5 +141,4 @@ def test_fanout_rowcount_parity_on_short_and_degenerate_series(spark):
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         nan_match = np.isnan(av) == np.isnan(bv)
         assert nan_match.all(), (c, a[~nan_match], b[~nan_match])
-        both = ~np.isnan(av)
-        np.testing.assert_allclose(av[both], bv[both], rtol=0, atol=1e-9)
+        assert np.array_equal(av, bv, equal_nan=True), c

@@ -36,10 +36,10 @@ def main() -> None:
     # is pure fit time, and the fit cost is series-count-bound, not
     # SF-bound), but whose plan shape still belongs in this artifact.
     extra = ["forecast_method_backtest",
-             # r6: the hybrid fan-out's plan shape (unit explosion →
-             # one mapInPandas → JVM argmin/weights) is the point of
-             # the operator — record it even though its bench cost is
-             # fit-bound, not SF-bound, like the backtest
+             # the hybrid fan-out's plan shape (unit explosion → one
+             # mapInPandas fit stage → one per-series cogroup combine)
+             # is the point of the operator — record it even though its
+             # bench cost is fit-bound, not SF-bound, like the backtest
              "forecast_hybrid_fanout_events",
              "forecast_baggedets_fanout_events"]
 
