@@ -180,7 +180,10 @@ def forecast_one(engine, name: str, index: str, method: str,
     spark = engine.spark
 
     def compute_series():
-        pdf = (search_element(engine.metrics, name, index)
+        # one row past the cap, so prepare_series sees an over-long
+        # series and warns before truncating (never cap silently)
+        pdf = (search_element(engine.metrics, name, index,
+                              limit=MAX_SERIES_LENGTH + 1)
                .toPandas())
         if pdf.empty:
             raise ValueError(f"no data for series ({name!r}, {index!r})")

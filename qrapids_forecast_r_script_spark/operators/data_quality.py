@@ -1819,11 +1819,15 @@ def evt_gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta = 2 b0 b1 / (b0 - 2 b1), and the implied
     VaR_0.999 = u + beta/xi ((N/n (1-p))^(-xi) - 1).
 
-    Exactness: excesses are exact integer cents; b0 and b1 are pure
-    integer ratios (the (n-i)-weighted sum is BIGINT — weights
-    within tied values sum invariantly, so the row_number tiebreak
-    cannot move b1); xi/beta are single divisions; the one
-    extrapolation evaluates exp(-xi ln a) once on a 1-row frame.
+    Exactness: the interpolated 0.9 quantile of integer cents lies on
+    a tenth of a cent ((N-1) * 0.9 has one decimal), so u is held as
+    an integer count of tenth-cents, round(10 u) — the rounding
+    removes each engine's own interpolation noise — and every excess
+    is an exact integer in tenth-cents; b0 and b1 are pure integer
+    ratios (the (n-i)-weighted sum is DECIMAL(38,0) — weights within
+    tied values sum invariantly, so the row_number tiebreak cannot
+    move b1); xi/beta are single divisions; the one extrapolation
+    evaluates exp(-xi ln a) once on a 1-row frame.
 
     Scale: one quantile aggregate, one filtered rank window over the
     top decile only, one 1-row reduce."""
@@ -1832,33 +1836,34 @@ def evt_gpd_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     vals = orders.select(cents.alias("yc"))
     thr = vals.agg(
-        F.expr(f"percentile(yc, {_GPD_U_FRAC!r})").alias("u_c"),
+        F.round(F.expr(f"percentile(yc, {_GPD_U_FRAC!r})") * 10, 0)
+        .cast("long").alias("u_m"),        # tenth-cents
         F.count(F.lit(1)).alias("n_total"))
     exc = (vals.crossJoin(F.broadcast(thr))
-           .where(F.col("yc") > F.col("u_c"))
-           .select("u_c", "n_total",
-                   (F.col("yc") - F.col("u_c")).alias("x")))
+           .select("u_m", "n_total",
+                   (F.col("yc") * 10 - F.col("u_m")).alias("x"))
+           .where(F.col("x") > 0))
     ranked = (exc.withColumn(
         "i", F.row_number().over(Window.orderBy(F.col("x").asc())))
         .withColumn("n_exc_tot", F.count(F.lit(1)).over(
             Window.partitionBy())))
-    agg = (ranked.groupBy("u_c", "n_total")
+    agg = (ranked.groupBy("u_m", "n_total")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum("x").alias("sx"),
                 F.sum((F.col("n_exc_tot") - F.col("i"))
                       .cast("decimal(38,0)")
                       * F.col("x")).alias("swx")))
     n = F.col("n").cast("double")
-    b0 = F.col("sx").cast("double") / n / 100
-    b1 = F.col("swx").cast("double") / (n * (n - 1)) / 100
+    b0 = F.col("sx").cast("double") / n / 1000
+    b1 = F.col("swx").cast("double") / (n * (n - 1)) / 1000
     xi = F.lit(2.0) - b0 / (b0 - 2 * b1)
     beta = 2 * b0 * b1 / (b0 - 2 * b1)
     a_ = (F.col("n_total").cast("double") / n
           * F.lit(1.0 - _GPD_VAR_P))
-    var_ = (F.col("u_c") / 100
+    var_ = (F.col("u_m") / 1000
             + beta / xi * (F.exp(-xi * F.log(a_)) - 1))
     return agg.select(
-        F.round(F.col("u_c") / 100, 6).alias("threshold"),
+        F.round(F.col("u_m") / 1000, 6).alias("threshold"),
         F.col("n_total"), F.col("n").alias("n_exceed"),
         F.round(b0, 6).alias("pwm_b0"),
         F.round(b1, 6).alias("pwm_b1"),
@@ -1873,58 +1878,59 @@ ORACLES["evt_gpd_tail_fit"] = f"""
         SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
         FROM orders
     ), thr AS (
-        SELECT quantile_cont(yc, {_GPD_U_FRAC!r}) AS u_c,
+        SELECT CAST(round(quantile_cont(yc, {_GPD_U_FRAC!r}) * 10)
+                    AS BIGINT) AS u_m,
                CAST(count(*) AS BIGINT) AS n_total
         FROM vals
     ), exc AS (
-        SELECT t.u_c, t.n_total, v.yc - t.u_c AS x
-        FROM vals v CROSS JOIN thr t WHERE v.yc > t.u_c
+        SELECT t.u_m, t.n_total, 10 * v.yc - t.u_m AS x
+        FROM vals v CROSS JOIN thr t WHERE 10 * v.yc > t.u_m
     ), ranked AS (
         SELECT *, row_number() OVER (ORDER BY x ASC) AS i,
                count(*) OVER () AS n_exc_tot
         FROM exc
     ), agg AS (
-        SELECT u_c, n_total, CAST(count(*) AS BIGINT) AS n,
+        SELECT u_m, n_total, CAST(count(*) AS BIGINT) AS n,
                sum(x) AS sx,
                CAST(sum(CAST(n_exc_tot - i AS HUGEINT)
                         * CAST(x AS HUGEINT)) AS HUGEINT) AS swx
         FROM ranked GROUP BY 1, 2
     )
-    SELECT round(u_c / 100, 6) AS threshold, n_total,
+    SELECT round(u_m / 1000, 6) AS threshold, n_total,
            n AS n_exceed,
-           round(CAST(sx AS DOUBLE) / n / 100, 6) AS pwm_b0,
+           round(CAST(sx AS DOUBLE) / n / 1000, 6) AS pwm_b0,
            round(CAST(swx AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * (n - 1)) / 100, 6) AS pwm_b1,
-           round(2.0 - (CAST(sx AS DOUBLE) / n / 100)
-                 / ((CAST(sx AS DOUBLE) / n / 100)
+                 / (CAST(n AS DOUBLE) * (n - 1)) / 1000, 6) AS pwm_b1,
+           round(2.0 - (CAST(sx AS DOUBLE) / n / 1000)
+                 / ((CAST(sx AS DOUBLE) / n / 1000)
                     - 2 * (CAST(swx AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (n - 1)) / 100)),
+                           / (CAST(n AS DOUBLE) * (n - 1)) / 1000)),
                  6) AS shape_xi,
-           round(2 * (CAST(sx AS DOUBLE) / n / 100)
+           round(2 * (CAST(sx AS DOUBLE) / n / 1000)
                  * (CAST(swx AS DOUBLE)
-                    / (CAST(n AS DOUBLE) * (n - 1)) / 100)
-                 / ((CAST(sx AS DOUBLE) / n / 100)
+                    / (CAST(n AS DOUBLE) * (n - 1)) / 1000)
+                 / ((CAST(sx AS DOUBLE) / n / 1000)
                     - 2 * (CAST(swx AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (n - 1)) / 100)),
+                           / (CAST(n AS DOUBLE) * (n - 1)) / 1000)),
                  6) AS scale_beta,
-           round(u_c / 100
-                 + (2 * (CAST(sx AS DOUBLE) / n / 100)
+           round(u_m / 1000
+                 + (2 * (CAST(sx AS DOUBLE) / n / 1000)
                     * (CAST(swx AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * (n - 1)) / 100)
-                    / ((CAST(sx AS DOUBLE) / n / 100)
+                       / (CAST(n AS DOUBLE) * (n - 1)) / 1000)
+                    / ((CAST(sx AS DOUBLE) / n / 1000)
                        - 2 * (CAST(swx AS DOUBLE)
                               / (CAST(n AS DOUBLE) * (n - 1))
-                              / 100)))
-                   / (2.0 - (CAST(sx AS DOUBLE) / n / 100)
-                      / ((CAST(sx AS DOUBLE) / n / 100)
+                              / 1000)))
+                   / (2.0 - (CAST(sx AS DOUBLE) / n / 1000)
+                      / ((CAST(sx AS DOUBLE) / n / 1000)
                          - 2 * (CAST(swx AS DOUBLE)
                                 / (CAST(n AS DOUBLE) * (n - 1))
-                                / 100)))
-                   * (exp(-(2.0 - (CAST(sx AS DOUBLE) / n / 100)
-                            / ((CAST(sx AS DOUBLE) / n / 100)
+                                / 1000)))
+                   * (exp(-(2.0 - (CAST(sx AS DOUBLE) / n / 1000)
+                            / ((CAST(sx AS DOUBLE) / n / 1000)
                                - 2 * (CAST(swx AS DOUBLE)
                                       / (CAST(n AS DOUBLE) * (n - 1))
-                                      / 100)))
+                                      / 1000)))
                           * ln(CAST(n_total AS DOUBLE) / n
                                * {1.0 - _GPD_VAR_P!r})) - 1), 6)
                AS var_999

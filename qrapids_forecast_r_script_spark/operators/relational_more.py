@@ -606,8 +606,10 @@ def rfm_quartile_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: all three features are exact integers; ntile on
     (feature, custkey) is a total order, so quartile assignment can
-    never flip across engines or partitionings; averages are integer
-    micro-ratios.  Scale: one customer-keyed aggregate + three
+    never flip across engines or partitionings; the average spend is
+    rounded half-up to the cent in integers, (2 sum + n) div (2 n),
+    so a half-cent tie has one stated rule instead of each engine's
+    double rounding.  Scale: one customer-keyed aggregate + three
     DISTRIBUTED exact-ntile passes (``operators.ranked.exact_ntile``,
     r9: the two-pass rank decomposition — range exchange +
     per-partition counts + broadcast offsets — replacing the three
@@ -638,8 +640,8 @@ def rfm_quartile_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "m_q")
     return (scored.groupBy("r_q", "f_q", "m_q")
             .agg(F.count(F.lit(1)).alias("n_customers"),
-                 F.round(F.sum("monetary_cents").cast("double")
-                         / F.count(F.lit(1)).cast("double") / 100, 2)
+                 (F.expr("(2 * sum(monetary_cents) + count(1)) "
+                         "div (2 * count(1))").cast("double") / 100)
                  .alias("avg_spend"))
             .orderBy("r_q", "f_q", "m_q"))
 
@@ -667,8 +669,8 @@ ORACLES["rfm_quartile_segments"] = """
     SELECT CAST(r_q AS INTEGER) AS r_q, CAST(f_q AS INTEGER) AS f_q,
            CAST(m_q AS INTEGER) AS m_q,
            count(*) AS n_customers,
-           round(CAST(sum(monetary_cents) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) / 100, 2) AS avg_spend
+           CAST((2 * sum(monetary_cents) + count(*)) // (2 * count(*))
+                AS DOUBLE) / 100 AS avg_spend
     FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
 QUERIES["rfm_quartile_segments"] = rfm_quartile_segments

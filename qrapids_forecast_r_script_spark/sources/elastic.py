@@ -51,7 +51,9 @@ def search_element_es(spark: SparkSession, host: str, name: str, index: str,
 
     The connector pushes the query-string filter, the 2-field source
     projection, and the sort — the same pushdowns the reference hand-codes
-    (R:27-28) and that Catalyst applies to the parquet path.
+    (R:27-28) and that Catalyst applies to the parquet path.  The sort
+    breaks date ties by ``value``, as the parquet path does, so the
+    survivors of the 10k cap are the same on every run.
     """
     from .registry import _field_for_index
     field = _field_for_index(index)                # R:25-26, one dispatch
@@ -82,5 +84,5 @@ def search_element_es(spark: SparkSession, host: str, name: str, index: str,
     return (df.select(F.lit(name).alias("name"), F.lit(index).alias("index"),
                       F.to_date("evaluationDate").alias("evaluationDate"),
                       F.col("value").cast("double").alias("value"))
-            .orderBy("evaluationDate")
+            .orderBy("evaluationDate", "value")
             .limit(MAX_SERIES_LENGTH))

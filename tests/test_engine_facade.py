@@ -109,3 +109,42 @@ def test_null_value_gives_same_rows_with_and_without_cache(
     assert collect(cached_engine) == direct          # train
     assert collect(cached_engine) == direct          # cache hit
     assert [r[-5:] for r in direct] == [(None,) * 5] * 5
+
+
+def test_request_path_warns_on_series_over_the_cap(spark, tmp_path_factory,
+                                                   caplog):
+    """A 10,001-point series reaches ``prepare_series`` whole through
+    ``Engine.forecast``, so the reference's 10k cap (R:28) logs its
+    warning instead of cutting silently, with and without an
+    artifact_dir; the bands equal those of the first 10,000 points."""
+    import datetime
+    import logging
+
+    from qrapids_forecast_r_script_spark import schemas
+    from qrapids_forecast_r_script_spark.engine import Engine
+    from qrapids_forecast_r_script_spark.forecast import api
+
+    day = datetime.date(1990, 1, 1)
+    rows = [("long", "idx", day + datetime.timedelta(days=d),
+             float(d % 7) + d / 1000) for d in range(10_001)]
+    full = spark.createDataFrame(rows, schema=schemas.QR_METRICS)
+    first = spark.createDataFrame(rows[:10_000], schema=schemas.QR_METRICS)
+
+    def forecast(metrics, cached):
+        artifact_dir = (str(tmp_path_factory.mktemp("capped"))
+                        if cached else None)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=api.__name__):
+            out = Engine(spark, metrics, artifact_dir=artifact_dir) \
+                .forecast("long", "idx", "THETA", frequency=7, horizon=5)
+            got = sorted(out.collect())
+        return got, [r.getMessage() for r in caplog.records
+                     if r.name == api.__name__]
+
+    for cached in (False, True):
+        got, warned = forecast(full, cached)
+        assert len(warned) == 1, warned
+        assert "10001 points" in warned[0] and "10k cap" in warned[0]
+        want, quiet = forecast(first, cached)
+        assert not quiet
+        assert got == want

@@ -1,4 +1,6 @@
-"""Every queries() entry with an oracle must match DuckDB at sf0.001.
+"""Every queries() entry with an oracle must match DuckDB at sf0.001
+by the strict oracle rule (``tools/strict_audit.check_query``: dtype
+family, IEEE bit-equal floats, a tz-naive and non-decimal oracle).
 
 This is a local pre-flight of the driver's t2 correctness gate (which runs
 the same comparison at sf0.01).
@@ -6,15 +8,15 @@ the same comparison at sf0.01).
 r7 (verdict item 8, suite-wall budget): the oracled, non-streaming
 queries are SHARDED and each shard runs its comparisons through a
 thread pool — Spark schedules concurrent jobs from multiple driver
-threads natively, and each DuckDB comparison opens its own connection,
-so the comparisons are independent.  Sequentially this module was
-7:51 of the 18:22 full-suite wall; threading cuts it several-fold with
-identical coverage (every query still compared, failures still named
-per-query in the assertion message).  Streaming/stateful queries stay
-on a SEQUENTIAL path: events_tws_running_totals scopes a global
-state-store conf around its run and micro-batch checkpoints are
-touchy under concurrent session use — correctness of the gate beats
-wall time there.
+threads natively, and each DuckDB oracle runs on its own cursor of the
+shard's connection, so the comparisons are independent.  Sequentially
+this module was 7:51 of the 18:22 full-suite wall; threading cuts it
+several-fold with identical coverage (every query still compared,
+failures still named per-query in the assertion message).
+Streaming/stateful queries stay on a SEQUENTIAL path:
+events_tws_running_totals scopes a global state-store conf around its
+run and micro-batch checkpoints are touchy under concurrent session
+use — correctness of the gate beats wall time there.
 
 Temp-view safety under threading (audited r7): every recursive-CTE
 query registers a UNIQUE ``qr_*`` view name; the only shared names
@@ -29,7 +31,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from tests.oracle_compare import compare, duckdb_run
+from tools.strict_audit import check_query, oracle_connection
 
 # The whole module is the end-to-end driver pre-flight (every oracled
 # query vs DuckDB at sf0.001) — marked slow for the fast gate; the same
@@ -81,13 +83,8 @@ def pytest_generate_tests(metafunc):
         metafunc.parametrize("shard", range(N_SHARDS))
 
 
-def _compare_one(qs, oracles, spark, sf_dir, name):
-    try:
-        sdf = qs[name](spark, sf_dir)
-        odf = duckdb_run(oracles[name], sf_dir)
-        problems = compare(sdf, odf)
-    except Exception as exc:  # noqa: BLE001 — report, don't abort shard
-        return f"{name}: raised {type(exc).__name__}: {exc}"
+def _compare_one(qs, oracles, spark, sf_dir, con, name):
+    problems = check_query(spark, sf_dir, con, qs[name], oracles[name])
     if problems:
         return f"{name}: " + "; ".join(problems)
     return None
@@ -97,10 +94,11 @@ def test_oracle_parity_shard(spark, sf_dir, shard):
     qs, oracles = _registry()
     names = _sharded_names()[shard]
     assert names, "empty shard — N_SHARDS exceeds the oracled-query count"
-    with ThreadPoolExecutor(max_workers=POOL_WIDTH) as pool:
+    with oracle_connection(sf_dir) as con, \
+            ThreadPoolExecutor(max_workers=POOL_WIDTH) as pool:
         failures = [f for f in pool.map(
-            lambda n: _compare_one(qs, oracles, spark, sf_dir, n), names)
-            if f]
+            lambda n: _compare_one(qs, oracles, spark, sf_dir, con, n),
+            names) if f]
     assert not failures, "\n".join(failures)
 
 
@@ -114,15 +112,16 @@ def test_oracle_parity_streaming_sequential(spark, sf_dir):
                    and _main_thread_only(n, qs[n]))
     assert names  # the streaming layer must stay covered here
     failures = []
-    for name in names:
-        if name == "events_tws_running_totals":
-            from qrapids_forecast_r_script_spark.streaming.stateful import (
-                tws_available)
-            if not tws_available(spark):
-                continue  # gated at execution; registered unconditionally
-        f = _compare_one(qs, oracles, spark, sf_dir, name)
-        if f:
-            failures.append(f)
+    with oracle_connection(sf_dir) as con:
+        for name in names:
+            if name == "events_tws_running_totals":
+                from qrapids_forecast_r_script_spark.streaming.stateful \
+                    import tws_available
+                if not tws_available(spark):
+                    continue  # gated at execution; registered unconditionally
+            f = _compare_one(qs, oracles, spark, sf_dir, con, name)
+            if f:
+                failures.append(f)
     assert not failures, "\n".join(failures)
 
 

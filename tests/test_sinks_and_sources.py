@@ -135,6 +135,32 @@ def test_es_source_degrades_clearly(spark):
         search_element_es(spark, "localhost", "m", "proj.metrics")
 
 
+def test_es_source_breaks_date_ties_by_value(spark, monkeypatch):
+    """Duplicate dates at the cap keep the lowest values, in (date,
+    value) order — the parquet path's tiebreak — whatever order the
+    reader returns them in."""
+    from qrapids_forecast_r_script_spark.sources import elastic
+
+    frame = spark.createDataFrame(
+        [("2024-01-02", v) for v in (5.0, 4.0, 3.0, 2.0, 1.0)]
+        + [("2024-01-01", 9.0)], "evaluationDate string, value double")
+
+    class StubReader:
+        def option(self, key, value):
+            return self
+
+        def load(self, index):
+            return frame
+
+    monkeypatch.setattr(elastic, "es_reader",
+                        lambda spark, host, **kw: StubReader())
+    monkeypatch.setattr(elastic, "MAX_SERIES_LENGTH", 3)
+    rows = elastic.search_element_es(spark, "localhost", "m",
+                                     "proj.metrics").collect()
+    assert [(str(r["evaluationDate"]), r["value"]) for r in rows] == [
+        ("2024-01-01", 9.0), ("2024-01-02", 1.0), ("2024-01-02", 2.0)]
+
+
 def test_ivf_topk_consistent_with_bruteforce(spark, sf_dir):
     """IVF (nprobe=1) results carry exact cosines: every returned
     neighbor's cosine matches the brute-force value, and each query's

@@ -1,4 +1,5 @@
-"""Strict driver-emulating correctness audit.
+"""The one oracle check: every query against its DuckDB oracle by the
+strict rule of the correctness hash.
 
 The per-round driver hashes (row-count, schema, order-insensitive values)
 with a TYPE-SENSITIVE value hash.  Round-1 evidence pins down its type
@@ -9,10 +10,13 @@ semantics as Arrow-level:
 - Spark bigint (int64) vs DuckDB HUGEINT (decimal128) differ → round 1
   FAILED q12/events_zscore_outliers on identical values.
 
-tests/oracle_compare.py is looser (int-width normalize + float tolerance),
-so this tool is the pre-flight gate for the driver: both sides are pulled
+``check_query`` is that rule for one query: both sides are pulled
 through Arrow (``DataFrame.toArrow()`` / duckdb ``.arrow()``), converted
-to pandas, tz-stripped, then compared by dtype family and EXACT values.
+to pandas, and ``strict_compare`` checks column set, row count, a
+tz-naive and non-decimal oracle, dtype family and EXACT values (IEEE
+bit-equal floats).  The CLI below and ``tests/test_oracle_parity.py``
+both call it; perfbench's ``query_mix`` warm pass calls
+``strict_compare``.
 
 Usage:  python tools/strict_audit.py [N]    # first N queries (default 50)
         python tools/strict_audit.py name [name ...]    # only these
@@ -29,8 +33,9 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLE_NAMES = ["region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings"]
+from qrapids_forecast_r_script_spark import schemas  # noqa: E402
+
+TABLE_NAMES = list(schemas.TABLES)
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -101,6 +106,13 @@ def strict_compare(sp: pd.DataFrame, ora: pd.DataFrame) -> list[str]:
     a, b = _canon(sp), _canon(ora)
     for c in a.columns:
         fa, fb = _family(a[c]), _family(b[c])
+        if fb == "decimal":
+            # DuckDB sum(<integer>) → HUGEINT and numeric literals →
+            # DECIMAL both arrive as decimal128; Spark emits int64 or
+            # double for the same values, so the correctness hash fails
+            problems.append(f"col {c}: oracle is DECIMAL/HUGEINT — CAST(... "
+                            f"AS BIGINT) or CAST(... AS DOUBLE) in the oracle")
+            continue
         if fa != fb:
             problems.append(f"col {c}: dtype family spark={fa}({a[c].dtype}) "
                             f"oracle={fb}({b[c].dtype})")
@@ -124,6 +136,29 @@ def strict_compare(sp: pd.DataFrame, ora: pd.DataFrame) -> list[str]:
     return problems
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB database with one view per parquet table."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def check_query(spark, sf_dir: str, con: duckdb.DuckDBPyConnection,
+                fn, sql: str) -> list[str]:
+    """The strict check of one query ``fn`` against its oracle ``sql``;
+    an empty list is a pass.  The oracle runs on its own cursor of
+    ``con``, so threads may share one connection."""
+    try:
+        sp = fn(spark, sf_dir).toArrow().to_pandas()
+        with con.cursor() as cur:
+            ora = cur.execute(sql).arrow().to_pandas()
+        return strict_compare(sp, ora)
+    except Exception as ex:  # noqa: BLE001 — a check reports, never dies
+        return [f"ERROR {type(ex).__name__}: {ex}"[:300]]
+
+
 def main() -> int:
     import __spark_entry__ as entry
     from qrapids_forecast_r_script_spark.session import get_spark
@@ -142,11 +177,7 @@ def main() -> int:
     spark = get_spark()
     queries = entry.queries()
     oracles = entry.oracle_sql()
-
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')")
+    con = oracle_connection(sf_dir)
 
     if names is not None:
         unknown = [n for n in names if n not in queries]
@@ -162,12 +193,7 @@ def main() -> int:
         if name not in oracles:
             print(f"{i:3d} SKIP(rows-only) {name}")
             continue
-        try:
-            sp = fn(spark, sf_dir).toArrow().to_pandas()
-            ora = con.execute(oracles[name]).arrow().to_pandas()
-            problems = strict_compare(sp, ora)
-        except Exception as ex:  # noqa: BLE001 — audit must report, not die
-            problems = [f"ERROR {type(ex).__name__}: {ex}"[:300]]
+        problems = check_query(spark, sf_dir, con, fn, oracles[name])
         if problems:
             n_fail += 1
             print(f"{i:3d} FAIL {name}")
