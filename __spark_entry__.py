@@ -6,11 +6,13 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in ``qrapids_forecast_r_script_spark``; this file
-only aggregates the per-module registries.
+only merges each registered module's one ``QUERIES`` / ``ORACLES`` pair,
+in the order of ``MODULES``.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -18,6 +20,39 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+# The registered modules, in registry order.  Imports are deliberately
+# NOT wrapped in try/except: every module ships in-repo, and a broken
+# import must fail loud rather than silently drop a module's queries.
+MODULES = (
+    "operators.dedup",
+    "operators.similarity",
+    "operators.text",
+    "operators.multimodal",
+    "operators.pipeline",
+    "streaming.queries",
+    "streaming.stateful",
+    "operators.scale_patterns",
+    "operators.product_analytics",
+    "sources.formats",
+    "operators.curation",
+    "operators.text_quality",
+    "sources.pyds",
+    "forecast.queries",
+    "operators.graph",
+    "operators.bpe",
+    "operators.data_quality",
+    "operators.training_prep",
+    "operators.udtf_ops",
+    "operators.cogroup_ops",
+    "operators.assoc_privacy",
+    "operators.spectral",
+    "operators.linkage",
+    "operators.relational",
+    "operators.relational_ext",
+    "operators.relational_more",
+    "operators.tpch_full",
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -28,179 +63,20 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship(spark, "/root/testdata/sf0.001")
 
 
-# The per-round correctness check hashes only the first ~50 entries of
-# queries(), so this list pins them.  It is the output of `python
-# tools/rotation_window.py` (first-signal backlog, then re-verify slots)
-# at the r9 artifact state; regenerate it with that tool, never by hand.
-FRONT_WINDOW = [
-    # --- first-signal: the 10 r8-new registrations (strict-audited at
-    # registration AND pre-certified by the r8 judge, 17/17)
-    "ab_welch_ttest",
-    "jarque_bera_normality",
-    "residual_runs_test",
-    "wilcoxon_signed_rank_wow",
-    "pettitt_change_test",
-    "partial_corr_controls",
-    "theil_u2_backtest",
-    "boxcox_guerrero_lambda",
-    "hellinger_source_drift",
-    "split_leakage_audit",
-    # --- first-signal: the 7-query r8 window spill (module-order tail
-    # of the original backlog)
-    "dow_type_median_polish",
-    "newsvendor_stock_levels",
-    "orders_yoy_growth",
-    "sql_api_revenue_report",
-    "rfm_quartile_segments",
-    "parts_abc_pareto",
-    "events_trailing_distinct_types",
-    # --- first-signal: the 10 r9 registrations (the full <= +10 freeze
-    # budget, each strict-audited at registration; they joined the
-    # never-checked backlog when registered, so per the r8 precedent the
-    # window was re-derived with them in merged-registry order)
-    "ab_cliffs_delta",
-    "ab_permutation_test",
-    "customer_lorenz_curve",
-    "corpus_heaps_law",
-    "vocab_chao1_richness",
-    "series_mann_kendall",
-    "series_turning_points",
-    "events_dkw_ecdf_band",
-    "series_spectral_entropy",
-    "orders_exact_price_quantiles",
-    # --- tier-1 re-verify (ever-failed first, then oldest tier-1 green)
-    "events_sliding_1h_30m",
-    "events_session_windows",
-    "events_stream_dedup_hourly",
-    # --- transition backfill (rotation-era ordering: ever-failed drift
-    # markers first, then oldest-green-first over the oracled registry)
-    "q12_shipmode_priority",
-    "events_zscore_outliers",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "top_customers_per_segment",
-    "orders_rollup",
-    "orders_cube",
-    "customers_with_orders",
-    "customers_without_orders",
-    "nations_customers_minus_suppliers",
-    "nations_customers_and_suppliers",
-    "part_filter_projection",
-    "scrubbed_customer_keys",
-    "orders_by_month",
-    "events_json_props",
-    "events_daily_rolling",
-    "events_asof_last_error",
-    "distinct_users_per_type",
-    "series_positional_index",
-]
-
-
-
-def _registries():
-    """All per-module (QUERIES, ORACLES) registries, in driver-check order.
-
-    The driver's correctness run walks the merged dict in insertion order
-    and caps at ~50 queries per round, so ordering is signal allocation
-    (see FRONT_WINDOW above).  The front block pins the first positions;
-    the module blocks that follow re-assign the same key/value without
-    moving position (dict insertion-order semantics), so every registered
-    query stays present exactly once.
-
-    Imports are deliberately NOT wrapped in try/except: every module ships
-    in-repo, and a broken import must fail loud rather than silently drop
-    a module's queries from the correctness run.
-    """
-    from qrapids_forecast_r_script_spark.operators import (
-        assoc_privacy,
-        spectral,
-        bpe,
-        cogroup_ops,
-        curation,
-        data_quality,
-        dedup,
-        graph,
-        linkage,
-        multimodal,
-        pipeline,
-        product_analytics,
-        relational,
-        relational_ext,
-        relational_more,
-        scale_patterns,
-        similarity,
-        text,
-        text_quality,
-        tpch_full,
-        training_prep,
-        udtf_ops,
-    )
-    from qrapids_forecast_r_script_spark.sources import formats, pyds
-    from qrapids_forecast_r_script_spark.forecast import queries as fq
-    from qrapids_forecast_r_script_spark.streaming import queries as sq
-    from qrapids_forecast_r_script_spark.streaming import stateful
-
-    # Full module blocks — rounds 1+2-proven layers land behind the
-    # front window in this merged order.
-    blocks = [
-        (dedup.QUERIES, dedup.ORACLES),
-        (similarity.QUERIES, similarity.ORACLES),
-        (text.QUERIES, text.ORACLES),
-        (multimodal.QUERIES, multimodal.ORACLES),
-        (pipeline.QUERIES, pipeline.ORACLES),
-        (sq.QUERIES, sq.ORACLES),
-        (stateful.QUERIES, stateful.ORACLES),
-        (scale_patterns.QUERIES, scale_patterns.ORACLES),
-        (product_analytics.QUERIES, product_analytics.ORACLES),
-        (formats.QUERIES, formats.ORACLES),
-        (curation.QUERIES, curation.ORACLES),
-        (text_quality.QUERIES, text_quality.ORACLES),
-        (pyds.QUERIES, pyds.ORACLES),
-        (fq.EVAL_QUERIES, fq.EVAL_ORACLES),
-        (dedup.EXTRA_QUERIES, dedup.EXTRA_ORACLES),
-        (graph.QUERIES, graph.ORACLES),
-        (bpe.QUERIES, bpe.ORACLES),
-        (data_quality.QUERIES, data_quality.ORACLES),
-        (training_prep.QUERIES, training_prep.ORACLES),
-        (udtf_ops.QUERIES, udtf_ops.ORACLES),
-        (cogroup_ops.QUERIES, cogroup_ops.ORACLES),
-        (assoc_privacy.QUERIES, assoc_privacy.ORACLES),
-        (spectral.QUERIES, spectral.ORACLES),
-        (linkage.QUERIES, linkage.ORACLES),
-        (sq.EXTRA_QUERIES, sq.EXTRA_ORACLES),
-        # capability-gated tail (execution raises without protobuf) —
-        # registered here so the in-window allocation is invariant to
-        # what the driver container happens to ship (ADVICE r2)
-        (stateful.EXTRA_QUERIES, stateful.EXTRA_ORACLES),
-        (fq.QUERIES, fq.ORACLES),
-        (relational.QUERIES, relational.ORACLES),
-        (relational_ext.QUERIES, relational_ext.ORACLES),
-        (relational_more.QUERIES, relational_more.ORACLES),
-        (tpch_full.QUERIES, tpch_full.ORACLES),
-    ]
-    all_q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    all_o: dict[str, str] = {}
-    for qs, oras in blocks:
-        all_q.update(qs)
-        all_o.update(oras)
-    missing = [n for n in FRONT_WINDOW if n not in all_q]
-    if missing:  # fail loud: a renamed query must not silently drop out
-        raise KeyError(f"FRONT_WINDOW names not registered: {missing}")
-    front = ({n: all_q[n] for n in FRONT_WINDOW},
-             {n: all_o[n] for n in FRONT_WINDOW if n in all_o})
-    return [front, *blocks]
+def _modules():
+    return [importlib.import_module(f"qrapids_forecast_r_script_spark.{m}")
+            for m in MODULES]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for qs, _ in _registries():
-        out.update(qs)
+    for mod in _modules():
+        out.update(mod.QUERIES)
     return out
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
-    for _, oracles in _registries():
-        out.update(oracles)
+    for mod in _modules():
+        out.update(mod.ORACLES)
     return out

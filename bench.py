@@ -23,7 +23,7 @@ two named exclusion sets, both pinned below:
   ``minhash_lsh_pairs`` IS benched.
 
 Everything else runs, in registry order (``__spark_entry__.queries()``:
-the pinned correctness window, then the module blocks).  Totals from r9 on
+each registered module's queries, in ``MODULES`` order).  Totals from r9 on
 are not comparable to <=r8 totals; per-query medians on shared queries
 (the BASELINE.md basis) remain the comparison unit.
 

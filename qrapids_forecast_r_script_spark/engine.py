@@ -51,8 +51,8 @@ class Engine:
         return search_element(self.metrics, name, index)
 
     def sql(self, query: str) -> DataFrame:
-        """Raw Spark SQL over the registered views (``metrics`` plus any
-        tables registered via sources.load_all)."""
+        """Raw Spark SQL over the session's views, ``metrics`` registered
+        first."""
         self.metrics.createOrReplaceTempView("metrics")
         return self.spark.sql(query)
 

@@ -28,7 +28,7 @@ import pickle
 import numpy as np
 import pandas as pd
 
-from ..functions.scrub import clean_key
+from ..functions.scrub import artifact_key
 from .api import forecast_rows
 from .dispatch import fit_method, forecast_fitted
 
@@ -45,7 +45,7 @@ class ForecastStore:
         os.makedirs(self.cache_dir, exist_ok=True)
 
     def _key(self, name: str, index: str, method: str) -> str:
-        return f"{clean_key(name)}_{index}_{method}"               # R:43-46
+        return artifact_key(name, index, method)                   # R:43-46
 
     def model_path(self, name, index, method) -> str:
         return os.path.join(self.models_dir, self._key(name, index, method))

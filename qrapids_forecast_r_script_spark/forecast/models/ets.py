@@ -155,7 +155,7 @@ class ETSModel:
     def __init__(self, y, frequency, trend, seasonal, params, state, sigma,
                  aicc_val, resid):
         self.y = np.asarray(y, float)
-        self.m = max(1, int(frequency)) if seasonal != "N" else max(1, int(frequency))
+        self.m = max(1, int(frequency))
         self.trend = trend
         self.seasonal = seasonal
         self.params = params            # (alpha, beta, gamma, phi)

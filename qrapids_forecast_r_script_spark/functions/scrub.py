@@ -21,8 +21,8 @@ import re
 
 from pyspark.sql import Column, functions as F
 
-_SCRUB_RE = re.compile(r"[^0-9A-Za-z ]")
 _SCRUB_PATTERN = "[^0-9A-Za-z ]"
+_SCRUB_RE = re.compile(_SCRUB_PATTERN)
 
 
 def clean_key(name: str) -> str:
@@ -40,9 +40,3 @@ def clean_key_col(col: Column | str) -> Column:
 def artifact_key(name: str, index: str, method: str) -> str:
     """E5+E6 artifact filename: clean(name)_index_method (R:43-46)."""
     return f"{clean_key(name)}_{index}_{method}"
-
-
-def artifact_key_col(name: Column | str, index: Column | str,
-                     method: Column | str) -> Column:
-    cols = [F.col(c) if isinstance(c, str) else c for c in (name, index, method)]
-    return F.concat_ws("_", clean_key_col(cols[0]), cols[1], cols[2])

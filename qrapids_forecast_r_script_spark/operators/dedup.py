@@ -1135,10 +1135,7 @@ QUERIES = {
     "incremental_dedup_batch": incremental_dedup_batch,
 }
 
-# Round-2 addition, registered in __spark_entry__'s tail block so the
-# driver's ~50-query window allocation stays byte-stable this round.
-EXTRA_QUERIES = {"repeated_ngram_spans": repeated_ngram_spans}
-EXTRA_ORACLES: dict[str, str] = {}
+QUERIES["repeated_ngram_spans"] = repeated_ngram_spans
 
 _BLOOM_PARAMS_SQL = ", ".join(f"({a}, {b})"
                               for a, b in _HASH_PARAMS[:_BLOOM_K])
@@ -1179,7 +1176,7 @@ ORACLES["bloom_ngram_containment"] = f"""
     FROM per_sh GROUP BY 1
 """
 
-EXTRA_ORACLES["repeated_ngram_spans"] = f"""
+ORACLES["repeated_ngram_spans"] = f"""
     WITH base AS (
         SELECT doc_id, string_split(text, ' ') AS s FROM documents
     ), g AS (
@@ -1442,8 +1439,8 @@ def source_dedup_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source"))
 
 
-EXTRA_QUERIES["source_dedup_rates"] = source_dedup_rates
-EXTRA_ORACLES["source_dedup_rates"] = """
+QUERIES["source_dedup_rates"] = source_dedup_rates
+ORACLES["source_dedup_rates"] = """
     WITH hashed AS (
         SELECT doc_id, source, md5(lower(trim(text))) AS h
         FROM documents
@@ -1495,8 +1492,8 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("size"))
 
 
-EXTRA_QUERIES["dedup_cluster_sizes"] = dedup_cluster_sizes
-EXTRA_ORACLES["dedup_cluster_sizes"] = f"""
+QUERIES["dedup_cluster_sizes"] = dedup_cluster_sizes
+ORACLES["dedup_cluster_sizes"] = f"""
     WITH clusters AS ({ORACLES["dedup_clusters"]}),
     sizes AS (
         SELECT cluster_id, count(*) AS size
@@ -1638,8 +1635,8 @@ def lsh_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.coalesce(f1, F.lit(0.0)), 6).alias("f1"))
 
 
-EXTRA_QUERIES["lsh_precision_recall"] = lsh_precision_recall
-EXTRA_ORACLES["lsh_precision_recall"] = _SIG_CTE + f"""
+QUERIES["lsh_precision_recall"] = lsh_precision_recall
+ORACLES["lsh_precision_recall"] = _SIG_CTE + f"""
     , bands AS ({_BANDS_UNION}),
     pred AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1789,8 +1786,8 @@ def prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_a", "doc_b"))
 
 
-EXTRA_QUERIES["prefix_filter_join"] = prefix_filter_join
-EXTRA_ORACLES["prefix_filter_join"] = f"""
+QUERIES["prefix_filter_join"] = prefix_filter_join
+ORACLES["prefix_filter_join"] = f"""
     WITH doc_sh AS (
         SELECT doc_id,
                list_distinct(list_transform(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scrub import clean_key_col
 from ..sources import load_table, events_as_metrics, load_series
 
 
@@ -205,8 +206,7 @@ def scrubbed_customer_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     return (cust
             .select("c_custkey",
-                    F.regexp_replace(F.col("c_name"), "[^0-9A-Za-z ]", "")
-                     .alias("clean_name"))
+                    clean_key_col("c_name").alias("clean_name"))
             .withColumn("artifact_key",
                         F.concat_ws("_", F.col("clean_name"),
                                     F.lit("metrics"), F.lit("ets"))))

@@ -18,9 +18,9 @@ from __future__ import annotations
 import json
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .registry import MAX_SERIES_LENGTH
+from .registry import MAX_SERIES_LENGTH, _field_for_index, search_element
 
 # Lucene query_string metacharacters (reserved set per the ES docs)
 _QS_METACHARS = re.compile(r'([+\-=&|><!(){}\[\]^"~*?:\\/])')
@@ -51,11 +51,10 @@ def search_element_es(spark: SparkSession, host: str, name: str, index: str,
 
     The connector pushes the query-string filter, the 2-field source
     projection, and the sort — the same pushdowns the reference hand-codes
-    (R:27-28) and that Catalyst applies to the parquet path.  The sort
-    breaks date ties by ``value``, as the parquet path does, so the
-    survivors of the 10k cap are the same on every run.
+    (R:27-28) and that Catalyst applies to the parquet path.  The sort,
+    its ``value`` tiebreak and the 10k cap are ``search_element``'s own,
+    so both sources keep the same survivors on every run.
     """
-    from .registry import _field_for_index
     field = _field_for_index(index)                # R:25-26, one dispatch
     # escape query_string metachars THEN JSON-encode: a name containing
     # quotes/OR/* must neither break the JSON body nor widen the match
@@ -80,9 +79,7 @@ def search_element_es(spark: SparkSession, host: str, name: str, index: str,
                 "parquet source (sources.search_element) or add the "
                 "connector jar") from exc
         raise
-    from pyspark.sql import functions as F
-    return (df.select(F.lit(name).alias("name"), F.lit(index).alias("index"),
+    frame = df.select(F.lit(name).alias("name"), F.lit(index).alias("index"),
                       F.to_date("evaluationDate").alias("evaluationDate"),
                       F.col("value").cast("double").alias("value"))
-            .orderBy("evaluationDate", "value")
-            .limit(MAX_SERIES_LENGTH))
+    return search_element(frame, name, index, limit=MAX_SERIES_LENGTH)

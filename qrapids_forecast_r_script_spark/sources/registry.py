@@ -93,16 +93,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(schemas.TABLES[name]).parquet(path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver table and register temp views for spark.sql use."""
-    out = {}
-    for name in schemas.TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def _field_for_index(index: str) -> str:
     """Index-name substring dispatch (R:25-26): the index name selects which
     element-name field the query targets."""

@@ -529,10 +529,6 @@ QUERIES = {
     "events_stream_dedup_hourly": events_stream_dedup_hourly,
     "events_stream_stream_join": events_stream_stream_join,
     "events_stream_static_join": events_stream_static_join,
-}
-
-# Tail-block registrations (behind the driver's pinned FRONT_WINDOW).
-EXTRA_QUERIES = {
     "events_stream_upsert_state": events_stream_upsert_state,
     "events_stream_trending_topk": events_stream_trending_topk,
     "events_stream_trending_upsert": events_stream_trending_upsert,
@@ -549,7 +545,7 @@ _TUMBLING_SQL = """
     GROUP BY 1, 2, 3
 """
 
-EXTRA_ORACLES = {
+ORACLES = {
     "events_stream_trending_topk": f"""
         WITH counts AS (
             SELECT date_trunc('hour', ts) AS window_start,
@@ -621,9 +617,6 @@ EXTRA_ORACLES = {
                 AND p.ts BETWEEN e.ts - INTERVAL 30 MINUTE
                              AND e.ts + INTERVAL 30 MINUTE)
     """,
-}
-
-ORACLES = {
     "events_stream_tumbling_1h": _TUMBLING_SQL,
     "events_sliding_1h_30m": """
         WITH starts AS (

@@ -417,13 +417,6 @@ def tws_available(spark: SparkSession | None = None) -> bool:
     return ensure_protobuf(spark)
 
 
-# Registered in a tail EXTRA block (merged after the driver's ~50-query
-# window in __spark_entry__) so the in-window slot allocation is
-# capability-INVARIANT: if the driver container ships protobuf but this
-# one doesn't, a front-registered entry would shift every later slot by
-# one and push the 50th query out of the checked window.  The capability
-# gate stays on EXECUTION only — the callable raises loudly when the
-# state server can't start.
 def _tws_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tws_available(spark):
         raise RuntimeError(
@@ -433,13 +426,11 @@ def _tws_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_tws_running_totals(spark, sf_dir)
 
 
-EXTRA_QUERIES = {"events_tws_running_totals": _tws_gated}
-EXTRA_ORACLES = {
-    "events_tws_running_totals": """
+QUERIES["events_tws_running_totals"] = _tws_gated
+ORACLES["events_tws_running_totals"] = """
         SELECT user_id, event_id,
                row_number() OVER w AS seq,
                round(sum(value) OVER w, 4) AS cum_value
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-}
+    """

@@ -18,7 +18,7 @@ bit-equal floats).  The CLI below and ``tests/test_oracle_parity.py``
 both call it; perfbench's ``query_mix`` warm pass calls
 ``strict_compare``.
 
-Usage:  python tools/strict_audit.py [N]    # first N queries (default 50)
+Usage:  python tools/strict_audit.py                  # every oracled query
         python tools/strict_audit.py name [name ...]    # only these
 """
 
@@ -163,30 +163,21 @@ def main() -> int:
     import __spark_entry__ as entry
     from qrapids_forecast_r_script_spark.session import get_spark
 
-    # argv: either a numeric cap over the merged registry order (the
-    # driver-window pre-flight) or explicit query names (spot audit of
-    # operators added behind the window)
-    names: list[str] | None = None
-    cap = 50
-    if len(sys.argv) > 1:
-        if sys.argv[1].isdigit():
-            cap = int(sys.argv[1])
-        else:
-            names = sys.argv[1:]
+    names = sys.argv[1:]  # none: every registered query
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark()
     queries = entry.queries()
     oracles = entry.oracle_sql()
     con = oracle_connection(sf_dir)
 
-    if names is not None:
+    if names:
         unknown = [n for n in names if n not in queries]
         if unknown:
             print(f"unknown queries: {unknown}")
             return 1
         items = [(n, queries[n]) for n in names]
     else:
-        items = list(queries.items())[:cap]
+        items = list(queries.items())
 
     n_fail = 0
     for i, (name, fn) in enumerate(items):
